@@ -9,3 +9,14 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def caches():
+    """A caller-owned ``cache_registry`` for the LSH operators, released
+    after the test."""
+    from theoremkb_spark.pipeline.runner import release_caches
+
+    registry = []
+    yield registry
+    release_caches(registry)

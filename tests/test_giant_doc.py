@@ -75,7 +75,7 @@ def test_giant_doc_extraction_byte_identical(spark, giant_page):
     assert extract_tokens(pages).count() == n_tokens
 
 
-def test_single_line_doc_simhash_and_fuzzy_link(spark):
+def test_single_line_doc_simhash_and_fuzzy_link(spark, caches):
     """A multi-MB document with NO newlines: the tokenizers see one
     giant line, the fuzzy-link rollup carries one giant shingle set."""
     from theoremkb_spark.operators.dedup import simhash_near_dups
@@ -91,7 +91,9 @@ def test_single_line_doc_simhash_and_fuzzy_link(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = simhash_near_dups(docs, "doc_id", "text", max_hamming=8).collect()
+    pairs = simhash_near_dups(
+        docs, "doc_id", "text", max_hamming=8, cache_registry=caches
+    ).collect()
     assert {(r.id_a, r.id_b) for r in pairs} >= {(0, 1)}  # near-dup survives
 
     # fuzzy link: a ~250 KB slice of the giant text IS the mention
@@ -111,5 +113,6 @@ def test_single_line_doc_simhash_and_fuzzy_link(spark):
     links = fuzzy_link_lsh(
         mentions, dictionary, id_col="doc_id", text_col="key",
         dict_id_col="doc_id", dict_text_col="key", threshold=0.5,
+        cache_registry=caches,
     ).collect()
     assert [(r.src, r.dst) for r in links] == [(0, 0)]

@@ -78,10 +78,19 @@ def test_kg_plan_shape(spark, tmp_path):
     # their full key (the old union form's exchange) shows up as a
     # hashpartitioning on subj
     assert "hashpartitioning(subj" not in plan, "triple rollup re-shuffles"
-    assert "Generate explode" in plan or "Generate" in plan
+    # ...and the single pass IS build_triples_fused's conditional explode:
+    # one Generate over the array of per-row triple structs, carrying all
+    # four predicates (the union form has no such node)
+    gen = re.findall(
+        r"Generate explode\(array\(CASE WHEN \(kind#\d+ = span\) THEN struct\(subj,[^\n]*",
+        plan,
+    )
+    assert len(gen) == 1, plan
+    for pred in ("statement_of", "cites", "proved_in", "defined_in"):
+        assert pred in gen[0], gen[0]
 
 
-def test_fuzzy_link_plan_broadcasts_dictionary(spark):
+def test_fuzzy_link_plan_broadcasts_dictionary(spark, caches):
     from theoremkb_spark.pipeline.link import fuzzy_link_lsh
 
     mentions = spark.createDataFrame(
@@ -90,7 +99,7 @@ def test_fuzzy_link_plan_broadcasts_dictionary(spark):
     dictionary = spark.createDataFrame(
         [(i, f"dictionary text number {i}") for i in range(50)], "id long, key string"
     )
-    plan = _plan(fuzzy_link_lsh(mentions, dictionary))
+    plan = _plan(fuzzy_link_lsh(mentions, dictionary, cache_registry=caches))
     # the bucket join broadcasts the banded dictionary rows (round 6:
     # NARROW id/band/sig rows — the sz/sset arrays attach to the deduped
     # candidate pairs afterwards, guide-§8 style). The two attach joins
@@ -105,7 +114,7 @@ def test_fuzzy_link_plan_broadcasts_dictionary(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_fuzzy_link_runtime_joins_are_broadcast(spark):
+def test_fuzzy_link_runtime_joins_are_broadcast(spark, caches):
     """The executed (AQE-final) plan must contain no SortMergeJoin: the
     attach joins' candidate side is runtime-small and AQE converts both
     to broadcast once actual sizes are known."""
@@ -117,7 +126,7 @@ def test_fuzzy_link_runtime_joins_are_broadcast(spark):
     dictionary = spark.createDataFrame(
         [(i, f"dictionary text number {i}") for i in range(50)], "id long, key string"
     )
-    df = fuzzy_link_lsh(mentions, dictionary)
+    df = fuzzy_link_lsh(mentions, dictionary, cache_registry=caches)
     df.write.mode("overwrite").format("noop").save()
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in executed, executed
@@ -257,7 +266,7 @@ def test_link_resolve_auto_strategy_regimes(spark, tmp_path):
     assert a == b
 
 
-def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path):
+def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path, caches):
     """fuzzy_link_lsh auto-selects its bucket-join strategy from the
     dictionary size estimate. Small regime: the banded dictionary is
     broadcast (no exchange keyed on band/sig). Forced-large regime
@@ -265,6 +274,7 @@ def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path):
     a (band, sig) hash exchange instead — the shape that scales past
     broadcast memory. Same rows either way."""
     from theoremkb_spark.pipeline.link import fuzzy_link_lsh
+    from theoremkb_spark.pipeline.runner import release_caches
     from theoremkb_spark.plancheck import plan_string
 
     m = spark.createDataFrame(
@@ -278,12 +288,17 @@ def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path):
     ).write.parquet(dpath)
     d = spark.read.parquet(dpath)
 
-    small = plan_string(fuzzy_link_lsh(m, d))
+    small = plan_string(fuzzy_link_lsh(m, d, cache_registry=caches))
     assert not re.search(r"Exchange hashpartitioning\(band", small), small
 
-    rows_small = sorted(map(tuple, fuzzy_link_lsh(m, d).collect()))
+    rows_small = sorted(
+        map(tuple, fuzzy_link_lsh(m, d, cache_registry=caches).collect())
+    )
 
-    large_df = fuzzy_link_lsh(m, d, broadcast_max_bytes=1)
+    # a materialized stats cache carries its real (tiny) size, which the
+    # planner would broadcast from: plan the forced-large regime uncached
+    release_caches(caches)
+    large_df = fuzzy_link_lsh(m, d, broadcast_max_bytes=1, cache_registry=caches)
     large = plan_string(large_df)
     assert re.search(r"Exchange hashpartitioning\(band", large), large
     assert sorted(map(tuple, large_df.collect())) == rows_small

@@ -44,25 +44,29 @@ def test_exact_dedup(spark, docs):
     assert len(out) == 4
 
 
-def test_ngram_jaccard_finds_planted_pair(spark, docs):
+def test_ngram_jaccard_finds_planted_pair(spark, docs, caches):
     pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(
+            docs, "doc_id", "text", threshold=0.5, cache_registry=caches
+        ).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.8
     assert (0, 2) in pairs and pairs[(0, 2)] == 1.0
     assert (3, 4) not in pairs
 
 
-def test_minhash_lsh_recall_vs_exact(spark, docs):
+def test_minhash_lsh_recall_vs_exact(spark, docs, caches):
     exact = {
         (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(
+            docs, "doc_id", "text", threshold=0.5, cache_registry=caches
+        ).collect()
     }
     lsh = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5
+            docs, "doc_id", "text", threshold=0.5, cache_registry=caches
         ).collect()
     }
     # verification removes false positives; banding must keep the planted dups
@@ -70,10 +74,12 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
     assert (0, 1) in lsh and (0, 2) in lsh
 
 
-def test_simhash_near_dups(spark, docs):
+def test_simhash_near_dups(spark, docs, caches):
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_dups(docs, "doc_id", "text", max_hamming=10).collect()
+        for r in simhash_near_dups(
+            docs, "doc_id", "text", max_hamming=10, cache_registry=caches
+        ).collect()
     }
     assert pairs[(0, 2)] == 0  # identical text -> identical signature
     assert (0, 1) in pairs  # one-word change -> few bits flip
@@ -151,7 +157,7 @@ def test_multimodal_decode_pil_branch_env_gated():
     assert (got == px).all()
 
 
-def test_hot_shingle_cap_bounds_candidate_pairs(spark):
+def test_hot_shingle_cap_bounds_candidate_pairs(spark, caches):
     """Scale discipline (VERDICT r1): a stop-phrase shingle planted in
     every document must not make the blocking join quadratic — with the
     df cap on, candidate pairs stay bounded (here: zero), and the
@@ -170,8 +176,9 @@ def test_hot_shingle_cap_bounds_candidate_pairs(spark):
     assert capped == 0  # hot shingles identify no pair
 
     # end-to-end: no false pairs appear either way at a real threshold
-    assert ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5).count() == 0
-    assert minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5).count() == 0
+    kw = dict(threshold=0.5, cache_registry=caches)
+    assert ngram_jaccard_pairs(df, "doc_id", "text", **kw).count() == 0
+    assert minhash_lsh_pairs(df, "doc_id", "text", **kw).count() == 0
     sh.unpersist()
 
 
@@ -390,24 +397,28 @@ def edge_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_minhash_oracle_twin_matches_operator(spark, edge_docs):
+def test_minhash_oracle_twin_matches_operator(spark, edge_docs, caches):
     from theoremkb_spark.corpus.dedup_oracle import minhash_lsh_expected
 
     got = sorted(
         (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_lsh_pairs(edge_docs, "doc_id", "text", threshold=0.12).collect()
+        for r in minhash_lsh_pairs(
+            edge_docs, "doc_id", "text", threshold=0.12, cache_registry=caches
+        ).collect()
     )
     docs = [(r.doc_id, r.text) for r in edge_docs.collect()]
     assert got == minhash_lsh_expected(docs, threshold=0.12)
     assert any(p[:2] == (0, 1) for p in got)  # planted near-dup survives
 
 
-def test_simhash_oracle_twin_matches_operator(spark, edge_docs):
+def test_simhash_oracle_twin_matches_operator(spark, edge_docs, caches):
     from theoremkb_spark.corpus.dedup_oracle import simhash_expected
 
     got = sorted(
         (r.id_a, r.id_b, r.hamming)
-        for r in simhash_near_dups(edge_docs, "doc_id", "text", max_hamming=8).collect()
+        for r in simhash_near_dups(
+            edge_docs, "doc_id", "text", max_hamming=8, cache_registry=caches
+        ).collect()
     )
     docs = [(r.doc_id, r.text) for r in edge_docs.collect()]
     assert got == simhash_expected(docs, max_hamming=8)
@@ -437,7 +448,7 @@ def test_multimodal_oracle_twin_matches_operator(spark, edge_docs):
     assert got == sorted(multimodal_expected(docs))
 
 
-def test_fuzzy_link_twin_matches_operator(spark, edge_docs):
+def test_fuzzy_link_twin_matches_operator(spark, edge_docs, caches):
     """fuzzy_link_lsh == its sequential twin over the query's own key
     derivation (link_fuzzy_keys), including the unicode/empty edge docs
     — and a truncated-title mention still links back to its entity."""
@@ -456,7 +467,7 @@ def test_fuzzy_link_twin_matches_operator(spark, edge_docs):
         (r.src, r.dst, r.jaccard)
         for r in fuzzy_link_lsh(
             mentions, dictionary, id_col="doc_id", text_col="key",
-            dict_id_col="doc_id", dict_text_col="key",
+            dict_id_col="doc_id", dict_text_col="key", cache_registry=caches,
         ).collect()
     )
     assert got == fuzzy_link_expected(mention_rows, dict_rows)

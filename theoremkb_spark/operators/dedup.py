@@ -10,10 +10,14 @@ Four tiers, cheapest first:
   O(docs x shingles) + bucket-local joins, never all-pairs);
 * SimHash   — 64-bit near-dup signatures, JVM-side bit-vote aggregation.
 
-Everything here is pure DataFrame expressions (xxhash64 is a JVM
-builtin) — no Python in any hot path. Candidate generation in both
-Jaccard tiers is document-frequency capped (``capped_shingles``): the
-100 TB discipline that keeps stop-phrase shingles from going quadratic.
+Hashing, blocking and verification are DataFrame expressions (xxhash64
+is a JVM builtin); the two per-document kernels — word shingles and the
+SimHash bit votes — are Arrow-batched pandas UDFs. MinHash, band keys
+and the exact-Jaccard verify come from the shared LSH core
+(operators/lsh.py), which also sets the ``cache_registry`` contract of
+every operator here that caches. Candidate generation in both Jaccard
+tiers is document-frequency capped (``capped_shingles``): the 100 TB
+discipline that keeps stop-phrase shingles from going quadratic.
 """
 
 from __future__ import annotations
@@ -21,11 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .joins import fits_broadcast
+from .lsh import band_keys, carry_verify, minhash_aggs
 from .textquality import fingerprint
-
-# caches of the most recent ngram_jaccard_pairs call, released by the
-# NEXT call (single-flight assumption — see that function's docstring)
-_last_caches: list = []
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -97,14 +99,6 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     )
 
 
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's pre-execution size estimate of a plan (file sizes for
-    scans, propagated through projections/filters; Long.MaxValue for
-    driver-local frames). Same signal pipeline/link.py reads for its
-    auto broadcast-vs-salted decision."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
 # Auto-sizing threshold for the hot-shingle anti-join: under this
 # estimated SOURCE size the hot set (bounded by source-bytes/cap
 # distinct shingles) broadcasts in the low MBs; past it nothing
@@ -137,10 +131,9 @@ def capped_shingles(
     Past the threshold the anti-join is left to the planner, which
     shuffles both sides by shingle — the hot set then never exists as
     a single in-memory collection anywhere. An unknowable estimate
-    (driver-local frames, which fit in driver memory by construction —
-    the same convention pipeline/link.py uses) counts as small;
-    ``source=None`` keeps the historical broadcast behaviour for
-    callers that know their corpus is small.
+    counts as small (``joins.fits_broadcast``); ``source=None`` keeps
+    the historical broadcast behaviour for callers that know their
+    corpus is small.
 
     ``key`` selects the cap column: the MinHash path passes its hashed
     8-byte ``hs`` so the df aggregation's partial rows and the hot set
@@ -154,11 +147,7 @@ def capped_shingles(
         .filter(F.col("_df") > max_doc_freq)
         .select(key)
     )
-    _unknown = (1 << 63) - 1
-    if source is None or (
-        (est := _estimated_bytes(source)) == _unknown
-        or est <= broadcast_max_source_bytes
-    ):
+    if source is None or fits_broadcast(source, broadcast_max_source_bytes):
         hot = F.broadcast(hot)
     return sh.join(hot, key, "left_anti")
 
@@ -187,22 +176,14 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = 50,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity join: candidate pairs share >= 1
     shingle with document frequency <= ``max_doc_freq`` (the blocking
     step — bounded by non-hot shingle co-occurrence, never |docs|^2),
-    with exact Jaccard over the FULL shingle sets.
-
-    Cache lifecycle: the three intermediates cached below are registered
-    in ``cache_registry`` when given (caller unpersists after its
-    terminal action), else in a module-level registry released at the
-    START of the next call — so looped callers (bench reps, the 50-query
-    sweep) hold at most one invocation's cached blocks. Single-flight
-    assumption: with the default registry, a second call unpersists the
-    first call's caches even if the first call's returned lazy DataFrame
-    has not executed yet; concurrent or deferred-execution callers must
-    pass their own ``cache_registry``.
+    with exact Jaccard over the FULL shingle sets. The two cached
+    intermediates go to ``cache_registry`` (operators/lsh.py contract).
 
     Plan shape (round-5 form, same oracle output, 4 exchanges — was 6):
 
@@ -227,12 +208,6 @@ def ngram_jaccard_pairs(
       corpus size."""
     from pyspark.sql import Window
 
-    global _last_caches
-    for _c in _last_caches:
-        _c.unpersist()
-    _last_caches = []
-    reg = _last_caches if cache_registry is None else cache_registry
-
     npart = df.sparkSession.sparkContext.defaultParallelism
     sh = shingles(df, id_col, text_col, n).select(
         "id", F.xxhash64("shingle").alias("shingle")
@@ -244,7 +219,7 @@ def ngram_jaccard_pairs(
     with_df = sh.withColumn(
         "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
     ).cache()
-    reg.append(with_df)
+    cache_registry.append(with_df)
     hot = F.lit(False) if cap is None else F.col("_df") > cap
     blk = with_df.filter(~hot).select("id", "shingle")
 
@@ -254,7 +229,7 @@ def ngram_jaccard_pairs(
         F.count(F.lit(1)).alias("sz"),
         F.collect_set(F.when(hot, F.col("shingle"))).alias("hotset"),
     ).cache()
-    reg.append(per_id)
+    cache_registry.append(per_id)
 
     a = blk.select(F.col("id").alias("id_a"), "shingle")
     b = blk.select(F.col("id").alias("id_b"), "shingle")
@@ -274,62 +249,10 @@ def ngram_jaccard_pairs(
     common = F.col("c_blk") + F.size(
         F.array_intersect(F.col("hot_a"), F.col("hot_b"))
     )
-    jac = (
-        common.cast("decimal(18,6)")
-        / (F.col("sz_a") + F.col("sz_b") - common).cast("decimal(18,6)")
-    )
-    return (
-        pairs.join(
-            per_id.select(
-                F.col("id").alias("id_a"),
-                F.col("sz").alias("sz_a"),
-                F.col("hotset").alias("hot_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            per_id.select(
-                F.col("id").alias("id_b"),
-                F.col("sz").alias("sz_b"),
-                F.col("hotset").alias("hot_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("jaccard", F.round(jac, 6).cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 32
-) -> DataFrame:
-    """(id, shingle) -> (id, h0..h{k-1}) MinHash signature via xxhash64
-    with per-function seed columns — one shuffle, JVM-only."""
-    aggs = [
-        F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-        for j in range(num_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs)
-
-
-def banded_signatures(sig: DataFrame, bands: int, rows: int) -> DataFrame:
-    """(id, h0..h{bands*rows-1}) -> (id, band, sig): the banded-LSH
-    bucket keys. Two ids are candidates iff they share (band, sig) for
-    at least one band — the equi-join key both the dedup path and the
-    fuzzy entity-linking path block on."""
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(
-                "sig"
-            ),
-        )
-        for b in range(bands)
-    ]
-    return sig.select("id", F.explode(F.array(*band_structs)).alias("bs")).select(
-        "id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
+    return carry_verify(
+        pairs, per_id, per_id, ("id_a", "id_b"), threshold,
+        carry="hotset", name="hot", common=common,
+    ).select("id_a", "id_b", "jaccard")
 
 
 def minhash_lsh_pairs(
@@ -341,7 +264,8 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     max_doc_freq: int | None = 50,
-    cache_registry: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, exact-Jaccard verified.
 
@@ -371,28 +295,19 @@ def minhash_lsh_pairs(
       candidate side broadcasts at runtime via AQE, so the shingle
       table enters the verify joins map-side too.
 
-    Cache lifecycle: same single-flight discipline as
-    ``ngram_jaccard_pairs`` (shared module registry, released at the
-    start of the next dedup call); pass ``cache_registry`` to manage
-    release explicitly.
+    The cached shingle table goes to ``cache_registry``.
     """
-    global _last_caches
-    for _c in _last_caches:
-        _c.unpersist()
-    _last_caches = []
-    reg = _last_caches if cache_registry is None else cache_registry
-
     rows = num_hashes // bands
     sh = (
         shingles(df, id_col, text_col, n)
         .withColumn("hs", F.xxhash64("shingle"))
         .cache()
     )
-    reg.append(sh)
-    sig = minhash_signatures(
-        capped_shingles(sh, max_doc_freq, source=df, key="hs"), num_hashes
+    cache_registry.append(sh)
+    sig = capped_shingles(sh, max_doc_freq, source=df, key="hs").groupBy("id").agg(
+        *minhash_aggs(num_hashes)
     )
-    banded = banded_signatures(sig, bands, rows)
+    banded = band_keys(sig, bands, rows)
 
     a = banded.select(F.col("id").alias("id_a"), "band", "sig")
     b = banded.select(F.col("id").alias("id_b"), "band", "sig")
@@ -419,32 +334,9 @@ def minhash_lsh_pairs(
     per_id = sh.groupBy("id").agg(
         F.count(F.lit(1)).alias("sz"), F.collect_set("hs").alias("sset")
     )
-    common = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    jac = (
-        common.cast("decimal(18,6)")
-        / (F.col("sz_a") + F.col("sz_b") - common).cast("decimal(18,6)")
-    )
-    return (
-        candidates.join(
-            per_id.select(
-                F.col("id").alias("id_a"),
-                F.col("sz").alias("sz_a"),
-                F.col("sset").alias("set_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            per_id.select(
-                F.col("id").alias("id_b"),
-                F.col("sz").alias("sz_b"),
-                F.col("sset").alias("set_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("jaccard", F.round(jac, 6).cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return carry_verify(
+        candidates, per_id, per_id, ("id_a", "id_b"), threshold
+    ).select("id_a", "id_b", "jaccard")
 
 
 # ------------------------------------------------------------- SimHash
@@ -530,12 +422,20 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_near_dups(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3, bands: int = 4
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    bands: int = 4,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64-bit signature into 16-bit
     chunks (a pair within hamming distance 3 must agree on >= 1 of 4
-    bands), then verify hamming distance exactly via bit_count."""
+    bands), then verify hamming distance exactly via bit_count. The
+    cached signature table goes to ``cache_registry``."""
     sig = simhash_signatures(df, id_col, text_col).cache()
+    cache_registry.append(sig)
     chunk = 64 // bands
     banded = sig.select(
         "id",

@@ -7,6 +7,8 @@ shuffle, skew-immune). When it does not, ``salted_join`` spreads each hot
 key over ``salt`` shuffle partitions: the fact side gets a random-but-
 deterministic salt from its row content, the dimension side is exploded
 x ``salt``. AQE skew-join stays on as belt-and-braces (session.py).
+``fits_broadcast`` is the one broadcast-vs-shuffle size test the
+engine's auto-sized joins share.
 """
 
 from __future__ import annotations
@@ -111,3 +113,24 @@ def salted_join(
     )
     joined = salted_fact.join(salted_dim, on=on + ["_salt"], how=how)
     return joined.select(*fact_cols, *dim_extra)
+
+
+def estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's pre-execution size estimate for a plan: file sizes for
+    scans, propagated through projections and filters; Long.MaxValue
+    for driver-local/RDD-backed plans. No job is triggered — this is the
+    same signal the planner's own broadcast decision reads, surfaced for
+    strategy selection."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def fits_broadcast(df: DataFrame, max_bytes: int) -> bool:
+    """Broadcast-vs-shuffle decision: ``df``'s estimate is at most
+    ``max_bytes``, or unknowable. An unknowable estimate (Long.MaxValue)
+    comes from driver-created local frames, which fit in driver memory
+    by construction; file-backed inputs (the at-scale case) always carry
+    real file-size stats, so the threshold governs where it matters.
+    Callers with an unknown-stats frame they KNOW is big must force the
+    shuffled path themselves."""
+    est = estimated_bytes(df)
+    return est == (1 << 63) - 1 or est <= max_bytes

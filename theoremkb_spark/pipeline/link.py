@@ -25,17 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.joins import salted_join
-
-# Caches of the most recent fuzzy_link_lsh call, released by the NEXT
-# call. SINGLE-FLIGHT ASSUMPTION: a second call unpersists the first
-# call's caches even if the first call's returned lazy DataFrame has not
-# executed yet (the result stays correct — Spark recomputes — but the
-# shared-scan benefit is silently lost), and the module global is not
-# safe under concurrent query construction. Looped or concurrent callers
-# must pass cache_registry and release only after their terminal action
-# (the discipline bench.py and build_kg use).
-_last_caches: list = []
+from ..operators.joins import fits_broadcast, salted_join
+from ..operators.lsh import band_keys, carry_verify, minhash_aggs
 
 # Auto-strategy threshold on the dictionary's ESTIMATED raw bytes. 64 MB
 # raw broadcasts comfortably (the banded+set-carrying derived tables the
@@ -43,28 +34,6 @@ _last_caches: list = []
 # past it the salted / shuffled paths win. Overridable per call — the
 # regime tests pin both branches with a forced threshold.
 BROADCAST_DICT_MAX_BYTES = 64 << 20
-
-# Catalyst reports Long.MaxValue when a plan's size is unknowable pre-
-# execution — in this engine that is exactly the driver-created local
-# frames (createDataFrame dictionaries), which fit in driver memory by
-# construction. File-backed inputs (the at-scale case) always carry real
-# file-size stats, so the threshold governs where it matters; callers
-# with an unknown-stats frame they KNOW is big pass strategy="salted".
-_STATS_UNKNOWN = (1 << 63) - 1
-
-
-def estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's pre-execution size estimate for a plan: file sizes for
-    scans, propagated through projections and filters; ``_STATS_UNKNOWN``
-    for driver-local/RDD-backed plans. No job is triggered — this is the
-    same signal the planner's own broadcast decision reads, surfaced for
-    strategy selection."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def _fits_broadcast(df: DataFrame, max_bytes: int) -> bool:
-    est = estimated_bytes(df)
-    return est == _STATS_UNKNOWN or est <= max_bytes
 
 
 def _resolve(
@@ -77,7 +46,7 @@ def _resolve(
     """Left-join df(url, tag, ...) against dico(url, tag, pdf_to_canon)."""
     if strategy == "auto":
         strategy = (
-            "broadcast" if _fits_broadcast(dico, broadcast_max_bytes) else "salted"
+            "broadcast" if fits_broadcast(dico, broadcast_max_bytes) else "salted"
         )
     if strategy == "broadcast":
         return df.join(F.broadcast(dico), ["url", "tag"], "left")
@@ -100,23 +69,12 @@ def link_extra_mentions(
     ).drop("pdf_to_canon", "tag")
 
 
-def _grams_expr(text_col: str, n: int):
-    """Distinct non-empty character n-grams as an ARRAY column. Strings
-    shorter than ``n`` contribute themselves whole (the ``greatest(len -
-    (n-1), 1)`` branch); empty strings contribute nothing."""
-    return F.expr(
-        f"filter(array_distinct(transform("
-        f"sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
-        f" i -> substring({text_col}, i, {n}))), x -> length(x) > 0)"
-    )
-
-
 def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
     """-> (id, shingle): distinct character n-grams per string, long
     form. JVM-only, and deliberately explode-then-filter: a filter()
     LAMBDA inside the array is interpreted per element (the HOF trap —
-    see shingle_stats), while the post-explode length predicate stays in
-    whole-stage codegen."""
+    see the MinHash note in fuzzy_link_lsh), while the post-explode
+    length predicate stays in whole-stage codegen."""
     grams = F.expr(
         f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
         f" i -> substring({text_col}, i, {n})))"
@@ -124,32 +82,6 @@ def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> Data
     return (
         df.select(F.col(id_col).alias("id"), F.explode(grams).alias("shingle"))
         .filter(F.length("shingle") > 0)
-    )
-
-
-def shingle_stats(
-    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int
-) -> DataFrame:
-    """-> (id, h0..h{k-1}, sz): MinHash signature + shingle-set size,
-    computed MAP-ONLY per row via ``array_min(transform(grams, x ->
-    xxhash64(seed, x)))``. Identical values to the explode +
-    groupBy(min) formulation with zero shuffle — but MEASURED 5x SLOWER
-    at bench scale, because Spark executes higher-order-function lambdas
-    interpreted per element (no whole-stage codegen inside transform),
-    while explode + hash-aggregate is fully codegen'd. Kept as the
-    documented counter-example: prefer the exploded aggregation unless
-    the shuffle itself dominates (very wide rows, very hot exchange)."""
-    grams = _grams_expr(text_col, n)
-    out = df.select(F.col(id_col).alias("id"), grams.alias("_g")).filter(
-        F.size("_g") > 0
-    )
-    return out.select(
-        "id",
-        *[
-            F.expr(f"array_min(transform(_g, x -> xxhash64({j}, x)))").alias(f"h{j}")
-            for j in range(num_hashes)
-        ],
-        F.size("_g").alias("sz"),
     )
 
 
@@ -164,10 +96,9 @@ def fuzzy_link_lsh(
     num_hashes: int = 24,
     bands: int = 8,
     threshold: float = 0.5,
-    broadcast_dict: bool | None = None,
     broadcast_max_bytes: int = BROADCAST_DICT_MAX_BYTES,
-    cache_registry: list | None = None,
-    pre_caches: list | None = None,
+    *,
+    cache_registry: list,
 ) -> DataFrame:
     """Fuzzy entity linking: noisy mention strings -> best dictionary
     entry, via blocking + MinHash-LSH candidate generation (north star:
@@ -196,16 +127,14 @@ def fuzzy_link_lsh(
     cheaper verify, with identical output (a 64-bit collision is the
     same event MinHash tolerates by construction).
 
-    ``broadcast_dict=None`` (default) AUTO-selects the physical
-    strategy from Catalyst's size estimate of the dictionary plan
-    (``estimated_bytes``): at or under ``broadcast_max_bytes`` the
-    bucket join broadcasts the banded dictionary rows (sets included —
-    8x-duplicated map-side only, fine for a dimension table), and
-    duplicate multi-band matches recompute the intersection map-side
-    (bounded by ``bands``, measured cheaper than deduping first, which
-    would shuffle the arrays). Past the threshold — the round-4
-    verdict's 100x hazard — the arrays ride the (band, sig) shuffle
-    and AQE handles bucket skew; pass True/False to force a regime.
+    The physical strategy is AUTO-selected from Catalyst's size
+    estimate of the dictionary plan (``joins.fits_broadcast``): at or
+    under ``broadcast_max_bytes`` the bucket join broadcasts the narrow
+    banded dictionary rows. Past the threshold — the round-4 verdict's
+    100x hazard — the band rows ride the (band, sig) shuffle and AQE
+    handles bucket skew; the regime tests force that branch with
+    ``broadcast_max_bytes=1``. The cached stats table goes to
+    ``cache_registry`` (operators/lsh.py contract).
 
     Parameter discipline (the quadratic-candidate trap): char n-grams
     over natural-language text are COMMON across unrelated strings —
@@ -219,24 +148,11 @@ def fuzzy_link_lsh(
     baseline cross-pair similarity is genuinely low.
     """
     rows = num_hashes // bands
-    # each call releases the PREVIOUS call's cached blocks, so looped
-    # callers (bench reps, the 50-query correctness sweep) hold at most
-    # one invocation's caches; callers wanting full control pass a
-    # cache_registry and release after their terminal action, same
-    # discipline as build_kg
-    global _last_caches
-    for df in _last_caches:
-        df.unpersist()
-    _last_caches = []
-    reg = _last_caches if cache_registry is None else cache_registry
-    # caller-provided cached inputs (e.g. a shared key table feeding both
-    # the mention and dictionary sides) join this call's lifecycle: they
-    # are released together with the stats cache on the next call
-    if pre_caches:
-        reg.extend(pre_caches)
-    if broadcast_dict is None:
-        broadcast_dict = _fits_broadcast(dictionary, broadcast_max_bytes)
-    hint = F.broadcast if broadcast_dict else (lambda df: df)
+    hint = (
+        F.broadcast
+        if fits_broadcast(dictionary, broadcast_max_bytes)
+        else (lambda df: df)
+    )
 
     # ONE union + groupBy computes MinHash signatures, set sizes, AND the
     # full shingle set per id for BOTH sides — the only wide exchange.
@@ -244,7 +160,7 @@ def fuzzy_link_lsh(
     # transform(grams, x -> xxhash64(seed, x))) per row — is 5x SLOWER,
     # because Spark's higher-order functions run INTERPRETED per element
     # (no whole-stage codegen inside the lambda), while explode +
-    # hash-aggregate stays fully codegen'd (see shingle_stats docstring).
+    # hash-aggregate stays fully codegen'd (``lsh.minhash_aggs``).
     # The post-union xxhash64 maps each shingle string to a long ONCE,
     # before the wide exchange — see the docstring's size/verify note.
     tagged = char_shingles(mentions, id_col, text_col, n).withColumn(
@@ -257,16 +173,13 @@ def fuzzy_link_lsh(
     stats = (
         tagged.groupBy("_m", "id")
         .agg(
-            *[
-                F.min(F.xxhash64(F.lit(j), F.col("shingle"))).alias(f"h{j}")
-                for j in range(num_hashes)
-            ],
+            *minhash_aggs(num_hashes),
             F.count(F.lit(1)).alias("sz"),
             F.collect_set("shingle").alias("sset"),
         )
         .cache()
     )
-    reg.append(stats)
+    cache_registry.append(stats)
 
     # banding on NARROW rows only (id, band, sig): the round-5 form
     # carried each id's sz + full shingle-set array through the
@@ -276,23 +189,10 @@ def fuzzy_link_lsh(
     # large-dictionary regime. Guide §8 discipline: decide with small
     # rows, attach the heavy columns once. Measured 10x-scale wall:
     # 9.9 s -> 2.4 s, identical output.
-    def _banded(side, id_alias):
-        band_structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                ).alias("sig"),
-            )
-            for b in range(bands)
-        ]
-        return side.select(
-            F.col("id").alias(id_alias),
-            F.explode(F.array(*band_structs)).alias("bs"),
-        ).select(id_alias, "bs.band", "bs.sig")
-
-    mbanded = _banded(stats.filter(F.col("_m") == 1), "src")
-    dbanded = _banded(stats.filter(F.col("_m") == 0), "dst")
+    m_stats = stats.filter(F.col("_m") == 1)
+    d_stats = stats.filter(F.col("_m") == 0)
+    mbanded = band_keys(m_stats, bands, rows, "src")
+    dbanded = band_keys(d_stats, bands, rows, "dst")
 
     # a pair matching in k bands appears k times with IDENTICAL
     # (src, dst) — dedup BEFORE attaching the sets so the per-pair
@@ -307,24 +207,7 @@ def fuzzy_link_lsh(
     # attach sz + shingle set per SIDE (one row per id, not per band
     # match); candidate tables are tiny relative to the stats tables, so
     # AQE picks broadcast at runtime from the actual shuffle sizes
-    m_stats = stats.filter(F.col("_m") == 1).select(
-        F.col("id").alias("src"), F.col("sz").alias("sz_a"), F.col("sset").alias("set_a")
-    )
-    d_stats = stats.filter(F.col("_m") == 0).select(
-        F.col("id").alias("dst"), F.col("sz").alias("sz_b"), F.col("sset").alias("set_b")
-    )
-
-    common = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    jac = (
-        common.cast("decimal(18,6)")
-        / (F.col("sz_a") + F.col("sz_b") - common).cast("decimal(18,6)")
-    )
-    verified = (
-        cand.join(m_stats, "src")
-        .join(d_stats, "dst")
-        .withColumn("jaccard", F.round(jac, 6).cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    verified = carry_verify(cand, m_stats, d_stats, ("src", "dst"), threshold)
 
     from pyspark.sql import Window
 

@@ -304,12 +304,13 @@ def build_kg(
         # Resolved BEFORE the stage wiring because the strategy also
         # decides the assembly form (single-pass vs union) and with it
         # whether the fused table has one consumer or six (caching).
-        from .link import BROADCAST_DICT_MAX_BYTES, _fits_broadcast
+        from ..operators.joins import fits_broadcast
+        from .link import BROADCAST_DICT_MAX_BYTES
 
         basis = entity_dict if entity_dict is not None else dico
         join_strategy = (
             "broadcast"
-            if _fits_broadcast(basis, BROADCAST_DICT_MAX_BYTES)
+            if fits_broadcast(basis, BROADCAST_DICT_MAX_BYTES)
             else "salted"
         )
 

@@ -16,6 +16,7 @@ from .operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
+from .operators.joins import estimated_bytes, fits_broadcast
 from .operators.multimodal import extract_features
 from .operators.similarity import bucketed_ann_topk, cosine_topk, embedding_near_dup_pairs
 from .operators.textquality import (
@@ -30,6 +31,20 @@ from .operators.textquality import (
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+# Cached intermediates of the most recent LSH query. ``bench.py`` calls
+# each query as ``fn(spark, sf)`` with no registry to pass, so each LSH
+# query releases this list on entry, before it caches anything: a looped
+# caller holds at most one query's cached blocks.
+_caches: list[DataFrame] = []
+
+
+def _fresh_caches() -> list[DataFrame]:
+    from .pipeline.runner import release_caches
+
+    release_caches(_caches)
+    return _caches
 
 
 # --------------------------------------------------------- text analysis
@@ -197,12 +212,13 @@ def q_dedup_ngram_jaccard(spark, sf):
     # pass over the text column (the fix q_dedup_simhash already rides).
     # At cluster scale the scan itself yields enough byte-bounded splits
     # and this repartition becomes a no-op to drop.
+    caches = _fresh_caches()
     d = _t(spark, sf, "documents").repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id")
     )
-    return ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.12).orderBy(
-        "id_a", "id_b"
-    )
+    return ngram_jaccard_pairs(
+        d, "doc_id", "text", n=3, threshold=0.12, cache_registry=caches
+    ).orderBy("id_a", "id_b")
 
 
 # Mirrors the operator exactly: blocking over df-capped shingles
@@ -251,11 +267,13 @@ def q_dedup_minhash_lsh(spark, sf):
     # same single-split scan artifact as q_dedup_ngram_jaccard: spread
     # the docs before the shingle explode (doc_id-hash — no round-robin
     # pre-sort of the text column)
+    caches = _fresh_caches()
     d = _t(spark, sf, "documents").repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id")
     )
     return minhash_lsh_pairs(
-        d, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.12
+        d, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.12,
+        cache_registry=caches,
     ).orderBy("id_a", "id_b")
 
 
@@ -269,14 +287,15 @@ def _adaptive_spread_width(df, spark, bytes_per_task: int = 75_000) -> int:
     width 32 -> 0.47 s vs no spread 0.42 s for SimHash), and a big sf
     saturates the cores (width caps at defaultParallelism). At cluster
     scale the writer's row-group sizing gives the scan real splits and
-    the spread is a cheap keyed exchange either way."""
-    from .operators.dedup import _estimated_bytes
-
-    est = _estimated_bytes(df)
-    if est >= (1 << 62):  # unknowable stats (driver-local frame)
-        return spark.sparkContext.defaultParallelism
+    the spread is a cheap keyed exchange either way. An unknowable
+    estimate (Long.MaxValue, driver-local frames) caps at the core
+    count like any huge one."""
     return max(
-        1, min(spark.sparkContext.defaultParallelism, est // bytes_per_task)
+        1,
+        min(
+            spark.sparkContext.defaultParallelism,
+            estimated_bytes(df) // bytes_per_task,
+        ),
     )
 
 
@@ -290,11 +309,12 @@ def q_dedup_simhash(spark, sf):
     # doc_id-hash, not round-robin: unique ids spread evenly and skip
     # round-robin's sort-before-repartition pass over the text column.
     # Width is input-size-adaptive (round 6), not the core count.
+    caches = _fresh_caches()
     d = _t(spark, sf, "documents")
     d = d.repartition(_adaptive_spread_width(d, spark), F.col("doc_id"))
-    return simhash_near_dups(d, "doc_id", "text", max_hamming=8).orderBy(
-        "id_a", "id_b"
-    )
+    return simhash_near_dups(
+        d, "doc_id", "text", max_hamming=8, cache_registry=caches
+    ).orderBy("id_a", "id_b")
 
 
 # ------------------------------------------------------------ similarity
@@ -446,10 +466,9 @@ def q_sim_tfidf_topk(spark, sf):
     direction). Threshold is module-level so the regime test can force
     the large branch."""
     import theoremkb_spark.queries_docs as _self
-    from .pipeline.link import _fits_broadcast
 
     def _maybe_bc(frame):
-        if _fits_broadcast(frame, _self.SIM_TFIDF_BROADCAST_MAX_BYTES):
+        if fits_broadcast(frame, _self.SIM_TFIDF_BROADCAST_MAX_BYTES):
             return F.broadcast(frame)
         return frame
 
@@ -595,6 +614,7 @@ def q_link_fuzzy_lsh(spark, sf):
     )
     from .pipeline.link import fuzzy_link_lsh
 
+    caches = _fresh_caches()
     # small-file scan artifact (same as q_dedup_ngram_jaccard): the
     # sf-scale documents table arrives as one parquet row group per ~1M
     # rows, so the key-derivation pass would run in 1-2 scan tasks.
@@ -613,8 +633,8 @@ def q_link_fuzzy_lsh(spark, sf):
     #   slicing and lowercasing coincide; RE2 and Java agree on the
     #   [^A-Za-z ] class for every valid string);
     # * the (doc_id, key) table is cached and BOTH sides read it, so the
-    #   strip happens once per doc, not once per union branch. The cache
-    #   joins fuzzy_link_lsh's registry and is released on the next call.
+    #   strip happens once per doc, not once per union branch. It is
+    #   released with fuzzy_link_lsh's stats cache on the next LSH query.
     @F.pandas_udf("string")
     def _ascii_prefix_key(texts):
         import pyarrow as pa
@@ -631,6 +651,7 @@ def q_link_fuzzy_lsh(spark, sf):
         .filter(F.col("key") != "")
         .cache()
     )
+    caches.append(base)
     dictionary = base
     mentions = base.select(
         "doc_id", F.substring("key", 1, LINK_MENTION_PREFIX).alias("key")
@@ -646,7 +667,7 @@ def q_link_fuzzy_lsh(spark, sf):
         num_hashes=LINK_NUM_HASHES,
         bands=LINK_BANDS,
         threshold=LINK_THRESHOLD,
-        pre_caches=[base],
+        cache_registry=caches,
     ).orderBy("src")
 
 
