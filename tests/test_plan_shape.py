@@ -25,6 +25,20 @@ def _exchange_ids(plan: str) -> set[str]:
     )
 
 
+def _subtree(plan: str, node: str) -> str:
+    """The printed subtree rooted at the first ``node`` line: that line
+    and the lines below it whose operator sits deeper in the tree."""
+    lines = plan.splitlines()
+    start = next(i for i, line in enumerate(lines) if node in line)
+    depth = lines[start].index(node)
+    out = [lines[start]]
+    for line in lines[start + 1 :]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
 def test_kg_plan_shape(spark, tmp_path):
     from theoremkb_spark.pipeline.extract import load_pages
     from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
@@ -43,9 +57,10 @@ def test_kg_plan_shape(spark, tmp_path):
         assert cols == {"url", "html", "lang"}, cols
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan
 
-    # exactly ONE wide repartition (the url-hash exchange) feeds every
-    # branch; the only other hash exchanges are the final triple rollup
-    # and the tiny dico dedup
+    # exactly ONE hash exchange: the url-hash repartition. The triple
+    # rollup reuses its partitioning, and the broadcast regime
+    # canonicalizes the dictionary on the driver, so no dedup or CC
+    # exchange sits on the dictionary side
     repart = {
         pid
         for pid in re.findall(
@@ -54,7 +69,7 @@ def test_kg_plan_shape(spark, tmp_path):
         )
     }
     assert len(repart) == 1, plan
-    assert len(_exchange_ids(plan)) <= 4, _exchange_ids(plan)
+    assert _exchange_ids(plan) == repart, _exchange_ids(plan)
 
     # map-only extraction: the Arrow UDF consumes the scan directly and
     # the repartition consumes the UDF's (40x smaller) output — in the
@@ -65,8 +80,12 @@ def test_kg_plan_shape(spark, tmp_path):
         "pages are being shuffled before extraction"
     )
 
-    # dictionary joins broadcast; nothing quadratic anywhere
-    assert plan.count("BroadcastHashJoin") >= 2
+    # ONE dictionary join, broadcast, whose build side is the
+    # canonicalized (url, tag, pdf_to_canon) dictionary; nothing
+    # quadratic anywhere
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "pdf_to_canon" in _subtree(plan, "BroadcastExchange"), plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

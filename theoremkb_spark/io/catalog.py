@@ -320,7 +320,8 @@ def run_incremental(
 ) -> int:
     """Process only not-yet-committed documents; returns the batch id or -1
     when nothing is left to do. ``limit`` caps the batch (test hook for the
-    kill-and-rerun scenario).
+    kill-and-rerun scenario); its at most ``limit`` urls are collected to
+    the driver once, while ``limit=None`` keeps the todo set lazy.
 
     Every batch commits a per-STAGE, per-partition lineage table
     (extraction / spans / mentions / citations / triples — row counts,
@@ -333,11 +334,19 @@ def run_incremental(
 
     done = store.processed_urls(spark)
     todo = pages.join(done, "url", "left_anti")
-    if limit is not None:
-        todo_urls = todo.select("url").orderBy("url").limit(limit)
-        todo = pages.join(F.broadcast(todo_urls), "url", "left_semi")
-    if todo.isEmpty():
-        return -1
+    if limit is None:
+        urls = todo.select("url")
+        if todo.isEmpty():
+            return -1
+    else:
+        # resolve the batch's url set ONCE: the ledger anti-join and the
+        # sort run in this one collect, and the semi-join below and the
+        # commit's url file both read the driver-side list
+        picked = todo.select("url").orderBy("url").limit(limit).collect()
+        if not picked:
+            return -1
+        urls = spark.createDataFrame([(r.url,) for r in picked], "url string")
+        todo = pages.join(F.broadcast(urls), "url", "left_semi")
     caches: list[DataFrame] = []
     stages: dict[str, DataFrame] = {}
     triples = build_kg(
@@ -348,9 +357,7 @@ def run_incremental(
         stages["triples"] = triples
         # mark every attempted url as processed — including zero-triple and
         # non-English docs, otherwise they would be reprocessed forever
-        batch_id = store.commit_batch(
-            triples, todo.select("url"), stage_lineage(spark, stages)
-        )
+        batch_id = store.commit_batch(triples, urls, stage_lineage(spark, stages))
     finally:
         # looped callers would otherwise accumulate cached blocks forever
         release_caches(caches)
@@ -383,6 +390,10 @@ def recommit_urls(
     if todo.isEmpty():
         return -1
     caches: list[DataFrame] = []
+    # one url frame for the url file and the supersedes file, cached so
+    # the pages semi-join is scanned once, not once per file
+    todo_urls = todo.select("url").cache()
+    caches.append(todo_urls)
     # cache the FINAL triples (tiny), not the pipeline intermediates:
     # commit_batch runs two actions over them (parquet write + lineage)
     # and the single-pass fused assembly is otherwise uncached
@@ -391,9 +402,9 @@ def recommit_urls(
     try:
         batch_id = store.commit_batch(
             triples,
-            todo.select("url"),
+            todo_urls,
             lineage_rows(triples, "triples"),
-            supersedes_urls=todo.select("url"),
+            supersedes_urls=todo_urls,
         )
     finally:
         release_caches(caches)

@@ -46,25 +46,33 @@ def canonicalize_rows(rows) -> list[tuple[str, str, str]]:
     identical semantics to ``canonicalize_dict`` (same union-find the
     distributed CC's small-graph path uses) with zero Spark jobs — the
     distributed path costs ~6 tiny jobs of pure scheduling latency that
-    dominate when the dict is small. ``rows``: dicts with url/tag/
-    pdf_to/norm_title. Returns sorted (url, tag, pdf_to_canon)."""
+    dominate when the dict is small. ``rows``: dicts (or Rows) with url/
+    tag/pdf_to/norm_title. Returns sorted (url, tag, pdf_to_canon).
+
+    NULLs follow Spark: a NULL norm_title never equi-joins its seed and
+    a NULL pdf_to is neither a seed (``min`` skips it) nor matched by
+    the mapping join, so both rows keep their own pdf_to (NULL stays
+    NULL)."""
     from ..operators.graph import _driver_cc
 
     seed: dict[str, str] = {}
     for r in rows:
         nt, t = r["norm_title"], r["pdf_to"]
-        if nt not in seed or t < seed[nt]:
+        if nt is not None and t is not None and (nt not in seed or t < seed[nt]):
             seed[nt] = t
     edges = [
         (r["pdf_to"], seed[r["norm_title"]])
         for r in rows
-        if r["pdf_to"] != seed[r["norm_title"]]
+        if r["pdf_to"] is not None
+        and r["norm_title"] in seed
+        and r["pdf_to"] != seed[r["norm_title"]]
     ]
     canon = dict(_driver_cc(edges))
     out = {
         (r["url"], r["tag"], canon.get(r["pdf_to"], r["pdf_to"])) for r in rows
     }
-    return sorted(out)
+    # NULLs sort first, as in Spark's ascending order
+    return sorted(out, key=lambda t: [(v is not None, v or "") for v in t])
 
 
 def canonicalize_dict(entity_dict: DataFrame, extra_edges: DataFrame | None = None) -> DataFrame:

@@ -4,7 +4,7 @@
 
     pages --map-only Arrow extract--> fused
       --repartition(url)--> spans/mentions
-      --broadcast dict (canonicalized via CC)--> triples
+      --broadcast dict (canonicalized on the driver)--> triples
 
 Triple vocabulary (north star): statement_of, proved_in, cites,
 defined_in — mapped from the reference's graph tables
@@ -16,10 +16,12 @@ In the fused (production) path the html NEVER shuffles: extraction is a
 map-only Arrow pass over the byte-balanced source scan, and the
 explicit url-hash repartition (north rule) lands on the ~40x smaller
 fused span table, whose HashPartitioning every downstream
-groupBy/window reuses. The dictionary join is broadcast; the CC loop
-runs on the tiny alias-edge table only. The window path (cross-check
-implementation) inverts the choice — there the token table is the big
-one, so the pages repartition before tokenization is the cheap side.
+groupBy/window reuses. The dictionary join is broadcast, and its
+canonicalization runs on the driver (the salted regime, whose
+dictionary is too big for that, keeps the distributed CC). The window
+path (cross-check implementation) inverts the choice — there the token
+table is the big one, so the pages repartition before tokenization is
+the cheap side.
 """
 
 from __future__ import annotations
@@ -50,7 +52,9 @@ def load_dico(spark: SparkSession, dict_rows) -> DataFrame:
     """Canonicalize a broadcast-sized dictionary driver-side and wrap it
     as the (url, tag, pdf_to_canon) DataFrame the LINK stage consumes.
     Same output as ``canonicalize_dict(load_entity_dict(...))`` without
-    the half-dozen tiny Spark jobs (see canon.canonicalize_rows)."""
+    the half-dozen tiny Spark jobs (see canon.canonicalize_rows). This
+    is the path ``build_kg`` itself takes in the broadcast regime when
+    no ``dico`` is passed."""
     from .canon import canonicalize_rows
 
     return spark.createDataFrame(
@@ -253,9 +257,12 @@ def build_kg(
 ) -> DataFrame:
     """pages + entity_dict -> triples DataFrame (lazy).
 
-    Pass ``dico`` (pre-canonicalized (url, tag, pdf_to_canon)) to skip
-    the canonicalization stage — e.g. from ``load_dico`` when the
-    dictionary rows are already driver-resident.
+    Without ``dico``, the broadcast regime canonicalizes ``entity_dict``
+    eagerly on the driver (one collect, then ``load_dico``); the salted
+    regime canonicalizes it lazily with ``canonicalize_dict``. Pass
+    ``dico`` (pre-canonicalized (url, tag, pdf_to_canon)) to skip the
+    canonicalization stage — e.g. from ``load_dico`` when the dictionary
+    rows are already driver-resident.
 
     Pass ``cache_registry`` (a list) to collect the cached stage
     intermediates; hand it to ``release_caches`` after the terminal
@@ -341,26 +348,28 @@ def build_kg(
         # lineage hook scan fused repeatedly — cache for those.
         if stages_out is not None or join_strategy != "broadcast":
             fused = _cached(fused)
-        spans = fused.filter(F.col("kind") == "span").select(
-            "url", "group", "label", "text", "own_name"
-        )
-        citations = fused.filter(F.col("kind") == "cite").select("url", "tag")
-        # mention mining is fused into the same Arrow pass (refs_udf
-        # semantics inside extract_spans) — no second python stage, no
-        # extra cache round trip over the span table
-        mentions = fused.filter(F.col("kind") == "mention").select(
-            "url",
-            "group",
-            "label",
-            "own_name",
-            "ref_name",
-            F.col("ref_kind").alias("kind"),
-            "ref_tag",
-        )
-        if stages_out is not None:
-            stages_out.update(
-                fused=fused, spans=spans, mentions=mentions, citations=citations
+            # the per-kind projections feed the union form and the
+            # lineage hook only; the single pass reads fused directly
+            spans = fused.filter(F.col("kind") == "span").select(
+                "url", "group", "label", "text", "own_name"
             )
+            citations = fused.filter(F.col("kind") == "cite").select("url", "tag")
+            # mention mining is fused into the same Arrow pass (refs_udf
+            # semantics inside extract_spans) — no second python stage, no
+            # extra cache round trip over the span table
+            mentions = fused.filter(F.col("kind") == "mention").select(
+                "url",
+                "group",
+                "label",
+                "own_name",
+                "ref_name",
+                F.col("ref_kind").alias("kind"),
+                "ref_tag",
+            )
+            if stages_out is not None:
+                stages_out.update(
+                    fused=fused, spans=spans, mentions=mentions, citations=citations
+                )
     else:
         # token path: the token table is ~40x LARGER than the pages, so
         # here the cheap place for the explicit url-hash exchange is the
@@ -397,9 +406,15 @@ def build_kg(
                 tokens=tokens, spans=spans, mentions=mentions, citations=citations
             )
     if dico is None:
-        # the dictionary is broadcast-sized and consumed by two joins —
-        # cache it so the CC canonicalization runs once
-        dico = _cached(canonicalize_dict(entity_dict))
+        if join_strategy == "broadcast":
+            # a broadcast-sized dictionary is canonicalized on the driver
+            # from one collect: no alias-edge, CC or join/distinct jobs,
+            # and the small driver-built frame it yields needs no cache
+            dico = load_dico(spark, entity_dict.collect())
+        else:
+            # consumed by the salted joins of two branches — cache it so
+            # the CC canonicalization runs once
+            dico = _cached(canonicalize_dict(entity_dict))
     if labeler == "fused" and join_strategy == "broadcast":
         # single-pass assembly: one scan of the fused cache, one
         # broadcast join, rollup exchange-free (see build_triples_fused)
@@ -428,6 +443,35 @@ def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
 
 LINEAGE_SCHEMA = "stage string, partition_id int, rows long, urls long, wall_ms long"
 
+# build_kg's per-kind projections of the fused table, by stage name
+FUSED_KINDS = {"spans": "span", "mentions": "mention", "citations": "cite"}
+
+
+def _fused_lineage(fused: DataFrame) -> list[tuple[str, int, int, int]]:
+    """(stage, partition_id, rows, urls) of 'fused' and its three kind
+    projections from ONE groupBy over the cached fused table. The
+    projections are narrow filters, so their partition ids are fused's;
+    approx_count_distinct skips the NULLs the kind condition leaves, so
+    every count equals ``lineage_rows`` over the projection. A kind
+    absent from a partition gets no row there, as its own groupBy would."""
+    kind, url = F.col("kind"), F.col("url")
+    aggs = [
+        F.count(F.lit(1)).alias("fused_rows"),
+        F.approx_count_distinct(url).alias("fused_urls"),
+    ]
+    for name, k in FUSED_KINDS.items():
+        aggs += [
+            F.count(F.when(kind == k, 1)).alias(f"{name}_rows"),
+            F.approx_count_distinct(F.when(kind == k, url)).alias(f"{name}_urls"),
+        ]
+    parts = fused.groupBy(F.spark_partition_id().alias("_pid")).agg(*aggs).collect()
+    return [
+        (name, r["_pid"], r[f"{name}_rows"], r[f"{name}_urls"])
+        for name in ("fused", *FUSED_KINDS)
+        for r in parts
+        if r[f"{name}_rows"]
+    ]
+
 
 def stage_lineage(spark: SparkSession, stages: dict[str, DataFrame]) -> DataFrame:
     """Materialize per-partition lineage for every exposed stage, with a
@@ -435,16 +479,30 @@ def stage_lineage(spark: SparkSession, stages: dict[str, DataFrame]) -> DataFram
 
     Attribution note: stages is insertion-ordered with the cached
     materialization stage ('fused'/'tokens') FIRST, so its wall-ms
-    carries the extraction cost and the later stages' wall-ms measure
-    only their own branch work over the warm cache. Output is tiny
-    (#stages x #partitions rows), assembled driver-side so the measured
-    walls ride along exactly."""
+    carries the extraction cost. In the fused path the spans, mentions
+    and citations counts ride the fused stage's single pass, so those
+    three derived stages record wall_ms 0; every other stage (triples,
+    and each stage of the window path) runs its own action over the warm
+    cache and measures only that work. Output is tiny (#stages x
+    #partitions rows), assembled driver-side so the measured walls ride
+    along exactly."""
     import time
 
     rows = []
     for name, df in stages.items():
+        if name in FUSED_KINDS and "fused" in stages:
+            continue  # counted by the fused pass
         t0 = time.time()
-        part = lineage_rows(df, name).collect()
+        if name == "fused":
+            part = _fused_lineage(df)
+        else:
+            part = [
+                (name, r.partition_id, r.rows, r.urls)
+                for r in lineage_rows(df, name).collect()
+            ]
         wall = int((time.time() - t0) * 1000)
-        rows.extend((name, r.partition_id, r.rows, r.urls, wall) for r in part)
+        rows.extend(
+            (stage, pid, n, urls, wall if stage == name else 0)
+            for stage, pid, n, urls in part
+        )
     return spark.createDataFrame(rows, LINEAGE_SCHEMA)
