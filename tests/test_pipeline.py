@@ -88,6 +88,15 @@ def test_fused_and_window_paths_emit_identical_triples(spark, pages, entity_dict
     assert window.exceptAll(fused).isEmpty()
 
 
+def test_build_kg_rejects_bad_inputs(spark, pages, entity_dict):
+    """An unknown labeler, or neither dictionary input, fails fast with
+    a ValueError naming the allowed inputs."""
+    with pytest.raises(ValueError, match="fused"):
+        build_kg(spark, pages, entity_dict, labeler="windw")
+    with pytest.raises(ValueError, match="entity_dict or dico"):
+        build_kg(spark, pages)
+
+
 def test_non_english_filtered(spark, pages):
     langs = {r.lang for r in pages.select("lang").distinct().collect()}
     tokens = extract_tokens(pages, english_only=True)
@@ -122,15 +131,20 @@ def test_window_path_regexes_case_insensitive(spark):
     assert got[3] == want[3] == "lemma 1.2"
 
 
-def test_triple_groups_match_sequential_oracle(spark, pages, entity_dict):
+@pytest.mark.parametrize("join_strategy", ["broadcast", "salted"])
+@pytest.mark.parametrize("labeler", ["fused", "window"])
+def test_triple_groups_match_sequential_oracle(
+    spark, pages, entity_dict, labeler, join_strategy
+):
     """Provenance groups (min span group per triple) must match the
-    sequential oracle — the surface behind the kg_triples DuckDB gate."""
+    sequential oracle — the surface behind the kg_triples DuckDB gate —
+    for both front ends in both dictionary-join regimes."""
     from theoremkb_spark.corpus.oracle import oracle_triples_grouped
 
-    got = {
-        (r.subj, r.pred, r.obj, r.url): r.group
-        for r in build_kg(spark, pages, entity_dict).collect()
-    }
+    kg = build_kg(
+        spark, pages, entity_dict, labeler=labeler, join_strategy=join_strategy
+    )
+    got = {(r.subj, r.pred, r.obj, r.url): r.group for r in kg.collect()}
     exp = oracle_triples_grouped(list(build_corpus(N_DOCS)), entity_dict_rows(N_DOCS))
     assert got == exp
 

@@ -39,6 +39,18 @@ def _subtree(plan: str, node: str) -> str:
     return "\n".join(out)
 
 
+def _assert_one_triple_explode(plan: str) -> None:
+    """The kg assembly's conditional explode: exactly one Generate over
+    the per-row triple structs, carrying all four predicates."""
+    gen = re.findall(
+        r"Generate explode\(array\(CASE WHEN \(kind#\d+ = span\) THEN struct\(subj,[^\n]*",
+        plan,
+    )
+    assert len(gen) == 1, plan
+    for pred in ("statement_of", "cites", "proved_in", "defined_in"):
+        assert pred in gen[0], gen[0]
+
+
 def test_kg_plan_shape(spark, tmp_path):
     from theoremkb_spark.pipeline.extract import load_pages
     from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
@@ -46,7 +58,8 @@ def test_kg_plan_shape(spark, tmp_path):
     pages_path = str(tmp_path / "pages.parquet")
     load_pages(spark, 24).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
-    plan = _plan(build_kg(spark, pages, load_entity_dict(spark, 24)))
+    ents = load_entity_dict(spark, 24)
+    plan = _plan(build_kg(spark, pages, ents))
 
     # page scan: pruned to exactly (url, html, lang), english filter pushed
     scans = re.findall(r"FileScan parquet \[([^\]]*)\][^\n]*", plan)
@@ -97,16 +110,20 @@ def test_kg_plan_shape(spark, tmp_path):
     # their full key (the old union form's exchange) shows up as a
     # hashpartitioning on subj
     assert "hashpartitioning(subj" not in plan, "triple rollup re-shuffles"
-    # ...and the single pass IS build_triples_fused's conditional explode:
-    # one Generate over the array of per-row triple structs, carrying all
-    # four predicates (the union form has no such node)
-    gen = re.findall(
-        r"Generate explode\(array\(CASE WHEN \(kind#\d+ = span\) THEN struct\(subj,[^\n]*",
-        plan,
+    # ...and the single pass IS build_triples' conditional explode: one
+    # Generate over the array of per-row triple structs, carrying all
+    # four predicates (a per-predicate union form has no such node)
+    _assert_one_triple_explode(plan)
+
+    # every labeler and dictionary regime shares that one assembly; the
+    # salted regime's dictionary attach is exactly one salted join
+    salted = _plan(build_kg(spark, pages, ents, join_strategy="salted"))
+    _assert_one_triple_explode(salted)
+    salted_joins = re.findall(
+        r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[[^\n]*_salt", salted
     )
-    assert len(gen) == 1, plan
-    for pred in ("statement_of", "cites", "proved_in", "defined_in"):
-        assert pred in gen[0], gen[0]
+    assert len(salted_joins) == 1, salted
+    _assert_one_triple_explode(_plan(build_kg(spark, pages, ents, labeler="window")))
 
 
 def test_fuzzy_link_plan_broadcasts_dictionary(spark, caches):

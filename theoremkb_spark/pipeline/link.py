@@ -1,7 +1,9 @@
 """Stage 4 — LINK: mention tags -> entity ids via the citation dictionary.
 
 The dictionary join is the skew hot spot (one hot paper is cited by ~30%
-of documents). Two physical strategies behind one logical operator:
+of documents). ``runner.build_triples`` attaches the dictionary to the
+cite anchors and extra mentions of the fused table in ONE left join,
+``_resolve``, with two physical strategies behind it:
 
 * ``strategy="broadcast"``: the dictionary is a dimension table —
   broadcast hash join, zero shuffle, skew-immune (SURVEY §2.3 J5).
@@ -53,20 +55,6 @@ def _resolve(
     if strategy == "salted":
         return salted_join(df, dico, on=["url", "tag"], how="left", salt=salt)
     raise ValueError(f"unknown join strategy: {strategy}")
-
-
-def link_extra_mentions(
-    mentions: DataFrame, dico: DataFrame, strategy: str = "auto", salt: int = 8
-) -> DataFrame:
-    """extra-kind mention rows -> + resolved `target` column."""
-    extra = mentions.filter(F.col("kind") == "extra").withColumn(
-        "tag", F.col("ref_tag")
-    )
-    resolved = _resolve(extra, dico, strategy, salt)
-    return resolved.withColumn(
-        "target",
-        F.coalesce(F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("tag"))),
-    ).drop("pdf_to_canon", "tag")
 
 
 def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
@@ -218,15 +206,3 @@ def fuzzy_link_lsh(
         .select("src", "dst", "jaccard")
     )
 
-
-def link_paper_citations(
-    citations: DataFrame, dico: DataFrame, strategy: str = "auto", salt: int = 8
-) -> DataFrame:
-    """(url, tag) anchors -> (url, target)."""
-    resolved = _resolve(citations, dico, strategy, salt)
-    return resolved.select(
-        "url",
-        F.coalesce(
-            F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("tag"))
-        ).alias("target"),
-    )

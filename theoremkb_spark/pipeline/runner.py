@@ -2,9 +2,10 @@
 
 ``build_kg`` wires the six stages into one lazy DataFrame plan:
 
-    pages --map-only Arrow extract--> fused
-      --repartition(url)--> spans/mentions
-      --broadcast dict (canonicalized on the driver)--> triples
+    pages --map-only Arrow extract--> fused (span/mention/cite rows)
+      --repartition(url)--> build_triples: one conditional explode
+      + one dictionary join (broadcast, or salted past the broadcast
+      threshold) --> triples
 
 Triple vocabulary (north star): statement_of, proved_in, cites,
 defined_in — mapped from the reference's graph tables
@@ -16,12 +17,13 @@ In the fused (production) path the html NEVER shuffles: extraction is a
 map-only Arrow pass over the byte-balanced source scan, and the
 explicit url-hash repartition (north rule) lands on the ~40x smaller
 fused span table, whose HashPartitioning every downstream
-groupBy/window reuses. The dictionary join is broadcast, and its
-canonicalization runs on the driver (the salted regime, whose
-dictionary is too big for that, keeps the distributed CC). The window
-path (cross-check implementation) inverts the choice — there the token
-table is the big one, so the pages repartition before tokenization is
-the cheap side.
+groupBy/window reuses. A broadcast-sized dictionary is canonicalized on
+the driver (the salted regime, whose dictionary is too big for that,
+keeps the distributed CC). The window path (cross-check implementation)
+inverts the choice — there the token table is the big one, so the
+pages repartition before tokenization is the cheap side — and unions
+its spans, mentions and citation anchors into the same fused shape, so
+every labeler and regime shares the one assembly.
 """
 
 from __future__ import annotations
@@ -32,10 +34,11 @@ from pyspark.sql import functions as F
 from .canon import canonicalize_dict
 from .extract import extract_tokens
 from .label import label_tokens, label_tokens_arrow
-from .link import link_extra_mentions, link_paper_citations
+from .link import _resolve
 from .mentions import assemble_spans, mine_mentions, paper_citations, resolve_span_names
 
 TRIPLE_COLS = ["subj", "pred", "obj", "url", "group"]
+LABELERS = ("fused", "window", "arrow")
 
 
 def load_entity_dict(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
@@ -67,96 +70,20 @@ def _entity(url_col, name_col):
     return F.concat(url_col, F.lit("#"), name_col)
 
 
-def build_triples(
-    spans_named: DataFrame,
-    mentions: DataFrame,
-    citations: DataFrame,
-    dico: DataFrame,
-    join_strategy: str = "auto",
-) -> DataFrame:
-    """citations: (url, tag) doc-wide citation anchors — from
-    ``extract_spans`` (fused path) or ``paper_citations(tokens)``."""
-    url, own = F.col("url"), F.col("own_name")
-    named = spans_named.filter(own.isNotNull())
+def build_triples(fused: DataFrame, dico: DataFrame, join_strategy: str) -> DataFrame:
+    """Single-pass triples assembly over a fused-shaped table (span,
+    mention and cite rows, ``extract.SPANS_FUSED_SCHEMA``'s columns), for
+    either dictionary regime and any labeler.
 
-    statement_of = (
-        named.select(
-            _entity(url, own).alias("subj"),
-            F.lit("statement_of").alias("pred"),
-            url.alias("obj"),
-            url.alias("url"),
-            F.col("group"),
-        )
-    )
-    proved_in = named.filter(F.col("label") == "proof").select(
-        _entity(url, own).alias("subj"),
-        F.lit("proved_in").alias("pred"),
-        url.alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
-    defined_in = named.filter(F.col("label") == "definition").select(
-        _entity(url, own).alias("subj"),
-        F.lit("defined_in").alias("pred"),
-        url.alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
-
-    m_named = mentions.filter(F.col("own_name").isNotNull())
-    cites_intra = m_named.filter(F.col("kind") == "intra").select(
-        _entity(url, own).alias("subj"),
-        F.lit("cites").alias("pred"),
-        _entity(url, F.col("ref_name")).alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
-    cites_extra = link_extra_mentions(m_named, dico, strategy=join_strategy).select(
-        _entity(url, own).alias("subj"),
-        F.lit("cites").alias("pred"),
-        _entity(F.col("target"), F.col("ref_name")).alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
-    cites_paper = link_paper_citations(citations, dico, strategy=join_strategy).select(
-        url.alias("subj"),
-        F.lit("cites").alias("pred"),
-        F.col("target").alias("obj"),
-        url.alias("url"),
-        F.lit(-1).alias("group"),
-    )
-
-    all_triples = (
-        statement_of.unionByName(proved_in)
-        .unionByName(defined_in)
-        .unionByName(cites_intra)
-        .unionByName(cites_extra)
-        .unionByName(cites_paper)
-    )
-    return all_triples.groupBy("subj", "pred", "obj", "url").agg(
-        F.min("group").alias("group")
-    )
-
-
-def build_triples_fused(fused: DataFrame, dico: DataFrame) -> DataFrame:
-    """Single-pass triples assembly over the url-hash-partitioned fused
-    table, for the broadcast-dictionary regime.
-
-    Semantically identical to ``build_triples`` over the fused table's
-    span/mention/cite projections (gated by the fused-vs-window identity
-    test and the kg oracle rows), but the physical plan collapses the
-    six branch scans of the cache (6 x n_partitions tasks) plus the
-    union's rollup exchange into ONE scan: each fused row emits its
-    triples through a conditional-array explode, the dictionary is
-    attached by a single broadcast left join (broadcast preserves the
-    stream side's partitioning), and the final
-    groupBy(subj, pred, obj, url) reuses HashPartitioning(url) — url is
-    a subset of the grouping keys — so the rollup needs NO exchange.
-    Zero shuffles downstream of the fused repartition.
-
-    Only valid when the dictionary fits broadcast: the salted regime
-    (dictionary past BROADCAST_DICT_MAX_BYTES) keeps the ``build_triples``
-    union form, whose per-branch salted joins handle the hot-key skew.
+    Each row emits its triples through a conditional-array explode, and
+    the dictionary is attached by ONE left join (``link._resolve``), so
+    the broadcast and salted regimes differ only inside that join. With
+    the fused labeler in the broadcast regime the whole assembly is
+    exchange-free: broadcast preserves the stream side's partitioning,
+    and the final groupBy(subj, pred, obj, url) reuses the url
+    repartition's HashPartitioning — url is a subset of the grouping
+    keys — so the rollup needs NO exchange. The salted regime adds only
+    the salted join's own two exchanges.
     """
     url, own = F.col("url"), F.col("own_name")
     kind, ref_kind = F.col("kind"), F.col("ref_kind")
@@ -165,23 +92,23 @@ def build_triples_fused(fused: DataFrame, dico: DataFrame) -> DataFrame:
         | ((kind == "span") & own.isNotNull())
         | ((kind == "mention") & own.isNotNull() & ref_kind.isin("intra", "extra"))
     )
-    # one join key column for both dictionary consumers: cite rows carry
-    # their anchor tag, extra-mention rows their mined ref_tag; span and
+    # one join key for both dictionary consumers: cite rows keep their
+    # anchor tag, extra-mention rows take their mined ref_tag; span and
     # intra rows get NULL (an equi-join never matches NULL, so they pass
     # through the left join untouched)
     rel = rel.withColumn(
-        "_jtag",
+        "tag",
         F.when(kind == "cite", F.col("tag")).when(
             (kind == "mention") & (ref_kind == "extra"), F.col("ref_tag")
         ),
     )
-    joined = rel.join(
-        F.broadcast(dico.withColumnRenamed("tag", "_jtag")), ["url", "_jtag"], "left"
-    )
+    # no triple reads the span text, and the salted join would otherwise
+    # hash it (its widest column) into every row's salt
+    joined = _resolve(rel.drop("text"), dico, join_strategy, salt=8)
 
     own_ent = _entity(url, own)
     target = F.coalesce(
-        F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("_jtag"))
+        F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("tag"))
     )
 
     def _t(subj, pred, obj, grp):
@@ -215,9 +142,8 @@ def build_triples_fused(fused: DataFrame, dico: DataFrame) -> DataFrame:
     return (
         joined.select("url", F.explode(F.array(e1, e2)).alias("_t"))
         .filter(F.col("_t").isNotNull())
-        # coalesce against a non-null literal restores pred's
-        # non-nullable schema flag (the union form's F.lit preds are
-        # non-nullable; a struct field out of a `when` chain is not) —
+        # coalesce against a non-null literal keeps pred's schema flag
+        # non-nullable (a struct field out of a `when` chain is not) —
         # value-neutral, pred is never NULL in surviving rows
         .select(
             "_t.subj",
@@ -257,22 +183,31 @@ def build_kg(
 ) -> DataFrame:
     """pages + entity_dict -> triples DataFrame (lazy).
 
+    ``labeler`` is one of ``LABELERS``: "fused" (the single Arrow pass),
+    or "window"/"arrow" (the token path, labeled by window functions or
+    the Arrow labeler). Either path yields one fused-shaped table of
+    span, mention and cite rows, and ``build_triples`` assembles it.
+
     Without ``dico``, the broadcast regime canonicalizes ``entity_dict``
     eagerly on the driver (one collect, then ``load_dico``); the salted
     regime canonicalizes it lazily with ``canonicalize_dict``. Pass
     ``dico`` (pre-canonicalized (url, tag, pdf_to_canon)) to skip the
     canonicalization stage — e.g. from ``load_dico`` when the dictionary
-    rows are already driver-resident.
+    rows are already driver-resident. One of the two is required.
 
     Pass ``cache_registry`` (a list) to collect the cached stage
     intermediates; hand it to ``release_caches`` after the terminal
     action so looped callers don't leak cached blocks.
 
     Pass ``stages_out`` (a dict) to receive the intermediate stage
-    DataFrames (materialization stage first, then spans / mentions /
-    citations) — the hook ``stage_lineage`` uses to commit per-stage,
+    DataFrames (the token table first on the token path, then the fused
+    table) — the hook ``stage_lineage`` uses to commit per-stage,
     per-partition lineage rows through the checkpoint store.
     """
+    if labeler not in LABELERS:
+        raise ValueError(f"unknown labeler {labeler!r}: expected one of {LABELERS}")
+    if entity_dict is None and dico is None:
+        raise ValueError("build_kg needs entity_dict or dico (or both)")
 
     def _cached(df: DataFrame) -> DataFrame:
         df = df.cache()
@@ -289,14 +224,14 @@ def build_kg(
 
     # Fused path: the repartitioned table is the ~40x-reduced span table
     # (tens of MB at bench scale), so partitions = cores — every extra
-    # partition multiplies the task count of all six downstream branch
-    # scans of the cache (4x cores measured 768 tasks and 8.9 s min-of-5
-    # vs 5.2 s at 1x; see BENCH/RECONCILE_r03.md). Skew is already
-    # handled upstream: the map-only extraction balances html by
-    # byte-bounded scan splits, and url-hash spreads documents evenly.
-    # Window path: the repartition lands on the PAGES feeding a ~40x
-    # larger token table, where scheduler slack around document skew
-    # still pays — keep 4x there. At cluster scale the caller sizes
+    # partition multiplies the task count of every downstream scan of
+    # it (4x cores measured 768 tasks and 8.9 s min-of-5 vs 5.2 s at 1x
+    # under the round-3 six-branch plan; see BENCH/RECONCILE_r03.md).
+    # Skew is already handled upstream: the map-only extraction balances
+    # html by byte-bounded scan splits, and url-hash spreads documents
+    # evenly. Window path: the repartition lands on the PAGES feeding a
+    # ~40x larger token table, where scheduler slack around document
+    # skew still pays — keep 4x there. At cluster scale the caller sizes
     # this by target partition bytes (~128-512 MB) instead.
     if n_partitions is None:
         mult = 1 if labeler == "fused" else 4
@@ -308,9 +243,8 @@ def build_kg(
         # Catalyst stats multiply into a useless overestimate, while
         # canonicalization only ever SHRINKS the dictionary — so the
         # pre-canon size is the conservative-correct broadcast basis.
-        # Resolved BEFORE the stage wiring because the strategy also
-        # decides the assembly form (single-pass vs union) and with it
-        # whether the fused table has one consumer or six (caching).
+        # The strategy also decides how the dictionary is canonicalized
+        # (driver-side or distributed), below.
         from ..operators.joins import fits_broadcast
         from .link import BROADCAST_DICT_MAX_BYTES
 
@@ -323,11 +257,12 @@ def build_kg(
 
     if labeler == "fused":
         # single Arrow pass: parse + label + span assembly + name
-        # resolution per document (extract.extract_spans), MAP-ONLY over
-        # the source scan: one page row is one whole document, so the
-        # per-doc UDF needs no co-location, and the scan's byte-bounded
-        # splits (spark.sql.files.maxPartitionBytes) already balance the
-        # html across tasks — shuffling the full html corpus before
+        # resolution + mention mining per document
+        # (extract.extract_spans), MAP-ONLY over the source scan: one
+        # page row is one whole document, so the per-doc UDF needs no
+        # co-location, and the scan's byte-bounded splits
+        # (spark.sql.files.maxPartitionBytes) already balance the html
+        # across tasks — shuffling the full html corpus before
         # extraction was pure cost (measured 1.6x wall at 9600 docs;
         # at 100 TB it is the difference between shuffling 100 TB and
         # shuffling the ~40x smaller span table). The explicit url-hash
@@ -339,37 +274,6 @@ def build_kg(
         fused = extract_spans(
             pages, english_only=True, model_file=model_file
         ).repartition(n_partitions, F.col("url"))
-        # the broadcast-regime single-pass assembly (build_triples_fused)
-        # consumes fused exactly ONCE — caching there is pure overhead,
-        # and skipping it keeps the repartition's HashPartitioning(url)
-        # statically visible so the triple rollup plans with NO exchange
-        # (a cached plan hides its partitioning behind AdaptiveSparkPlan
-        # until materialized). The union form (salted regime) and the
-        # lineage hook scan fused repeatedly — cache for those.
-        if stages_out is not None or join_strategy != "broadcast":
-            fused = _cached(fused)
-            # the per-kind projections feed the union form and the
-            # lineage hook only; the single pass reads fused directly
-            spans = fused.filter(F.col("kind") == "span").select(
-                "url", "group", "label", "text", "own_name"
-            )
-            citations = fused.filter(F.col("kind") == "cite").select("url", "tag")
-            # mention mining is fused into the same Arrow pass (refs_udf
-            # semantics inside extract_spans) — no second python stage, no
-            # extra cache round trip over the span table
-            mentions = fused.filter(F.col("kind") == "mention").select(
-                "url",
-                "group",
-                "label",
-                "own_name",
-                "ref_name",
-                F.col("ref_kind").alias("kind"),
-                "ref_tag",
-            )
-            if stages_out is not None:
-                stages_out.update(
-                    fused=fused, spans=spans, mentions=mentions, citations=citations
-                )
     else:
         # token path: the token table is ~40x LARGER than the pages, so
         # here the cheap place for the explicit url-hash exchange is the
@@ -379,10 +283,12 @@ def build_kg(
         pages = pages.repartition(n_partitions, F.col("url"))
         # window-function path (cross-check implementation): tokens feed
         # two consumers (span pipeline + paper citations) and spans feed
-        # four triple branches — cache both so the extract/label chain
-        # runs once, not once per branch. On a real cluster these are
+        # two (their own rows + mention mining) — cache both so the
+        # extract/label chain runs once. On a real cluster these are
         # the materialized intermediate Iceberg tables (SURVEY §4).
         tokens = _cached(extract_tokens(pages, english_only=True))
+        if stages_out is not None:
+            stages_out["tokens"] = tokens
         labeled = (
             label_tokens(tokens)
             if labeler == "window"
@@ -397,14 +303,29 @@ def build_kg(
 
         labeled = apply_parent_constraint(labeled, tokens)
         spans = _cached(resolve_span_names(assemble_spans(labeled)))
-        citations = paper_citations(tokens)
-        # two consumers (intra + extra cite branches) — cache so the
-        # mention mining UDF runs once over the span table
-        mentions = _cached(mine_mentions(spans))
-        if stages_out is not None:
-            stages_out.update(
-                tokens=tokens, spans=spans, mentions=mentions, citations=citations
+        # the same fused shape extract_spans emits: one row per span,
+        # mention and doc-wide citation anchor, told apart by `kind`
+        mentions = mine_mentions(spans).withColumnRenamed("kind", "ref_kind")
+        fused = (
+            spans.select("url", "group", "label", "text", "own_name")
+            .withColumn("kind", F.lit("span"))
+            .unionByName(
+                mentions.withColumn("kind", F.lit("mention")),
+                allowMissingColumns=True,
             )
+            .unionByName(
+                paper_citations(tokens).withColumn("kind", F.lit("cite")),
+                allowMissingColumns=True,
+            )
+        )
+    if stages_out is not None:
+        # the assembly consumes fused exactly ONCE — caching it only for
+        # the lineage hook keeps the repartition's HashPartitioning(url)
+        # statically visible otherwise, so the triple rollup plans with
+        # NO exchange (a cached plan hides its partitioning behind
+        # AdaptiveSparkPlan until materialized)
+        fused = _cached(fused)
+        stages_out["fused"] = fused
     if dico is None:
         if join_strategy == "broadcast":
             # a broadcast-sized dictionary is canonicalized on the driver
@@ -412,14 +333,8 @@ def build_kg(
             # and the small driver-built frame it yields needs no cache
             dico = load_dico(spark, entity_dict.collect())
         else:
-            # consumed by the salted joins of two branches — cache it so
-            # the CC canonicalization runs once
-            dico = _cached(canonicalize_dict(entity_dict))
-    if labeler == "fused" and join_strategy == "broadcast":
-        # single-pass assembly: one scan of the fused cache, one
-        # broadcast join, rollup exchange-free (see build_triples_fused)
-        return build_triples_fused(fused, dico)
-    return build_triples(spans, mentions, citations, dico, join_strategy=join_strategy)
+            dico = canonicalize_dict(entity_dict)
+    return build_triples(fused, dico, join_strategy)
 
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
@@ -443,17 +358,17 @@ def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
 
 LINEAGE_SCHEMA = "stage string, partition_id int, rows long, urls long, wall_ms long"
 
-# build_kg's per-kind projections of the fused table, by stage name
+# the fused table's row kinds, by the lineage stage name each reports as
 FUSED_KINDS = {"spans": "span", "mentions": "mention", "citations": "cite"}
 
 
 def _fused_lineage(fused: DataFrame) -> list[tuple[str, int, int, int]]:
-    """(stage, partition_id, rows, urls) of 'fused' and its three kind
-    projections from ONE groupBy over the cached fused table. The
-    projections are narrow filters, so their partition ids are fused's;
+    """(stage, partition_id, rows, urls) of 'fused' and of its three row
+    kinds from ONE groupBy over the cached fused table. A kind's rows
+    are a narrow filter of fused, so their partition ids are fused's;
     approx_count_distinct skips the NULLs the kind condition leaves, so
-    every count equals ``lineage_rows`` over the projection. A kind
-    absent from a partition gets no row there, as its own groupBy would."""
+    every count equals ``lineage_rows`` over that filter. A kind absent
+    from a partition gets no row there, as its own groupBy would."""
     kind, url = F.col("kind"), F.col("url")
     aggs = [
         F.count(F.lit(1)).alias("fused_rows"),
@@ -477,21 +392,19 @@ def stage_lineage(spark: SparkSession, stages: dict[str, DataFrame]) -> DataFram
     """Materialize per-partition lineage for every exposed stage, with a
     per-stage wall-ms measured around that stage's lineage action.
 
-    Attribution note: stages is insertion-ordered with the cached
-    materialization stage ('fused'/'tokens') FIRST, so its wall-ms
-    carries the extraction cost. In the fused path the spans, mentions
-    and citations counts ride the fused stage's single pass, so those
-    three derived stages record wall_ms 0; every other stage (triples,
-    and each stage of the window path) runs its own action over the warm
-    cache and measures only that work. Output is tiny (#stages x
-    #partitions rows), assembled driver-side so the measured walls ride
-    along exactly."""
+    Attribution note: stages is insertion-ordered with the first cached
+    materialization stage ('tokens' on the token path, else 'fused')
+    FIRST, so its wall-ms carries the extraction cost. The spans,
+    mentions and citations counts ride the fused stage's single pass,
+    so those three derived stages record wall_ms 0; every other stage
+    (tokens, triples) runs its own action over the warm cache and
+    measures only that work. Output is tiny (#stages x #partitions
+    rows), assembled driver-side so the measured walls ride along
+    exactly."""
     import time
 
     rows = []
     for name, df in stages.items():
-        if name in FUSED_KINDS and "fused" in stages:
-            continue  # counted by the fused pass
         t0 = time.time()
         if name == "fused":
             part = _fused_lineage(df)
