@@ -5,9 +5,13 @@ import os
 
 from theoremkb_spark.corpus.generator import build_corpus, entity_dict_rows
 from theoremkb_spark.corpus.oracle import oracle_triples
-from theoremkb_spark.io.catalog import CheckpointedTripleStore, run_incremental
+from theoremkb_spark.io.catalog import (
+    CheckpointedTripleStore,
+    recommit_urls,
+    run_incremental,
+)
 from theoremkb_spark.pipeline.extract import load_pages
-from theoremkb_spark.pipeline.runner import load_entity_dict
+from theoremkb_spark.pipeline.runner import TRIPLE_COLS, load_entity_dict
 
 N = 24
 
@@ -101,13 +105,13 @@ def test_url_ledger_compaction_bounds_read_paths(spark, tmp_path):
 
     # 12 tiny batches, compacting every 4
     while True:
-        before = store._compaction()
+        before = store._generation("url_ledger")
         bid = run_incremental(spark, pages, ents, store, limit=2)
         if bid == -1:
             break
         store.compact_url_ledger(spark, min_batches=4)
 
-    comp = store._compaction()
+    comp = store._generation("url_ledger")
     assert comp["path"] is not None and comp["upto_batch"] >= 0
     pending = [m for m in store.manifests() if m["batch_id"] > comp["upto_batch"]]
     assert len(pending) < 4  # read path bounded
@@ -192,8 +196,6 @@ def test_recommit_supersedes_earlier_triples(spark, tmp_path):
     and compaction bakes the supersede in."""
     from pyspark.sql import functions as F
 
-    from theoremkb_spark.io.catalog import recommit_urls
-
     pages = load_pages(spark, N)
     ents = load_entity_dict(spark, N)
     store = CheckpointedTripleStore(str(tmp_path / "kg"))
@@ -254,6 +256,9 @@ def test_lineage_reconciles_across_stages(spark, tmp_path):
     store = CheckpointedTripleStore(str(tmp_path / "kg_lin"))
     run_incremental(spark, pages, ents, store, limit=10)
     run_incremental(spark, pages, ents, store)
+    # a re-crawl batch commits through the same path, with the same stages
+    recrawl = pages.select("url").orderBy("url").limit(4)
+    assert recommit_urls(spark, pages, ents, store, urls=recrawl) == 2
 
     totals: dict = defaultdict(int)
     walls: dict = {}
@@ -262,7 +267,7 @@ def test_lineage_reconciles_across_stages(spark, tmp_path):
         walls[(r.batch_id, r.stage)] = r.wall_ms
 
     batches = {b for b, _s in totals}
-    assert batches == {0, 1}
+    assert batches == {0, 1, 2}
     expected_stages = {"fused", "spans", "mentions", "citations", "triples"}
     for b in batches:
         assert {s for bb, s in totals if bb == b} == expected_stages
@@ -275,6 +280,86 @@ def test_lineage_reconciles_across_stages(spark, tmp_path):
         assert all(
             walls[(b, s)] is not None and walls[(b, s)] >= 0 for s in expected_stages
         )
+
+
+_TRIPLE_SCHEMA = "subj string, pred string, obj string, url string, group long"
+
+
+def _hand_committed_store(spark, path, n):
+    """``n`` one-url batches committed by hand (no KG build), a triple
+    compaction after the first, then one re-crawl of the first url."""
+    store = CheckpointedTripleStore(path)
+    for i in range(n):
+        url = spark.createDataFrame([(f"u{i}",)], "url string")
+        store.commit_batch(
+            spark.createDataFrame([("s", "p", f"o{i}", f"u{i}", i)], _TRIPLE_SCHEMA),
+            url,
+        )
+        if i == 0:
+            assert store.compact_triples(spark, min_batches=1)
+    first = spark.createDataFrame([("u0",)], "url string")
+    store.commit_batch(
+        spark.createDataFrame([("s", "p", "new", "u0", 0)], _TRIPLE_SCHEMA),
+        first,
+        supersedes_urls=first,
+    )
+    return store
+
+
+def _plan_counts(df) -> tuple[int, int]:
+    """(parquet relations, joins) of the optimized plan."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return (
+        len(re.findall(r"Relation \S*\[[^\n]*\] parquet", plan)),
+        len(re.findall(r"\bJoin ", plan)),
+    )
+
+
+def test_read_plan_shape_does_not_grow_with_history(spark, tmp_path):
+    """read_triples plans one batch scan (plus the compacted generation)
+    and one supersede anti-join however many batches the store holds,
+    for the current read and a time-travel read that sees the re-crawl.
+    (Catalyst may push the anti-join through the union; the counts stay
+    constant either way.)"""
+    shapes = {}
+    for n in (1, 4, 16):
+        store = _hand_committed_store(spark, str(tmp_path / f"kg{n}"), n)
+        current = store.read_triples(spark)
+        as_of = store.read_triples(spark, as_of_batch=n)
+        shapes[n] = (_plan_counts(current), _plan_counts(as_of))
+        expected = {("s", "p", "new", "u0", 0)} | {
+            ("s", "p", f"o{i}", f"u{i}", i) for i in range(1, n)
+        }
+        for df in (current, as_of):
+            rows = [(r.subj, r.pred, r.obj, r.url, r.group) for r in df.collect()]
+            assert sorted(rows) == sorted(expected), (n, rows)
+    assert shapes[1] == shapes[4] == shapes[16], shapes
+    assert all(joins >= 1 for _relations, joins in shapes[1]), shapes
+
+
+def test_read_columns_are_triple_cols(spark, tmp_path):
+    """Every read returns TRIPLE_COLS in order, whatever the store's
+    history: after a re-crawl, after a compaction, and after another
+    re-crawl on top of the compacted generation."""
+    store = _hand_committed_store(spark, str(tmp_path / "kg"), 3)
+
+    def assert_columns():
+        last = store.next_batch_id() - 1
+        for as_of in (None, 0, last):
+            assert store.read_triples(spark, as_of_batch=as_of).columns == TRIPLE_COLS
+
+    assert_columns()
+    assert store.compact_triples(spark, min_batches=1)
+    assert_columns()
+    again = spark.createDataFrame([("u1",)], "url string")
+    store.commit_batch(
+        spark.createDataFrame([("s", "p", "again", "u1", 1)], _TRIPLE_SCHEMA),
+        again,
+        supersedes_urls=again,
+    )
+    assert_columns()
 
 
 def test_iceberg_adapter_gating_and_factory(spark, tmp_path):

@@ -9,10 +9,19 @@ emulated on plain parquet with an atomic manifest protocol:
 * each batch writes to its own directory ``triples/batch=<n>/``;
 * the batch becomes VISIBLE only when its manifest JSON is atomically
   renamed into ``manifest/`` (os.replace — the "snapshot commit");
-* readers union only manifested batches;
+* readers scan only manifested batches, all in ONE scan whose
+  ``batch=<n>`` directories yield each row's batch id, and apply every
+  re-crawl with ONE anti-join under Iceberg v2's equality-delete rule: a
+  superseded url dies in every batch with a LOWER id;
 * resume anti-joins the input against the urls of manifested batches
   (the J8 anti-join-resume pattern, SURVEY §2.3) — a killed run leaves an
-  unmanifested directory that the retry simply overwrites.
+  unmanifested directory that the retry simply overwrites;
+* the triples and the url ledger compact through one generation-pointer
+  protocol: write the folded generation, then atomically swap its
+  pointer JSON.
+
+Every ingest path (``run_incremental``, ``recommit_urls`` and the
+streaming micro-batch) commits through ``_build_and_commit``.
 
 This gives exactly-once output under kill-and-rerun without Iceberg,
 and swaps to ``df.writeTo(table).append()`` untouched when the jars are
@@ -27,9 +36,14 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..pipeline.runner import TRIPLE_COLS, build_kg, release_caches, stage_lineage
+
+_NO_GENERATION = {"upto_batch": -1, "path": None}
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -66,153 +80,126 @@ class CheckpointedTripleStore:
         ms = self.manifests()
         return 1 + max((m["batch_id"] for m in ms), default=-1)
 
-    # -- read side ------------------------------------------------------
-    def _triple_compaction(self) -> dict:
-        path = os.path.join(self.out_dir, "triples_compaction.json")
+    # -- compacted generations (the triples and the url ledger) ----------
+    def _generation(self, kind: str) -> dict:
+        """The pointer to ``kind``'s compacted generation: every batch up
+        to ``upto_batch`` is folded into the parquet at ``path``."""
+        path = os.path.join(self.out_dir, f"{kind}_compaction.json")
         if os.path.exists(path):
             with open(path) as f:
                 return json.load(f)
-        return {"upto_batch": -1, "path": None}
+        return _NO_GENERATION
 
+    def _compact(
+        self, kind: str, min_batches: int, current: Callable[[], DataFrame]
+    ) -> bool:
+        """Fold ``current()``, the current read of ``kind``, into a new
+        generation once ``min_batches`` batches have committed since the
+        last one. Crash-safe: the generation directory is written first,
+        then the pointer JSON is swapped in with an atomic os.replace, so
+        readers see the old or the new generation, never a partial one.
+        The per-batch files stay on disk, still referenced by their
+        manifests for lineage and time travel — only the CURRENT read
+        path narrows."""
+        folded = self._generation(kind)["upto_batch"]
+        pending = [m["batch_id"] for m in self.manifests() if m["batch_id"] > folded]
+        if len(pending) < min_batches:
+            return False
+        upto = max(pending)
+        gen_dir = os.path.join(self.out_dir, f"{kind}_compacted/gen={upto}")
+        current().write.mode("overwrite").parquet(gen_dir)
+        tmp = os.path.join(self.out_dir, f".{kind}-{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump({"upto_batch": upto, "path": gen_dir}, f)
+        os.replace(tmp, os.path.join(self.out_dir, f"{kind}_compaction.json"))
+        return True
+
+    # -- read side ------------------------------------------------------
     def read_triples(
         self, spark: SparkSession, as_of_batch: int | None = None
     ) -> DataFrame:
-        """Union of the committed snapshots, minus rows superseded by a
-        later re-crawl batch (Iceberg row-level-delete emulation: a
-        manifest's ``supersedes_urls_path`` lists urls whose triples
-        from EARLIER batches are dead). ``as_of_batch`` is the
-        time-travel read (`VERSION AS OF`): only snapshots — and only
-        supersedes — with batch_id <= as_of_batch apply, so a pinned
-        historical view still shows the pre-re-crawl rows. Time-travel
-        reads always use the original per-batch files; current reads
-        substitute the compacted generation for everything up to the
-        last compaction point (the compacted gen was written from an
-        already-supersede-filtered read, so older supersedes are baked
-        in; only supersedes from batches after the compaction point
-        need re-applying)."""
-        comp = (
-            self._triple_compaction()
-            if as_of_batch is None
-            else {"upto_batch": -1, "path": None}
-        )
+        """The visible triples, in ``TRIPLE_COLS`` order, as one plan
+        whose shape does not grow with the store's history.
+
+        The visible batches are read in ONE scan based at ``triples/``,
+        so partition discovery tags each row with its ``batch`` id; a
+        current read also unions the compacted generation, tagged with
+        its ``upto_batch``, in place of the batches it folded. Re-crawls
+        then apply through ONE broadcast anti-join under Iceberg v2's
+        equality-delete rule: a url in a manifest's
+        ``supersedes_urls_path`` kills that url's rows in every batch
+        with a LOWER id (row-level-delete emulation). With no visible
+        supersede there is no join.
+
+        ``as_of_batch`` is the time-travel read (``VERSION AS OF``): only
+        batches — and supersedes — with batch_id <= as_of_batch are
+        visible, so a pinned historical view still shows the
+        pre-re-crawl rows. It reads the original per-batch files. The
+        compacted generation serves current reads only; it was written
+        from a supersede-filtered read, so a supersede it folded has no
+        lower-id row left to kill and is not re-applied."""
+        gen = self._generation("triples") if as_of_batch is None else _NO_GENERATION
         visible = [
             m
             for m in self.manifests()
-            if as_of_batch is None or m["batch_id"] <= as_of_batch
+            if m["batch_id"] > gen["upto_batch"]
+            and (as_of_batch is None or m["batch_id"] <= as_of_batch)
         ]
-        # supersedes at or below the compaction point only affect batches
-        # older than themselves — all folded into the compacted gen — so
-        # they must not disable the fast path forever after a compaction
-        if not any(
-            m.get("supersedes_urls_path")
-            for m in visible
-            if m["batch_id"] > comp["upto_batch"]
-        ):
-            # fast path (no re-crawls past the compaction point): one
-            # multi-path scan, no per-batch plans
-            paths = [
-                m["triples_path"]
-                for m in visible
-                if m["batch_id"] > comp["upto_batch"]
-            ]
-            if comp["path"]:
-                paths.append(comp["path"])
-            if not paths:
-                return spark.createDataFrame(
-                    [],
-                    "subj string, pred string, obj string, url string, group long",
-                )
-            return spark.read.parquet(*paths)
         parts = []
-        for m in visible:
-            if m["batch_id"] <= comp["upto_batch"]:
-                continue
-            df = spark.read.parquet(m["triples_path"])
-            dead = [
-                s["supersedes_urls_path"]
-                for s in visible
-                if s["batch_id"] > m["batch_id"] and s.get("supersedes_urls_path")
-            ]
-            if dead:
-                df = df.join(
-                    F.broadcast(spark.read.parquet(*dead).select("url").distinct()),
-                    "url",
-                    "left_anti",
+        if visible:
+            parts.append(
+                spark.read.option("basePath", os.path.join(self.out_dir, "triples"))
+                .parquet(*[m["triples_path"] for m in visible])
+            )
+        if gen["path"]:
+            parts.append(
+                spark.read.parquet(gen["path"]).withColumn(
+                    "batch", F.lit(gen["upto_batch"])
                 )
-            parts.append(df)
-        if comp["path"]:
-            df = spark.read.parquet(comp["path"])
-            dead = [
-                s["supersedes_urls_path"]
-                for s in visible
-                if s["batch_id"] > comp["upto_batch"]
-                and s.get("supersedes_urls_path")
-            ]
-            if dead:
-                df = df.join(
-                    F.broadcast(spark.read.parquet(*dead).select("url").distinct()),
-                    "url",
-                    "left_anti",
-                )
-            parts.append(df)
+            )
         if not parts:
             return spark.createDataFrame(
                 [], "subj string, pred string, obj string, url string, group long"
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        dead = [
+            m["supersedes_urls_path"] for m in visible if m.get("supersedes_urls_path")
+        ]
+        if dead:
+            sup = spark.read.option(
+                "basePath", os.path.join(self.out_dir, "supersedes")
+            ).parquet(*dead)
+            sup = sup.select(
+                F.col("url").alias("dead_url"), F.col("batch").alias("dead_batch")
+            )
+            rows = rows.join(
+                F.broadcast(sup),
+                (F.col("url") == F.col("dead_url"))
+                & (F.col("dead_batch") > F.col("batch")),
+                "left_anti",
+            )
+        return rows.select(*TRIPLE_COLS)
 
-    def compact_triples(
-        self,
-        spark: SparkSession,
-        min_batches: int = 16,
-        target_partitions: int | None = None,
-    ) -> bool:
-        """Fold the committed per-batch triple files into one compacted
-        generation (Iceberg ``rewrite_data_files`` analog). At 100 TB an
-        incremental ingest commits thousands of small snapshots; without
-        compaction every consumer scan pays the per-file open/footer cost
-        and the driver pays O(files) listing. Crash-safe like the url
-        ledger: write the generation directory, then atomically swap the
-        pointer JSON; originals stay on disk so manifests and time-travel
-        reads are untouched — only the CURRENT read path narrows."""
-        comp = self._triple_compaction()
-        pending = [m for m in self.manifests() if m["batch_id"] > comp["upto_batch"]]
-        if len(pending) < min_batches:
-            return False
-        upto = max(m["batch_id"] for m in pending)
-        gen_dir = os.path.join(self.out_dir, f"triples_compacted/gen={upto}")
-        current = self.read_triples(spark)
-        if target_partitions:
-            current = current.repartition(target_partitions, F.col("url"))
-        current.write.mode("overwrite").parquet(gen_dir)
-        tmp = os.path.join(self.out_dir, f".tcomp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"upto_batch": upto, "path": gen_dir}, f)
-        os.replace(tmp, os.path.join(self.out_dir, "triples_compaction.json"))
-        return True
-
-    def _compaction(self) -> dict:
-        path = os.path.join(self.out_dir, "url_ledger_compaction.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                return json.load(f)
-        return {"upto_batch": -1, "path": None}
+    def compact_triples(self, spark: SparkSession, min_batches: int = 16) -> bool:
+        """Fold the current triple read into one compacted generation
+        (Iceberg ``rewrite_data_files`` analog). At 100 TB an incremental
+        ingest commits thousands of small snapshots; without compaction
+        every consumer scan pays the per-file open/footer cost and the
+        driver pays O(files) listing. Time-travel reads are untouched."""
+        return self._compact("triples", min_batches, lambda: self.read_triples(spark))
 
     def processed_urls(self, spark: SparkSession) -> DataFrame:
         """Union of the compacted url ledger (everything up to the last
         compaction point) and the per-batch url files after it — the
         read side stays O(batches since compaction), not O(history)."""
-        comp = self._compaction()
+        gen = self._generation("url_ledger")
         paths = [
             m["urls_path"]
             for m in self.manifests()
-            if m["batch_id"] > comp["upto_batch"]
+            if m["batch_id"] > gen["upto_batch"]
         ]
-        if comp["path"]:
-            paths.append(comp["path"])
+        if gen["path"]:
+            paths.append(gen["path"])
         if not paths:
             return spark.createDataFrame([], "url string")
         return spark.read.parquet(*paths).select("url").distinct()
@@ -220,32 +207,13 @@ class CheckpointedTripleStore:
     def compact_url_ledger(
         self, spark: SparkSession, min_batches: int = 16
     ) -> bool:
-        """Fold all committed per-batch url files into ONE compacted
-        parquet once ``min_batches`` have accumulated since the last
-        compaction (VERDICT r1: the anti-join ledger otherwise rereads
-        every historical batch per micro-batch — linear growth that a
-        long-lived incremental ingest cannot afford at 100 TB).
-
-        Crash-safe: the compacted file is written to a fresh
-        generation directory first, then the pointer JSON is swapped
-        with an atomic os.replace; readers see either the old or the
-        new generation, never a partial one. Old batch files stay on
-        disk (still referenced by their manifests for lineage) — only
-        the READ path narrows."""
-        comp = self._compaction()
-        pending = [m for m in self.manifests() if m["batch_id"] > comp["upto_batch"]]
-        if len(pending) < min_batches:
-            return False
-        upto = max(m["batch_id"] for m in pending)
-        gen_dir = os.path.join(self.out_dir, f"urls_compacted/gen={upto}")
-        self.processed_urls(spark).repartition(1).write.mode("overwrite").parquet(
-            gen_dir
+        """Fold the url ledger into ONE compacted parquet (VERDICT r1:
+        the anti-join ledger otherwise rereads every historical batch per
+        micro-batch — linear growth that a long-lived incremental ingest
+        cannot afford at 100 TB)."""
+        return self._compact(
+            "url_ledger", min_batches, lambda: self.processed_urls(spark).repartition(1)
         )
-        tmp = os.path.join(self.out_dir, f".ledger-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"upto_batch": upto, "path": gen_dir}, f)
-        os.replace(tmp, os.path.join(self.out_dir, "url_ledger_compaction.json"))
-        return True
 
     def read_lineage(self, spark: SparkSession) -> DataFrame:
         """The committed per-batch lineage as one queryable table:
@@ -311,6 +279,53 @@ class CheckpointedTripleStore:
         return batch_id
 
 
+def _build_and_commit(
+    spark: SparkSession,
+    store: CheckpointedTripleStore,
+    pages: DataFrame,
+    urls: DataFrame,
+    entity_dict: DataFrame | None = None,
+    dico: DataFrame | None = None,
+    supersede: bool = False,
+) -> int:
+    """Build the KG of ``pages`` and commit it as one batch that marks
+    ``urls`` processed — including zero-triple and non-English docs,
+    which would otherwise be reprocessed forever — and, with
+    ``supersede``, re-crawled. The one commit path of every ingest.
+
+    The batch commits a per-STAGE, per-partition lineage table (fused /
+    spans / mentions / citations / triples — row counts, distinct urls,
+    and per-stage wall-ms) through the store's atomic manifest, so an
+    operator can reconcile row counts across the whole pipeline for any
+    batch from the committed data alone (north rule: per-partition
+    lineage + metrics). The cached intermediates are released before
+    the url-ledger and triple compactions run, so looped callers never
+    accumulate cached blocks."""
+    caches: list[DataFrame] = []
+    if supersede:
+        # the url file and the supersedes file both read it: compute once
+        urls = urls.cache()
+        caches.append(urls)
+    stages: dict[str, DataFrame] = {}
+    triples = build_kg(
+        spark, pages, entity_dict, dico=dico, cache_registry=caches, stages_out=stages
+    ).cache()  # two consumers: the commit write + the triples lineage row
+    caches.append(triples)
+    stages["triples"] = triples
+    try:
+        batch_id = store.commit_batch(
+            triples,
+            urls,
+            stage_lineage(spark, stages),
+            supersedes_urls=urls if supersede else None,
+        )
+    finally:
+        release_caches(caches)
+    store.compact_url_ledger(spark)
+    store.compact_triples(spark)
+    return batch_id
+
+
 def run_incremental(
     spark: SparkSession,
     pages: DataFrame,
@@ -318,20 +333,12 @@ def run_incremental(
     store: CheckpointedTripleStore,
     limit: int | None = None,
 ) -> int:
-    """Process only not-yet-committed documents; returns the batch id or -1
-    when nothing is left to do. ``limit`` caps the batch (test hook for the
-    kill-and-rerun scenario); its at most ``limit`` urls are collected to
-    the driver once, while ``limit=None`` keeps the todo set lazy.
-
-    Every batch commits a per-STAGE, per-partition lineage table
-    (extraction / spans / mentions / citations / triples — row counts,
-    distinct urls, and per-stage wall-ms) through the store's atomic
-    manifest, so an operator can reconcile row counts across the whole
-    pipeline for any batch from the committed data alone (north rule:
-    per-partition lineage + metrics). Queryable via
-    ``store.read_lineage(spark)``."""
-    from ..pipeline.runner import build_kg, release_caches, stage_lineage
-
+    """Process only not-yet-committed documents through
+    ``_build_and_commit``; returns the batch id or -1 when nothing is
+    left to do. ``limit`` caps the batch (test hook for the
+    kill-and-rerun scenario); its at most ``limit`` urls are collected
+    to the driver once, while ``limit=None`` keeps the todo set lazy.
+    The committed lineage is queryable via ``store.read_lineage(spark)``."""
     done = store.processed_urls(spark)
     todo = pages.join(done, "url", "left_anti")
     if limit is None:
@@ -347,23 +354,7 @@ def run_incremental(
             return -1
         urls = spark.createDataFrame([(r.url,) for r in picked], "url string")
         todo = pages.join(F.broadcast(urls), "url", "left_semi")
-    caches: list[DataFrame] = []
-    stages: dict[str, DataFrame] = {}
-    triples = build_kg(
-        spark, todo, entity_dict, cache_registry=caches, stages_out=stages
-    ).cache()  # two consumers: the commit write + the triples lineage row
-    caches.append(triples)
-    try:
-        stages["triples"] = triples
-        # mark every attempted url as processed — including zero-triple and
-        # non-English docs, otherwise they would be reprocessed forever
-        batch_id = store.commit_batch(triples, urls, stage_lineage(spark, stages))
-    finally:
-        # looped callers would otherwise accumulate cached blocks forever
-        release_caches(caches)
-    store.compact_url_ledger(spark)
-    store.compact_triples(spark)
-    return batch_id
+    return _build_and_commit(spark, store, todo, urls, entity_dict)
 
 
 def recommit_urls(
@@ -374,14 +365,13 @@ def recommit_urls(
     urls: DataFrame | None = None,
 ) -> int:
     """Re-crawl path: reprocess ``urls`` (default: every url in
-    ``pages``) REGARDLESS of the resume ledger and commit the result as
-    a superseding batch — earlier triples for those urls disappear from
-    current reads atomically at manifest commit, while pinned
-    time-travel reads still serve the pre-re-crawl view. This is the
-    UPDATE half the append-only ledger cannot express: changed page
+    ``pages``) REGARDLESS of the resume ledger and commit the result
+    through ``_build_and_commit`` as a superseding batch, with the same
+    per-stage lineage as any batch — earlier triples for those urls
+    disappear from current reads atomically at manifest commit, while
+    pinned time-travel reads still serve the pre-re-crawl view. This is
+    the UPDATE half the append-only ledger cannot express: changed page
     content flows through without replaying the whole corpus."""
-    from ..pipeline.runner import build_kg, lineage_rows, release_caches
-
     todo = (
         pages
         if urls is None
@@ -389,23 +379,6 @@ def recommit_urls(
     )
     if todo.isEmpty():
         return -1
-    caches: list[DataFrame] = []
-    # one url frame for the url file and the supersedes file, cached so
-    # the pages semi-join is scanned once, not once per file
-    todo_urls = todo.select("url").cache()
-    caches.append(todo_urls)
-    # cache the FINAL triples (tiny), not the pipeline intermediates:
-    # commit_batch runs two actions over them (parquet write + lineage)
-    # and the single-pass fused assembly is otherwise uncached
-    triples = build_kg(spark, todo, entity_dict, cache_registry=caches).cache()
-    caches.append(triples)
-    try:
-        batch_id = store.commit_batch(
-            triples,
-            todo_urls,
-            lineage_rows(triples, "triples"),
-            supersedes_urls=todo_urls,
-        )
-    finally:
-        release_caches(caches)
-    return batch_id
+    return _build_and_commit(
+        spark, store, todo, todo.select("url"), entity_dict, supersede=True
+    )

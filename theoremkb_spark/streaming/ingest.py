@@ -9,11 +9,13 @@ stream with ``Trigger.AvailableNow``:
 * ``readStream`` over the pages directory discovers unprocessed FILES
   through the stream checkpoint (offset log) — restart-safe without
   rescanning committed data;
-* each micro-batch runs the same fused KG pipeline (``build_kg``) and
-  commits one atomic snapshot to the ``CheckpointedTripleStore`` inside
-  ``foreachBatch`` — the store's manifest protocol makes the sink
-  idempotent at batch granularity, so a batch replayed after a crash
-  between sink-commit and offset-commit dedups on the url anti-join;
+* each micro-batch commits one atomic snapshot to the
+  ``CheckpointedTripleStore`` inside ``foreachBatch``, through the same
+  build-and-commit path as ``run_incremental`` (per-stage lineage, then
+  url-ledger and triple compaction) — the store's manifest protocol
+  makes the sink idempotent at batch granularity, so a batch replayed
+  after a crash between sink-commit and offset-commit dedups on the url
+  anti-join;
 * ``Trigger.AvailableNow`` drains the backlog and stops, so the same
   entrypoint serves both one-shot backfill and a cron-style incremental
   ingest. Swapping the trigger for a processing-time one turns it into
@@ -23,11 +25,9 @@ stream with ``Trigger.AvailableNow``:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..io.catalog import CheckpointedTripleStore
+from ..io.catalog import CheckpointedTripleStore, _build_and_commit
 from ..pipeline.extract import PAGES_SCHEMA
-from ..pipeline.runner import build_kg, lineage_rows, release_caches
 
 
 def stream_pages_to_store(
@@ -61,22 +61,7 @@ def stream_pages_to_store(
         todo = batch_df.join(store.processed_urls(spark), "url", "left_anti")
         if todo.isEmpty():
             return
-        caches: list[DataFrame] = []
-        # cache the final triples: commit_batch runs two actions over
-        # them (write + lineage) and the fused assembly is uncached
-        triples = build_kg(spark, todo, dico=dico, cache_registry=caches).cache()
-        caches.append(triples)
-        try:
-            store.commit_batch(
-                triples, todo.select("url"), lineage_rows(triples, "triples")
-            )
-        finally:
-            # one stream can run thousands of micro-batches: cached
-            # stage intermediates must not outlive their batch
-            release_caches(caches)
-        # bound the anti-join ledger: O(batches since compaction),
-        # not O(stream history)
-        store.compact_url_ledger(spark)
+        _build_and_commit(spark, store, todo, todo.select("url"), dico=dico)
         committed["n"] += 1
 
     query = (
