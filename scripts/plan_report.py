@@ -35,7 +35,7 @@ def main() -> None:
     from theoremkb_spark.queries_docs import QUERIES_DOCS
     from theoremkb_spark.session import get_spark
 
-    spark = get_spark("plan_report", cpus=8, shuffle_partitions=8)
+    spark = get_spark("plan_report", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     registry = {**QUERIES_CORE, **QUERIES_DOCS}
 

@@ -5,7 +5,7 @@ import pytest
 def spark():
     from theoremkb_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", cpus=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -10,11 +10,9 @@ not a 100 TB run.
 
 import re
 
-from pyspark.sql import functions as F
+import pytest
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from theoremkb_spark.plancheck import plan_facts, plan_string
 
 
 def _exchange_ids(plan: str) -> set[str]:
@@ -59,7 +57,7 @@ def test_kg_plan_shape(spark, tmp_path):
     load_pages(spark, 24).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     ents = load_entity_dict(spark, 24)
-    plan = _plan(build_kg(spark, pages, ents))
+    plan = plan_string(build_kg(spark, pages, ents))
 
     # page scan: pruned to exactly (url, html, lang), english filter pushed
     scans = re.findall(r"FileScan parquet \[([^\]]*)\][^\n]*", plan)
@@ -117,13 +115,14 @@ def test_kg_plan_shape(spark, tmp_path):
 
     # every labeler and dictionary regime shares that one assembly; the
     # salted regime's dictionary attach is exactly one salted join
-    salted = _plan(build_kg(spark, pages, ents, join_strategy="salted"))
+    salted = plan_string(build_kg(spark, pages, ents, join_strategy="salted"))
     _assert_one_triple_explode(salted)
     salted_joins = re.findall(
         r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[[^\n]*_salt", salted
     )
     assert len(salted_joins) == 1, salted
-    _assert_one_triple_explode(_plan(build_kg(spark, pages, ents, labeler="window")))
+    window = plan_string(build_kg(spark, pages, ents, labeler="window"))
+    _assert_one_triple_explode(window)
 
 
 def test_fuzzy_link_plan_broadcasts_dictionary(spark, caches):
@@ -135,7 +134,7 @@ def test_fuzzy_link_plan_broadcasts_dictionary(spark, caches):
     dictionary = spark.createDataFrame(
         [(i, f"dictionary text number {i}") for i in range(50)], "id long, key string"
     )
-    plan = _plan(fuzzy_link_lsh(mentions, dictionary, cache_registry=caches))
+    plan = plan_string(fuzzy_link_lsh(mentions, dictionary, cache_registry=caches))
     # the bucket join broadcasts the banded dictionary rows (round 6:
     # NARROW id/band/sig rows — the sz/sset arrays attach to the deduped
     # candidate pairs afterwards, guide-§8 style). The two attach joins
@@ -173,7 +172,7 @@ def test_scan_pruning_on_docs_queries(spark):
     the scan must not read the other document columns."""
     from theoremkb_spark.queries_docs import q_text_stats
 
-    plan = _plan(q_text_stats(spark, "/root/testdata/sf0.001"))
+    plan = plan_string(q_text_stats(spark, "/root/testdata/sf0.001"))
     scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
     assert scans, plan
     for s in scans:
@@ -189,8 +188,6 @@ def test_scan_pruning_on_docs_queries(spark):
 # ann_cosine_topk is the one deliberate exception: its nested-loop join
 # IS the documented brute-force baseline (scale paths: ann_bucketed /
 # ann_ivf, both equi-join only).
-
-import pytest
 
 # query -> (max_exchanges, max_smj, max_cartesian)
 _HEADLINE_BOUNDS = {
@@ -226,7 +223,6 @@ _HEADLINE_BOUNDS = {
 
 @pytest.mark.parametrize("name", sorted(_HEADLINE_BOUNDS))
 def test_headline_plan_invariants(spark, name):
-    from theoremkb_spark.plancheck import plan_facts, plan_string
     from theoremkb_spark.queries import QUERIES_CORE
     from theoremkb_spark.queries_docs import QUERIES_DOCS
 
@@ -242,14 +238,49 @@ def test_headline_plan_invariants(spark, name):
         assert "html" not in cols, (name, cols)
 
 
+# ---- joins.spread: the one fan-out rule for one-row-group scans ----
+#
+# Width = the scan's Catalyst estimate / 75 KB, floored at 1 and capped
+# at the 8 cores of the test session.
+
+
+def _spread_exchange(df) -> str:
+    """The partitioning of the plan's one REPARTITION_BY_NUM exchange,
+    with expression ids stripped."""
+    found = re.findall(r"Exchange (.*), REPARTITION_BY_NUM", plan_string(df))
+    assert len(found) == 1, found
+    return re.sub(r"#\d+L?", "", found[0])
+
+
+@pytest.mark.parametrize(
+    "source, width",
+    [
+        ("sf0.001", 1),  # 65,515 B
+        ("sf0.1", 7),  # 594,568 B
+        ("local", 8),  # driver-local frame: Long.MaxValue
+    ],
+)
+def test_spread_width_follows_input_size(spark, source, width):
+    from theoremkb_spark.operators.joins import spread
+
+    if source == "local":
+        docs = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
+    else:
+        docs = spark.read.parquet(f"/root/testdata/{source}/documents.parquet")
+    keyed = f"hashpartitioning(doc_id, {width})"
+    round_robin = f"RoundRobinPartitioning({width})"
+    if width == 1:  # Spark plans any one-partition exchange as SinglePartition
+        keyed = round_robin = "SinglePartition"
+    assert _spread_exchange(spread(docs, "doc_id")) == keyed
+    assert _spread_exchange(spread(docs)) == round_robin
+
+
 def test_segment_tokens_plan_shape(spark):
     """Distributed U-Net inference is page-local by construction: the
     ONLY exchange is the (url, page) group hash, the input projection
     is pruned to the 11 raster columns, and no join operator of any
     kind appears (weights ride a broadcast VARIABLE, not a join)."""
     import os
-
-    import pytest
 
     from theoremkb_spark.operators.segmentation import (
         default_weights_path, segment_tokens,
@@ -258,7 +289,7 @@ def test_segment_tokens_plan_shape(spark):
 
     if not os.path.exists(default_weights_path()):
         pytest.skip("full-training U-Net artifact not shipped")
-    plan = _plan(segment_tokens(extract_tokens(load_pages(spark, 2))))
+    plan = plan_string(segment_tokens(extract_tokens(load_pages(spark, 2))))
     assert len(_exchange_ids(plan)) == 1, plan
     assert "FlatMapGroupsInPandas" in plan
     for op in ("Join", "Cartesian", "SortMergeJoin", "BroadcastHashJoin"):
@@ -276,7 +307,6 @@ def test_link_resolve_auto_strategy_regimes(spark, tmp_path):
     driver memory; the at-scale inputs are always file-backed and carry
     real file-size estimates."""
     from theoremkb_spark.pipeline.link import _resolve
-    from theoremkb_spark.plancheck import plan_facts, plan_string
 
     dico_local = spark.createDataFrame(
         [("u1", "T1", "c1")], "url string, tag string, pdf_to_canon string"
@@ -311,7 +341,6 @@ def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path, caches):
     broadcast memory. Same rows either way."""
     from theoremkb_spark.pipeline.link import fuzzy_link_lsh
     from theoremkb_spark.pipeline.runner import release_caches
-    from theoremkb_spark.plancheck import plan_string
 
     m = spark.createDataFrame(
         [(1, "lattice kernel meadow"), (2, "vortex plume quartz")],
@@ -352,9 +381,9 @@ def test_sim_tfidf_broadcast_regimes(spark, monkeypatch):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan_small = _plan(qd.q_sim_tfidf_topk(spark, sf))
+        plan_small = plan_string(qd.q_sim_tfidf_topk(spark, sf))
         monkeypatch.setattr(qd, "SIM_TFIDF_BROADCAST_MAX_BYTES", -1)
-        plan_large = _plan(qd.q_sim_tfidf_topk(spark, sf))
+        plan_large = plan_string(qd.q_sim_tfidf_topk(spark, sf))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     # small regime: the df_/probes hints fire as broadcast HASH joins on

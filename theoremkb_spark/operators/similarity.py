@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .joins import spread
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -58,17 +60,15 @@ def cosine_topk(
     sqrt(dot(v,v)) for BOTH vectors on every candidate pair — 3
     interpreted dots per pair where 1 suffices. norm_a * norm_b keeps
     the exact evaluation order, so every score is bit-identical. The
-    corpus side is also spread across cores first: the embeddings table
-    is one parquet row group per ~1M rows, so the dot-product stage
-    would otherwise run in a single scan task (row-group quantization;
-    same artifact as q_text_stats)."""
+    corpus side goes through ``joins.spread`` first, so the dot-product
+    stage does not run in the one task of a one-row-group scan."""
     v = F.col(vec_col).cast("array<double>")
     q = emb.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         _norm(v).alias("qn"),
     )
-    c = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism).select(
+    c = spread(emb).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         _norm(v).alias("cn"),

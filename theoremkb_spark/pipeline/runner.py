@@ -173,7 +173,6 @@ def build_kg(
     spark: SparkSession,
     pages: DataFrame,
     entity_dict: DataFrame | None = None,
-    n_partitions: int | None = None,
     labeler: str = "fused",
     join_strategy: str = "auto",
     dico: DataFrame | None = None,
@@ -231,11 +230,9 @@ def build_kg(
     # html by byte-bounded scan splits, and url-hash spreads documents
     # evenly. Window path: the repartition lands on the PAGES feeding a
     # ~40x larger token table, where scheduler slack around document
-    # skew still pays — keep 4x there. At cluster scale the caller sizes
-    # this by target partition bytes (~128-512 MB) instead.
-    if n_partitions is None:
-        mult = 1 if labeler == "fused" else 4
-        n_partitions = mult * spark.sparkContext.defaultParallelism
+    # skew still pays — keep 4x there.
+    mult = 1 if labeler == "fused" else 4
+    n_partitions = mult * spark.sparkContext.defaultParallelism
 
     if join_strategy == "auto":
         # decide ONCE here, from the RAW dictionary input: the

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.joins import spread
+
 # ---------------------------------------------------------------- helpers
 
 
@@ -56,30 +58,23 @@ def q_agg_pricing_summary(spark, sf):
     associative); measurably faster here and the shape that survives
     100x row counts.
 
-    Round-6 spread: the sf-scale lineitem table arrives as ONE parquet
-    row group, so the whole decimal-dense partial aggregation would run
-    inside the single scan task (row-group quantization caps scan
-    parallelism no matter the split size — the same artifact
-    q_text_stats/q_dedup_ngram_jaccard document). Hash-exchanging the
-    filtered NARROW projection by l_orderkey first moves only the six
-    needed columns (~40 B/row), and the fine groupBy then reuses that
-    partitioning outright (HashPartitioning(l_orderkey) satisfies the
-    (flag, status, orderkey) clustering — no second exchange) so the
-    heavy aggregation runs at full width. At cluster scale the writer's
-    row-group sizing gives the scan real splits and this exchange is
-    the one the fine groupBy would have needed anyway."""
+    The filtered NARROW projection (six columns, ~40 B/row) is spread
+    on l_orderkey first (``joins.spread``: the lineitem scan is one row
+    group), so the decimal-dense partial aggregation runs in parallel,
+    and the fine groupBy reuses that partitioning outright
+    (HashPartitioning(l_orderkey) satisfies the (flag, status, orderkey)
+    clustering — no second exchange)."""
     li = _t(spark, sf, "lineitem")
+    narrow = li.filter(F.col("l_shipdate") <= "1998-09-02").select(
+        "l_returnflag",
+        "l_linestatus",
+        "l_orderkey",
+        "l_quantity",
+        "l_extendedprice",
+        "l_discount",
+    )
     pre = (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            "l_orderkey",
-            "l_quantity",
-            "l_extendedprice",
-            "l_discount",
-        )
-        .repartition(spark.sparkContext.defaultParallelism, F.col("l_orderkey"))
+        spread(narrow, "l_orderkey")
         .groupBy("l_returnflag", "l_linestatus", "l_orderkey")
         .agg(
             F.sum(_money(F.col("l_quantity"))).alias("q"),

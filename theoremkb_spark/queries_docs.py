@@ -16,7 +16,7 @@ from .operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
-from .operators.joins import estimated_bytes, fits_broadcast
+from .operators.joins import fits_broadcast, spread
 from .operators.multimodal import extract_features
 from .operators.similarity import bucketed_ann_topk, cosine_topk, embedding_near_dup_pairs
 from .operators.textquality import (
@@ -64,12 +64,10 @@ def q_text_stats(spark, sf):
       subexpression elimination does not reach across the nested
       when/least branches;
     * the documents table arrives as ONE parquet row group per ~1M rows,
-      so the regex-dense projection would run in a single scan task (the
-      same small-file artifact q_dedup_ngram_jaccard documents:
-      row-group quantization caps scan parallelism no matter the split
-      size). A doc_id-hash exchange of the raw rows buys full-width
-      codegen without round-robin's sort-before-repartition; at cluster
-      scale the writer's row-group sizing makes this a no-op."""
+      so the regex-dense projection would run in a single scan task. The
+      output's own ``orderBy("doc_id")`` runs BEFORE the projection, and
+      its range exchange is what spreads the scan (see the comment
+      below); no separate ``spread`` is needed."""
     from .operators.textquality import (
         _text_counts_udf,
         norm_ws,
@@ -203,19 +201,8 @@ FROM documents GROUP BY 1 ORDER BY fp
 
 
 def q_dedup_ngram_jaccard(spark, sf):
-    # small-file scan artifact: the sf-scale documents table is ONE
-    # parquet split, so the CPU-heavy shingle explode would run in a
-    # single task (measured 3.5 s of a 6 s cold run at sf0.1 — the whole
-    # stage serialized on one core). Spreading the 5k raw doc rows costs
-    # a trivial exchange. doc_id-hash, not round-robin (round 6): unique
-    # ids spread evenly and skip round-robin's sort-before-repartition
-    # pass over the text column (the fix q_dedup_simhash already rides).
-    # At cluster scale the scan itself yields enough byte-bounded splits
-    # and this repartition becomes a no-op to drop.
     caches = _fresh_caches()
-    d = _t(spark, sf, "documents").repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
+    d = spread(_t(spark, sf, "documents"), "doc_id")
     return ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.12, cache_registry=caches
     ).orderBy("id_a", "id_b")
@@ -264,54 +251,20 @@ def q_dedup_minhash_lsh(spark, sf):
     byte-exact vs Spark's xxhash64, pytest-gated), materialized to
     parquet by __spark_entry__; recall vs exact Jaccard is additionally
     pytest-gated."""
-    # same single-split scan artifact as q_dedup_ngram_jaccard: spread
-    # the docs before the shingle explode (doc_id-hash — no round-robin
-    # pre-sort of the text column)
     caches = _fresh_caches()
-    d = _t(spark, sf, "documents").repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
+    d = spread(_t(spark, sf, "documents"), "doc_id")
     return minhash_lsh_pairs(
         d, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.12,
         cache_registry=caches,
     ).orderBy("id_a", "id_b")
 
 
-def _adaptive_spread_width(df, spark, bytes_per_task: int = 75_000) -> int:
-    """Scale-adaptive spread width for the single-row-group demo scans:
-    ~bytes_per_task of (compressed, Catalyst-estimated) input per task,
-    capped at the core count, floored at 1. Derived from input size per
-    the optimization-guide partitioning rule rather than pinned to the
-    local core count: a tiny sf never pays 32 Arrow workers' spin-up
-    for kilobytes of text (measured at sf0.1: width 8 -> 0.31 s vs
-    width 32 -> 0.47 s vs no spread 0.42 s for SimHash), and a big sf
-    saturates the cores (width caps at defaultParallelism). At cluster
-    scale the writer's row-group sizing gives the scan real splits and
-    the spread is a cheap keyed exchange either way. An unknowable
-    estimate (Long.MaxValue, driver-local frames) caps at the core
-    count like any huge one."""
-    return max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            estimated_bytes(df) // bytes_per_task,
-        ),
-    )
-
-
 def q_dedup_simhash(spark, sf):
     """SimHash near-dup pairs (md5-bit-vote Arrow kernel). Oracle: the
     sequential twin in corpus/dedup_oracle.py, materialized to parquet
     by __spark_entry__."""
-    # same single-row-group scan artifact as q_text_stats: without the
-    # spread, the whole Arrow SimHash stage runs in ONE python worker
-    # (row-group quantization, not split size, caps scan parallelism).
-    # doc_id-hash, not round-robin: unique ids spread evenly and skip
-    # round-robin's sort-before-repartition pass over the text column.
-    # Width is input-size-adaptive (round 6), not the core count.
     caches = _fresh_caches()
-    d = _t(spark, sf, "documents")
-    d = d.repartition(_adaptive_spread_width(d, spark), F.col("doc_id"))
+    d = spread(_t(spark, sf, "documents"), "doc_id")
     return simhash_near_dups(
         d, "doc_id", "text", max_hamming=8, cache_registry=caches
     ).orderBy("id_a", "id_b")
@@ -615,13 +568,7 @@ def q_link_fuzzy_lsh(spark, sf):
     from .pipeline.link import fuzzy_link_lsh
 
     caches = _fresh_caches()
-    # small-file scan artifact (same as q_dedup_ngram_jaccard): the
-    # sf-scale documents table arrives as one parquet row group per ~1M
-    # rows, so the key-derivation pass would run in 1-2 scan tasks.
-    # doc_id-hash spread (no round-robin pre-sort) buys full width.
-    d = _t(spark, sf, "documents").select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
+    d = spread(_t(spark, sf, "documents").select("doc_id", "text"), "doc_id")
 
     # Key derivation was 2/3 of the round-5 wall at 10x scale: the JVM
     # regexp_replace scans and REBUILDS the whole ~3 KB text per doc to

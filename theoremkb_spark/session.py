@@ -2,8 +2,7 @@
 
 Local-mode testing runs on ``local[N]``; the same configs are what we would
 ship in spark-defaults on a real cluster (AQE, skew join, Arrow). Shuffle
-partitions default to the core count — at cluster scale the caller passes
-an explicit value sized so post-shuffle partitions stay ~128-512 MB.
+partitions are the core count; ``extra_conf`` overrides any setting.
 """
 
 from __future__ import annotations
@@ -18,15 +17,13 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def get_spark(
     app_name: str = "theoremkb_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
-    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # keep parallelismFirst effective on CPU-dense small-byte stages:
