@@ -44,8 +44,9 @@ def main() -> None:
         "",
         f"Generated by `python scripts/plan_report.py --sf {args.sf}`.",
         "Facts are from the pre-execution physical plan (initial AQE plan);",
-        "'exchanges' counts DISTINCT shuffle exchanges (reused exchanges",
-        "dedup'd by plan_id). Zero cartesian/nested-loop joins and pruned",
+        "'exchanges' counts DISTINCT shuffle exchanges of every partitioning",
+        "(hash, range, round-robin, single; reused exchanges dedup'd by",
+        "plan_id). Zero cartesian/nested-loop joins and pruned",
         "scans are the invariants tests/test_plan_shape.py freezes for the",
         "KG pipeline and fuzzy-link paths. Exception by design:",
         "ann_cosine_topk IS the brute-force baseline — its",
@@ -80,7 +81,7 @@ def main() -> None:
 
     with open(args.out, "w") as fh:
         fh.write("\n".join(lines) + "\n")
-    print(f"wrote {args.out} ({len(lines) - 10} queries)")
+    print(f"wrote {args.out} ({len(HEADLINE) + 1} queries)")
     spark.stop()
 
 

@@ -157,7 +157,10 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     wide text columns, and hand a following groupBy on those keys a
     reusable partitioning. Without keys it is a round-robin exchange.
     The exchange is unconditional, also on a scan that already has
-    enough splits."""
+    enough splits, and also at width 1: a table under ~150 KB (the
+    sf0.001/sf0.01 documents) gets a one-partition exchange that
+    spreads nothing, so the per-row stage still runs on one core; it
+    is kept so every call plans the same shape."""
     width = max(
         1,
         min(

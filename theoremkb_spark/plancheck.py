@@ -2,8 +2,10 @@
 PLANS.md audit) and tests/test_plan_shape.py (the frozen invariants).
 
 Facts come from the pre-execution physical plan string; 'exchanges'
-counts DISTINCT shuffle exchanges (the tree printer repeats a reused
-exchange once per consuming branch — dedup by plan_id)."""
+counts DISTINCT shuffle exchanges of every partitioning (hash, range,
+round-robin and single-partition; broadcasts are not shuffles). The
+tree printer repeats a reused exchange once per consuming branch, so
+they are dedup'd by plan_id."""
 
 from __future__ import annotations
 
@@ -16,7 +18,7 @@ def plan_string(df) -> str:
 
 def plan_facts(plan: str) -> dict:
     exchanges = set(
-        re.findall(r"Exchange (?:hash|range)partitioning\([^\n]*\[plan_id=(\d+)\]", plan)
+        re.findall(r"(?<![A-Za-z])Exchange [^\n]*\[plan_id=(\d+)\]", plan)
     )
     scans = []
     for m in re.finditer(r"FileScan parquet \[([^\]]*)\][^\n]*", plan):
