@@ -17,8 +17,9 @@ Two parts:
    shape is the join stage's (max, median, max/median) task time.
 
 2. REGIME EQUALITY: build_kg over the bench corpus with the dictionary
-   join FORCED to broadcast and FORCED to salted must emit identical
-   triple sets.
+   join FORCED to broadcast and FORCED to salted (a parquet-backed
+   dictionary over a lowered ``joins.BROADCAST_MAX_BYTES``) must emit
+   identical triple sets.
 
 Usage: python scripts/bench_skew_salted.py [--rows 6000000] [--cpus 32]
 Writes BENCH/SKEW_r06.json and prints it.
@@ -152,6 +153,7 @@ def _parse_log(log: str, desc_stages: dict, stage_tasks: dict) -> None:
 
 def regime_equality(cpus: int) -> dict:
     from theoremkb_spark.corpus.generator import CORPUS_VERSION, entity_dict_rows
+    from theoremkb_spark.operators import joins
     from theoremkb_spark.pipeline.extract import write_pages_parquet
     from theoremkb_spark.pipeline.runner import build_kg, load_dico, release_caches
     from theoremkb_spark.session import get_spark, warm_python_workers
@@ -165,13 +167,24 @@ def regime_equality(cpus: int) -> dict:
         write_pages_parquet(pages_path, kg_docs, jobs=min(cpus, 16))
     pages = spark.read.parquet(pages_path)
     dico = load_dico(spark, list(entity_dict_rows(kg_docs))).cache()
+    # the salted regime needs a file-backed dictionary (a driver-local
+    # frame's unknowable estimate always counts as broadcast-sized) and
+    # a threshold it exceeds
+    dico_path = f"/tmp/bench_dico_v{CORPUS_VERSION}_{kg_docs}.parquet"
+    dico.write.mode("overwrite").parquet(dico_path)
+    forced = {
+        "broadcast": (dico, joins.BROADCAST_MAX_BYTES),
+        "salted": (spark.read.parquet(dico_path), -1),
+    }
 
     triples = {}
-    for regime in ("broadcast", "salted"):
+    for regime, (regime_dico, max_bytes) in forced.items():
         caches: list = []
-        df = build_kg(
-            spark, pages, dico=dico, join_strategy=regime, cache_registry=caches
-        )
+        prev, joins.BROADCAST_MAX_BYTES = joins.BROADCAST_MAX_BYTES, max_bytes
+        try:
+            df = build_kg(spark, pages, dico=regime_dico, cache_registry=caches)
+        finally:
+            joins.BROADCAST_MAX_BYTES = prev
         rows = df.select("subj", "pred", "obj", "url")
         triples[regime] = {
             (r.subj, r.pred, r.obj, r.url) for r in rows.collect()

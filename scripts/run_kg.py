@@ -36,7 +36,6 @@ def main() -> None:
         " name already shipped with spark-submit --files",
     )
     ap.add_argument("--warmup", action=argparse.BooleanOptionalAction, default=True)
-    ap.add_argument("--join-strategy", default="broadcast", choices=["broadcast", "salted"])
     ap.add_argument(
         "--store",
         action="store_true",
@@ -126,7 +125,6 @@ def main() -> None:
             spark,
             pages.limit(8),
             labeler=args.labeler,
-            join_strategy=args.join_strategy,
             dico=dico,
             model_file=model_file,
         ).write.mode("overwrite").format("noop").save()
@@ -178,7 +176,6 @@ def main() -> None:
         spark,
         pages,
         labeler=args.labeler,
-        join_strategy=args.join_strategy,
         dico=dico,
         model_file=model_file,
     ).persist()  # consumed twice: triple sink + lineage rollup

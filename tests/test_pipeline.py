@@ -131,19 +131,26 @@ def test_window_path_regexes_case_insensitive(spark):
     assert got[3] == want[3] == "lemma 1.2"
 
 
-@pytest.mark.parametrize("join_strategy", ["broadcast", "salted"])
+@pytest.mark.parametrize("regime", ["broadcast", "salted"])
 @pytest.mark.parametrize("labeler", ["fused", "window"])
 def test_triple_groups_match_sequential_oracle(
-    spark, pages, entity_dict, labeler, join_strategy
+    spark, pages, entity_dict, labeler, regime, tmp_path, monkeypatch
 ):
     """Provenance groups (min span group per triple) must match the
     sequential oracle — the surface behind the kg_triples DuckDB gate —
-    for both front ends in both dictionary-join regimes."""
+    for both front ends in both dictionary-join regimes. The salted
+    regime reads the dictionary back from parquet (a driver-local
+    frame's unknowable estimate always counts as broadcast-sized) and
+    lowers the broadcast threshold under it."""
     from theoremkb_spark.corpus.oracle import oracle_triples_grouped
+    from theoremkb_spark.operators import joins
 
-    kg = build_kg(
-        spark, pages, entity_dict, labeler=labeler, join_strategy=join_strategy
-    )
+    if regime == "salted":
+        path = str(tmp_path / "entity_dict.parquet")
+        entity_dict.write.parquet(path)
+        entity_dict = spark.read.parquet(path)
+        monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", -1)
+    kg = build_kg(spark, pages, entity_dict, labeler=labeler)
     got = {(r.subj, r.pred, r.obj, r.url): r.group for r in kg.collect()}
     exp = oracle_triples_grouped(list(build_corpus(N_DOCS)), entity_dict_rows(N_DOCS))
     assert got == exp

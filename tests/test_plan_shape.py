@@ -49,7 +49,8 @@ def _assert_one_triple_explode(plan: str) -> None:
         assert pred in gen[0], gen[0]
 
 
-def test_kg_plan_shape(spark, tmp_path):
+def test_kg_plan_shape(spark, tmp_path, monkeypatch):
+    from theoremkb_spark.operators import joins
     from theoremkb_spark.pipeline.extract import load_pages
     from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
 
@@ -114,8 +115,14 @@ def test_kg_plan_shape(spark, tmp_path):
     _assert_one_triple_explode(plan)
 
     # every labeler and dictionary regime shares that one assembly; the
-    # salted regime's dictionary attach is exactly one salted join
-    salted = plan_string(build_kg(spark, pages, ents, join_strategy="salted"))
+    # salted regime's dictionary attach is exactly one salted join. The
+    # salted regime takes a file-backed dictionary over the threshold (a
+    # driver-local frame's unknowable estimate counts as small)
+    ents_path = str(tmp_path / "ents.parquet")
+    ents.write.parquet(ents_path)
+    with monkeypatch.context() as m:
+        m.setattr(joins, "BROADCAST_MAX_BYTES", -1)
+        salted = plan_string(build_kg(spark, pages, spark.read.parquet(ents_path)))
     _assert_one_triple_explode(salted)
     salted_joins = re.findall(
         r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[[^\n]*_salt", salted
@@ -298,7 +305,7 @@ def test_segment_tokens_plan_shape(spark):
         assert op not in plan, op
 
 
-def test_link_resolve_auto_strategy_regimes(spark, tmp_path):
+def test_link_resolve_auto_strategy_regimes(spark, tmp_path, monkeypatch):
     """VERDICT r4 #2: the LINK dictionary join must pick its physical
     strategy from the dictionary's size estimate, not a hardcoded hint.
     Small regime -> broadcast hash join, no salt machinery; forced-large
@@ -308,6 +315,8 @@ def test_link_resolve_auto_strategy_regimes(spark, tmp_path):
     treated as broadcast-sized BY CONSTRUCTION — they already sit in
     driver memory; the at-scale inputs are always file-backed and carry
     real file-size estimates."""
+    from theoremkb_spark.operators import joins
+    from theoremkb_spark.operators.joins import fits_broadcast
     from theoremkb_spark.pipeline.link import _resolve
 
     dico_local = spark.createDataFrame(
@@ -321,26 +330,31 @@ def test_link_resolve_auto_strategy_regimes(spark, tmp_path):
     )
 
     for d in (dico, dico_local):  # file-backed small AND stats-unknown local
-        small = plan_string(_resolve(facts, d, "auto", salt=4))
+        assert fits_broadcast(d)
+        small = plan_string(_resolve(facts, d, fits_broadcast(d)))
         assert "_salt" not in small
         assert plan_facts(small)["broadcast_joins"] >= 1
 
-    large = plan_string(_resolve(facts, dico, "auto", salt=4, broadcast_max_bytes=1))
+    monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", 1)
+    assert not fits_broadcast(dico)
+    assert fits_broadcast(dico_local)  # an unknowable estimate stays small
+    large = plan_string(_resolve(facts, dico, fits_broadcast(dico)))
     assert "_salt" in large
 
     # both regimes resolve the same rows (the strategy is physical only)
-    a = sorted(map(tuple, _resolve(facts, dico, "broadcast", 4).collect()))
-    b = sorted(map(tuple, _resolve(facts, dico, "salted", 4).collect()))
+    a = sorted(map(tuple, _resolve(facts, dico, True).collect()))
+    b = sorted(map(tuple, _resolve(facts, dico, False).collect()))
     assert a == b
 
 
-def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path, caches):
+def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path, caches, monkeypatch):
     """fuzzy_link_lsh auto-selects its bucket-join strategy from the
     dictionary size estimate. Small regime: the banded dictionary is
     broadcast (no exchange keyed on band/sig). Forced-large regime
     (file-backed dict under a 1-byte threshold): the bucket join rides
     a (band, sig) hash exchange instead — the shape that scales past
     broadcast memory. Same rows either way."""
+    from theoremkb_spark.operators import joins
     from theoremkb_spark.pipeline.link import fuzzy_link_lsh
     from theoremkb_spark.pipeline.runner import release_caches
 
@@ -365,7 +379,8 @@ def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path, caches):
     # a materialized stats cache carries its real (tiny) size, which the
     # planner would broadcast from: plan the forced-large regime uncached
     release_caches(caches)
-    large_df = fuzzy_link_lsh(m, d, broadcast_max_bytes=1, cache_registry=caches)
+    monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", 1)
+    large_df = fuzzy_link_lsh(m, d, cache_registry=caches)
     large = plan_string(large_df)
     assert re.search(r"Exchange hashpartitioning\(band", large), large
     assert sorted(map(tuple, large_df.collect())) == rows_small
@@ -378,13 +393,14 @@ def test_sim_tfidf_broadcast_regimes(spark, monkeypatch):
     (round-5 verdict #5): above it only the planner/AQE may broadcast,
     from real sizes."""
     import theoremkb_spark.queries_docs as qd
+    from theoremkb_spark.operators import joins
 
     sf = "/root/testdata/sf0.01"
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         plan_small = plan_string(qd.q_sim_tfidf_topk(spark, sf))
-        monkeypatch.setattr(qd, "SIM_TFIDF_BROADCAST_MAX_BYTES", -1)
+        monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", -1)
         plan_large = plan_string(qd.q_sim_tfidf_topk(spark, sf))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

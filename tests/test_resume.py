@@ -11,7 +11,7 @@ from theoremkb_spark.io.catalog import (
     run_incremental,
 )
 from theoremkb_spark.pipeline.extract import load_pages
-from theoremkb_spark.pipeline.runner import TRIPLE_COLS, load_entity_dict
+from theoremkb_spark.pipeline.runner import TRIPLE_COLS, TRIPLE_SCHEMA, load_entity_dict
 
 N = 24
 
@@ -282,9 +282,6 @@ def test_lineage_reconciles_across_stages(spark, tmp_path):
         )
 
 
-_TRIPLE_SCHEMA = "subj string, pred string, obj string, url string, group long"
-
-
 def _hand_committed_store(spark, path, n):
     """``n`` one-url batches committed by hand (no KG build), a triple
     compaction after the first, then one re-crawl of the first url."""
@@ -292,14 +289,14 @@ def _hand_committed_store(spark, path, n):
     for i in range(n):
         url = spark.createDataFrame([(f"u{i}",)], "url string")
         store.commit_batch(
-            spark.createDataFrame([("s", "p", f"o{i}", f"u{i}", i)], _TRIPLE_SCHEMA),
+            spark.createDataFrame([("s", "p", f"o{i}", f"u{i}", i)], TRIPLE_SCHEMA),
             url,
         )
         if i == 0:
             assert store.compact_triples(spark, min_batches=1)
     first = spark.createDataFrame([("u0",)], "url string")
     store.commit_batch(
-        spark.createDataFrame([("s", "p", "new", "u0", 0)], _TRIPLE_SCHEMA),
+        spark.createDataFrame([("s", "p", "new", "u0", 0)], TRIPLE_SCHEMA),
         first,
         supersedes_urls=first,
     )
@@ -355,7 +352,7 @@ def test_read_columns_are_triple_cols(spark, tmp_path):
     assert_columns()
     again = spark.createDataFrame([("u1",)], "url string")
     store.commit_batch(
-        spark.createDataFrame([("s", "p", "again", "u1", 1)], _TRIPLE_SCHEMA),
+        spark.createDataFrame([("s", "p", "again", "u1", 1)], TRIPLE_SCHEMA),
         again,
         supersedes_urls=again,
     )

@@ -159,27 +159,27 @@ def test_multimodal_decode_pil_branch_env_gated():
 
 def test_hot_shingle_cap_bounds_candidate_pairs(spark, caches):
     """Scale discipline (VERDICT r1): a stop-phrase shingle planted in
-    every document must not make the blocking join quadratic — with the
-    df cap on, candidate pairs stay bounded (here: zero), and the
+    every document must not make the blocking join quadratic — with
+    ``ngram_jaccard_pairs``' df cap on, candidate pairs stay bounded
+    (here: zero, even where every pair clears the threshold), and the
     verified output is unchanged semantics-wise."""
-    from theoremkb_spark.operators.dedup import ngram_jaccard_candidates, shingles
-
     n = 120
     stop = "the quick brown fox jumps over the lazy dog"
     rows = [(i, f"{stop} unique{i} filler{i} trailer{i} suffix{i}") for i in range(n)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = shingles(df, "doc_id", "text", 3).cache()
 
-    uncapped = ngram_jaccard_candidates(sh, max_doc_freq=None).count()
-    capped = ngram_jaccard_candidates(sh, max_doc_freq=50).count()
-    assert uncapped == n * (n - 1) // 2  # the quadratic blow-up
-    assert capped == 0  # hot shingles identify no pair
+    # every pair shares the stop phrase's 7 of its 11 3-grams (J = 7/15),
+    # so under threshold 0.4 only the cap keeps the output non-quadratic
+    kw = dict(threshold=0.4, cache_registry=caches)
+    uncapped = ngram_jaccard_pairs(df, "doc_id", "text", max_doc_freq=None, **kw)
+    capped = ngram_jaccard_pairs(df, "doc_id", "text", max_doc_freq=50, **kw)
+    assert uncapped.count() == n * (n - 1) // 2  # the quadratic blow-up
+    assert capped.count() == 0  # hot shingles identify no pair
 
     # end-to-end: no false pairs appear either way at a real threshold
     kw = dict(threshold=0.5, cache_registry=caches)
     assert ngram_jaccard_pairs(df, "doc_id", "text", **kw).count() == 0
     assert minhash_lsh_pairs(df, "doc_id", "text", **kw).count() == 0
-    sh.unpersist()
 
 
 def test_sign_bucket_rotation_kills_correlated_skew(spark):
@@ -692,7 +692,7 @@ def test_png_roundtrip_and_dispatch():
 # ---------------------------------------------- round-6 optimization gates
 
 
-def test_capped_shingles_regimes(spark, docs, tmp_path):
+def test_capped_shingles_regimes(spark, docs, tmp_path, monkeypatch):
     """The hot-shingle cap auto-sizes its anti-join (round-5 verdict #1):
     under the source-size threshold the hot set broadcasts (shingle
     table never shuffles); past it the broadcast hint is dropped and the
@@ -700,14 +700,17 @@ def test_capped_shingles_regimes(spark, docs, tmp_path):
     Both regimes must produce identical surviving shingles. The source
     must be FILE-backed: driver-local frames have unknowable stats and
     deliberately count as small."""
+    from theoremkb_spark.operators import joins
     from theoremkb_spark.operators.dedup import capped_shingles, shingles
 
     src = str(tmp_path / "docs.parquet")
     docs.write.mode("overwrite").parquet(src)
     docs = spark.read.parquet(src)
     sh = shingles(docs, "doc_id", "text", 3)
-    small = capped_shingles(sh, 2, source=docs, broadcast_max_source_bytes=1 << 40)
-    large = capped_shingles(sh, 2, source=docs, broadcast_max_source_bytes=-1)
+    monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", 1 << 40)
+    small = capped_shingles(sh, 2, source=docs)
+    monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", -1)
+    large = capped_shingles(sh, 2, source=docs)
     # isolate OUR hint from the planner's own estimate-based broadcast
     # (which may legitimately fire at test scale and is the safe runtime
     # mechanism at 100x): with auto-broadcast off, only the forced-small

@@ -41,7 +41,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.runner import TRIPLE_COLS, build_kg, release_caches, stage_lineage
+from ..pipeline.runner import (
+    LINEAGE_SCHEMA,
+    TRIPLE_COLS,
+    TRIPLE_SCHEMA,
+    build_kg,
+    release_caches,
+    stage_lineage,
+)
 
 _NO_GENERATION = {"upto_batch": -1, "path": None}
 
@@ -158,9 +165,7 @@ class CheckpointedTripleStore:
                 )
             )
         if not parts:
-            return spark.createDataFrame(
-                [], "subj string, pred string, obj string, url string, group long"
-            )
+            return spark.createDataFrame([], TRIPLE_SCHEMA)
         rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         dead = [
             m["supersedes_urls_path"] for m in visible if m.get("supersedes_urls_path")
@@ -221,11 +226,7 @@ class CheckpointedTripleStore:
         merge covers pre-round-4 batches written without wall_ms."""
         paths = [m["lineage_path"] for m in self.manifests() if m.get("lineage_path")]
         if not paths:
-            return spark.createDataFrame(
-                [],
-                "stage string, partition_id int, rows long, urls long, "
-                "wall_ms long, batch_id long",
-            )
+            return spark.createDataFrame([], LINEAGE_SCHEMA + ", batch_id long")
         return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     # -- write side (one batch = one snapshot) ---------------------------

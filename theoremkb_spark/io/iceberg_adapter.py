@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.runner import LINEAGE_SCHEMA, TRIPLE_SCHEMA
 from .catalog import CheckpointedTripleStore, iceberg_available
 
 
@@ -72,17 +73,9 @@ class IcebergTripleStore:
         self.urls_tbl = f"{table_prefix}_urls"
         self.lineage_tbl = f"{table_prefix}_lineage"
         for tbl, schema in (
-            (
-                self.triples_tbl,
-                "subj string, pred string, obj string, url string, "
-                "group long, batch_id long",
-            ),
+            (self.triples_tbl, TRIPLE_SCHEMA + ", batch_id long"),
             (self.urls_tbl, "url string, batch_id long"),
-            (
-                self.lineage_tbl,
-                "stage string, partition_id int, rows long, urls long, "
-                "wall_ms long, batch_id long",
-            ),
+            (self.lineage_tbl, LINEAGE_SCHEMA + ", batch_id long"),
         ):
             spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {tbl} ({schema}) USING iceberg "

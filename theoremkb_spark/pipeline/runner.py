@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.joins import fits_broadcast
 from .canon import canonicalize_dict
 from .extract import extract_tokens
 from .label import label_tokens, label_tokens_arrow
@@ -38,6 +39,7 @@ from .link import _resolve
 from .mentions import assemble_spans, mine_mentions, paper_citations, resolve_span_names
 
 TRIPLE_COLS = ["subj", "pred", "obj", "url", "group"]
+TRIPLE_SCHEMA = "subj string, pred string, obj string, url string, group long"
 LABELERS = ("fused", "window", "arrow")
 
 
@@ -70,19 +72,20 @@ def _entity(url_col, name_col):
     return F.concat(url_col, F.lit("#"), name_col)
 
 
-def build_triples(fused: DataFrame, dico: DataFrame, join_strategy: str) -> DataFrame:
+def build_triples(fused: DataFrame, dico: DataFrame, broadcast: bool) -> DataFrame:
     """Single-pass triples assembly over a fused-shaped table (span,
     mention and cite rows, ``extract.SPANS_FUSED_SCHEMA``'s columns), for
     either dictionary regime and any labeler.
 
     Each row emits its triples through a conditional-array explode, and
     the dictionary is attached by ONE left join (``link._resolve``), so
-    the broadcast and salted regimes differ only inside that join. With
-    the fused labeler in the broadcast regime the whole assembly is
-    exchange-free: broadcast preserves the stream side's partitioning,
-    and the final groupBy(subj, pred, obj, url) reuses the url
-    repartition's HashPartitioning — url is a subset of the grouping
-    keys — so the rollup needs NO exchange. The salted regime adds only
+    the broadcast and salted regimes (``broadcast``, which ``build_kg``
+    decides) differ only inside that join. With the fused labeler in
+    the broadcast regime the whole assembly is exchange-free: broadcast
+    preserves the stream side's partitioning, and the final
+    groupBy(subj, pred, obj, url) reuses the url repartition's
+    HashPartitioning — url is a subset of the grouping keys — so the
+    rollup needs NO exchange. The salted regime adds only
     the salted join's own two exchanges.
     """
     url, own = F.col("url"), F.col("own_name")
@@ -104,7 +107,7 @@ def build_triples(fused: DataFrame, dico: DataFrame, join_strategy: str) -> Data
     )
     # no triple reads the span text, and the salted join would otherwise
     # hash it (its widest column) into every row's salt
-    joined = _resolve(rel.drop("text"), dico, join_strategy, salt=8)
+    joined = _resolve(rel.drop("text"), dico, broadcast)
 
     own_ent = _entity(url, own)
     target = F.coalesce(
@@ -174,7 +177,6 @@ def build_kg(
     pages: DataFrame,
     entity_dict: DataFrame | None = None,
     labeler: str = "fused",
-    join_strategy: str = "auto",
     dico: DataFrame | None = None,
     model_file: str | None = None,
     cache_registry: list[DataFrame] | None = None,
@@ -187,9 +189,13 @@ def build_kg(
     the Arrow labeler). Either path yields one fused-shaped table of
     span, mention and cite rows, and ``build_triples`` assembles it.
 
-    Without ``dico``, the broadcast regime canonicalizes ``entity_dict``
-    eagerly on the driver (one collect, then ``load_dico``); the salted
-    regime canonicalizes it lazily with ``canonicalize_dict``. Pass
+    The dictionary regime is decided once, from the size estimate of
+    the raw dictionary input (``entity_dict``, else ``dico``; see
+    ``joins.fits_broadcast``): a broadcast-sized dictionary is
+    broadcast into the link join, a larger one joins salted. Without
+    ``dico``, the broadcast regime canonicalizes ``entity_dict`` eagerly
+    on the driver (one collect, then ``load_dico``); the salted regime
+    canonicalizes it lazily with ``canonicalize_dict``. Pass
     ``dico`` (pre-canonicalized (url, tag, pdf_to_canon)) to skip the
     canonicalization stage — e.g. from ``load_dico`` when the dictionary
     rows are already driver-resident. One of the two is required.
@@ -234,23 +240,14 @@ def build_kg(
     mult = 1 if labeler == "fused" else 4
     n_partitions = mult * spark.sparkContext.defaultParallelism
 
-    if join_strategy == "auto":
-        # decide ONCE here, from the RAW dictionary input: the
-        # canonicalized dico's own plan runs through the CC joins, whose
-        # Catalyst stats multiply into a useless overestimate, while
-        # canonicalization only ever SHRINKS the dictionary — so the
-        # pre-canon size is the conservative-correct broadcast basis.
-        # The strategy also decides how the dictionary is canonicalized
-        # (driver-side or distributed), below.
-        from ..operators.joins import fits_broadcast
-        from .link import BROADCAST_DICT_MAX_BYTES
-
-        basis = entity_dict if entity_dict is not None else dico
-        join_strategy = (
-            "broadcast"
-            if fits_broadcast(basis, BROADCAST_DICT_MAX_BYTES)
-            else "salted"
-        )
+    # decide the regime ONCE here, from the RAW dictionary input: the
+    # canonicalized dico's own plan runs through the CC joins, whose
+    # Catalyst stats multiply into a useless overestimate, while
+    # canonicalization only ever SHRINKS the dictionary — so the
+    # pre-canon size is the conservative-correct broadcast basis. The
+    # regime also decides how the dictionary is canonicalized
+    # (driver-side or distributed), below.
+    broadcast = fits_broadcast(entity_dict if entity_dict is not None else dico)
 
     if labeler == "fused":
         # single Arrow pass: parse + label + span assembly + name
@@ -324,14 +321,14 @@ def build_kg(
         fused = _cached(fused)
         stages_out["fused"] = fused
     if dico is None:
-        if join_strategy == "broadcast":
+        if broadcast:
             # a broadcast-sized dictionary is canonicalized on the driver
             # from one collect: no alias-edge, CC or join/distinct jobs,
             # and the small driver-built frame it yields needs no cache
             dico = load_dico(spark, entity_dict.collect())
         else:
             dico = canonicalize_dict(entity_dict)
-    return build_triples(fused, dico, join_strategy)
+    return build_triples(fused, dico, broadcast)
 
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:

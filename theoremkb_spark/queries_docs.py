@@ -396,11 +396,6 @@ def q_multimodal_features(spark, sf):
 
 # ------------------------------------------ linking / similarity / sampling
 
-# Auto-broadcast threshold for q_sim_tfidf_topk's vocabulary-derived
-# frames (per-term document frequencies, probe weights): same 64 MB
-# convention as pipeline/link.BROADCAST_DICT_MAX_BYTES.
-SIM_TFIDF_BROADCAST_MAX_BYTES = 64 << 20
-
 
 def q_sim_tfidf_topk(spark, sf):
     """TF-IDF cosine best-match per probe doc — the reference's theorem
@@ -416,14 +411,11 @@ def q_sim_tfidf_topk(spark, sf):
     scale both are kilobytes and still broadcast; at web-corpus scale a
     vocabulary-sized frame falls back to the planner's shuffled join
     (with AQE free to re-broadcast from ACTUAL sizes, the safe
-    direction). Threshold is module-level so the regime test can force
-    the large branch."""
-    import theoremkb_spark.queries_docs as _self
+    direction). The threshold is the engine's one
+    ``joins.BROADCAST_MAX_BYTES``."""
 
     def _maybe_bc(frame):
-        if fits_broadcast(frame, _self.SIM_TFIDF_BROADCAST_MAX_BYTES):
-            return F.broadcast(frame)
-        return frame
+        return F.broadcast(frame) if fits_broadcast(frame) else frame
 
     from .operators.textquality import clean_thm_col
 
