@@ -2,7 +2,8 @@
 
 Usage:
     spark-submit --py-files theoremkb_spark.zip scripts/run_kg.py \
-        --docs 100 --out /tmp/kg_out --cpus 8 [--labeler window|arrow]
+        --docs 100 --out /tmp/kg_out --cpus 8 \
+        [--labeler window | --model crf_model_v1.pkl | --trainer perceptron]
 
 Synthesizes the deterministic corpus, runs the six-stage pipeline, writes
 triples + lineage parquet, prints a one-line JSON summary (docs, triples,
@@ -17,6 +18,8 @@ import time
 
 
 def main() -> None:
+    from theoremkb_spark.pipeline.runner import LABELERS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=100)
     ap.add_argument("--seed", type=int, default=42)
@@ -28,12 +31,13 @@ def main() -> None:
         help="read the pages corpus from this parquet instead of synthesizing"
         " in-process (use scripts/make_corpus.py to materialize it)",
     )
-    ap.add_argument("--labeler", default="fused", choices=["fused", "window", "arrow"])
+    ap.add_argument("--labeler", default="fused", choices=LABELERS)
     ap.add_argument(
         "--model",
         default=None,
-        help="labeler artifact: a path (registered via sc.addFile) or a bare"
-        " name already shipped with spark-submit --files",
+        help="trained sequence-model artifact (.pkl) that replaces the rule"
+        " labeler: a path (registered via sc.addFile) or a bare name already"
+        " shipped with spark-submit --files",
     )
     ap.add_argument("--warmup", action=argparse.BooleanOptionalAction, default=True)
     ap.add_argument(
@@ -62,6 +66,14 @@ def main() -> None:
     )
     ap.add_argument("--train-docs", type=int, default=40)
     args = ap.parse_args()
+    if args.labeler != "fused" and (args.model or args.trainer):
+        ap.error("--model/--trainer replace the rule labeler: drop --labeler")
+    if args.store and (args.labeler != "fused" or args.model or args.trainer):
+        # run_incremental always runs the fused rule labeler
+        ap.error(
+            "--store runs the fused rule labeler only:"
+            " drop --labeler/--model/--trainer"
+        )
 
     import os
 

@@ -1,13 +1,13 @@
 """End-to-end pipeline gates (SURVEY §5.2): byte-identical extraction,
 triple P/R vs the reference-semantics oracle, two-run determinism,
-window-vs-Arrow labeler agreement."""
+fused-vs-window labeler agreement."""
 
 import pytest
 
 from theoremkb_spark.corpus.generator import build_corpus, entity_dict_rows
 from theoremkb_spark.corpus.oracle import oracle_triples
 from theoremkb_spark.pipeline.extract import extract_text, extract_tokens, load_pages
-from theoremkb_spark.pipeline.label import label_tokens, label_tokens_arrow
+from theoremkb_spark.pipeline.label import label_tokens
 from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
 
 N_DOCS = 40
@@ -50,35 +50,6 @@ def test_two_run_determinism(spark, pages, entity_dict):
     assert t2.exceptAll(t1).isEmpty()
 
 
-def test_window_and_arrow_labelers_agree(spark, pages):
-    tokens = extract_tokens(pages).cache()
-    a = label_tokens(tokens).select(
-        "url", "page", "block", "line", "word", "label", "group"
-    )
-    b = label_tokens_arrow(tokens).select(
-        "url", "page", "block", "line", "word", "label", "group"
-    )
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-    tokens.unpersist()
-
-
-def test_arrow_labeler_with_shipped_model_artifact(spark, pages, tmp_path):
-    """The M1 artifact path: export params, register via sc.addFile,
-    load per-executor inside the Arrow UDF — same labels as builtin."""
-    from theoremkb_spark.pipeline.label import export_model_artifact
-
-    art = tmp_path / "rule_model.json"
-    export_model_artifact(str(art))
-    spark.sparkContext.addFile(str(art))
-
-    tokens = extract_tokens(pages).cache()
-    cols = ["url", "page", "block", "line", "word", "label", "group"]
-    a = label_tokens_arrow(tokens).select(*cols)
-    b = label_tokens_arrow(tokens, model_file="rule_model.json").select(*cols)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-    tokens.unpersist()
-
-
 def test_fused_and_window_paths_emit_identical_triples(spark, pages, entity_dict):
     """The fused single-Arrow-pass front end and the window-function
     pipeline are alternative physical plans of the same logical job."""
@@ -89,17 +60,24 @@ def test_fused_and_window_paths_emit_identical_triples(spark, pages, entity_dict
 
 
 def test_build_kg_rejects_bad_inputs(spark, pages, entity_dict):
-    """An unknown labeler, or neither dictionary input, fails fast with
-    a ValueError naming the allowed inputs."""
+    """An unknown labeler, a model with the window labeler, or neither
+    dictionary input fails fast with a ValueError naming the allowed
+    inputs."""
     with pytest.raises(ValueError, match="fused"):
         build_kg(spark, pages, entity_dict, labeler="windw")
+    with pytest.raises(ValueError, match="fused"):
+        build_kg(spark, pages, entity_dict, labeler="arrow")
+    with pytest.raises(ValueError, match="fused"):
+        build_kg(
+            spark, pages, entity_dict, labeler="window", model_file="crf_model_v1.pkl"
+        )
     with pytest.raises(ValueError, match="entity_dict or dico"):
         build_kg(spark, pages)
 
 
 def test_non_english_filtered(spark, pages):
     langs = {r.lang for r in pages.select("lang").distinct().collect()}
-    tokens = extract_tokens(pages, english_only=True)
+    tokens = extract_tokens(pages)
     token_urls = {r.url for r in tokens.select("url").distinct().collect()}
     non_en = {r.url for r in pages.filter("lang <> 'en'").select("url").collect()}
     assert not (token_urls & non_en)

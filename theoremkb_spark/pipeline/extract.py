@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import RESULT_LABELS
+
 TOKEN_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -156,11 +158,10 @@ def _parse_tokens(url: str, html: bytes) -> list[tuple]:
     return list(zip(*(cols[n] for n in names))) if cols["url"] else []
 
 
-def extract_tokens(pages: DataFrame, english_only: bool = True) -> DataFrame:
-    """pages(url, html, ...) -> long token DataFrame (FIXTURES.md §2)."""
-    if english_only:
-        pages = pages.filter(F.col("lang") == "en")
-    src = pages.select("url", "html")
+def extract_tokens(pages: DataFrame) -> DataFrame:
+    """English pages(url, html, lang, ...) -> long token DataFrame
+    (FIXTURES.md §2)."""
+    src = pages.filter(F.col("lang") == "en").select("url", "html")
 
     names = [f.name for f in TOKEN_SCHEMA.fields]
     flush_rows = 200_000  # bound worker memory: ~16 cols x 200k cells
@@ -200,22 +201,7 @@ SPANS_FUSED_SCHEMA = T.StructType(
 )
 
 
-def _labeler_params(model_file: str | None):
-    """Result-label vocabulary, from the shipped artifact when given
-    (resolved per-executor via SparkFiles — M1 pattern) else builtin."""
-    from ..functions.text import RESULT_LABELS
-
-    if model_file is None:
-        return frozenset(RESULT_LABELS)
-    import json
-
-    from .label import _resolve_artifact
-
-    with open(_resolve_artifact(model_file)) as f:
-        return frozenset(json.load(f)["result_labels"])
-
-
-def _doc_spans(url: str, html: bytes, labels=None):
+def _doc_spans(url: str, html: bytes):
     """One document -> (span rows, citation tags), fused.
 
     Runs the naive-rule labeler state machine (naive_extractor.py:20-55),
@@ -229,7 +215,6 @@ def _doc_spans(url: str, html: bytes, labels=None):
     which stays as the cross-checked alternative implementation.
     """
     from ..functions.text import (
-        RESULT_LABELS,
         RE_NONWORD,
         find_thm_proof,
         find_thm_start,
@@ -237,8 +222,6 @@ def _doc_spans(url: str, html: bytes, labels=None):
         normalize_text,
     )
 
-    if labels is None:
-        labels = set(RESULT_LABELS)
     spans: list[list] = []  # [group, label, parts]
     cite_tags: set[str] = set()
     state_open = False
@@ -256,6 +239,7 @@ def _doc_spans(url: str, html: bytes, labels=None):
     # still CONSUMES a group number — the label layer numbers spans, the
     # constraint only drops boxes, exactly the reference's layer split.
     segment = "front"
+    labels = RESULT_LABEL_SET
     seg_markers = _SEG_MARKERS
     result_segments = RESULT_PARENT_SEGMENTS
 
@@ -366,6 +350,8 @@ _SEG_MARKERS = {
     "references": "bibliography",
 }
 RESULT_PARENT_SEGMENTS = frozenset({"body", "annex"})
+# word patterns that open a result span (the naive rule's vocabulary)
+RESULT_LABEL_SET = frozenset(RESULT_LABELS)
 
 # the fused path's one-pass scanner: structural open/close markers plus
 # the word tag (negated character classes — attribute values and escaped
@@ -380,10 +366,9 @@ _RE_FUSED_SCAN = re.compile(
 )
 
 
-def extract_spans(
-    pages: DataFrame, english_only: bool = True, model_file: str | None = None
-) -> DataFrame:
-    """pages -> fused (span | cite) rows: the single-Arrow-pass front end.
+def extract_spans(pages: DataFrame) -> DataFrame:
+    """English pages -> fused (span | mention | cite) rows: the
+    single-Arrow-pass front end.
 
     Output partitioning follows the input (narrow map): with pages
     repartitioned by url upstream, the result is a tiny table (~20 rows
@@ -394,15 +379,12 @@ def extract_spans(
     the JVM window/collect_list pipeline measured ~19 us/token under full
     parallelism (sort+object-agg cache thrash) vs ~2 us/token here.
     """
-    if english_only:
-        pages = pages.filter(F.col("lang") == "en")
-    src = pages.select("url", "html")
+    src = pages.filter(F.col("lang") == "en").select("url", "html")
     names = [f.name for f in SPANS_FUSED_SCHEMA.fields]
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.text import find_ref_results
 
-        labels = _labeler_params(model_file)  # once per worker, not per row
         cols: dict[str, list] = {n: [] for n in names}
         n_buf = 0
 
@@ -429,7 +411,7 @@ def extract_spans(
             for url, html in zip(pdf["url"], pdf["html"]):
                 if html is None:
                     continue
-                spans, tags = _doc_spans(url, bytes(html), labels)
+                spans, tags = _doc_spans(url, bytes(html))
                 n = 0
                 for g, label, text, own in spans:
                     emit(url, "span", g, label, text, own, None, None, None, None)
@@ -456,11 +438,9 @@ def extract_spans(
     return src.mapInPandas(parse, schema=SPANS_FUSED_SCHEMA)
 
 
-def extract_text(pages: DataFrame, english_only: bool = False) -> DataFrame:
-    """pages -> (url, text) under the frozen get_text rule — the
-    byte-identical invariant surface."""
-    if english_only:
-        pages = pages.filter(F.col("lang") == "en")
+def extract_text(pages: DataFrame) -> DataFrame:
+    """pages (every language) -> (url, text) under the frozen get_text
+    rule — the byte-identical invariant surface."""
     src = pages.select("url", "html")
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

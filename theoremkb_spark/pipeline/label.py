@@ -1,20 +1,20 @@
 """Stage 2 — LABEL: token stream -> (label, group) result spans.
 
-Two interchangeable implementations of the same frozen semantics (the
-reference's naive rule extractor, ``Styling/src/lib/extractors/results/
-naive_extractor.py:20-55``, and its BIO-decode group numbering,
-``extractors/crf.py:113-131``):
+Two labelers over the token table, both emitting the same columns:
 
-* ``label_tokens`` — pure DataFrame/window functions, fully JVM-side
-  (whole-stage codegen, zero Python): the cross-check path.
+* ``label_tokens`` — the reference's naive rule extractor
+  (``Styling/src/lib/extractors/results/naive_extractor.py:20-55``) as
+  pure DataFrame/window functions, fully JVM-side (whole-stage codegen,
+  zero Python): the cross-check of the fused production pass.
 * ``label_tokens_arrow`` — ``applyInPandas`` grouped by url, the
-  Arrow-batched sequence-inference pattern of the north star (model
-  loaded once per executor; here the "model" is the deterministic rule
-  scorer — CRF apply-parity is the gate, not train-parity, SURVEY §2.9 M2).
+  Arrow-batched sequence-inference stage of the north star: a TRAINED
+  pickled model, loaded once per executor, Viterbi-tagged and
+  BIO-decoded per document (``extractors/crf.py:89-132``; CRF
+  apply-parity is the gate, not train-parity, SURVEY §2.9 M2).
 
-The PRODUCTION path fuses this labeling into the extract Arrow pass
+The PRODUCTION path fuses the rule labeling into the extract Arrow pass
 (``extract.extract_spans``) so the token stream never crosses a shuffle;
-all three implementations are tested to emit identical spans/triples.
+the fused pass and ``label_tokens`` are tested to emit identical triples.
 
 Span-open rule: a line-initial token whose word-pattern (get_pattern,
 misc/__init__.py:32-43) is a result label and whose font is bold or
@@ -83,27 +83,6 @@ def label_tokens(tokens: DataFrame) -> DataFrame:
 _MODEL_CACHE: dict = {}  # one model per (executor process, artifact)
 
 
-def export_model_artifact(path: str) -> None:
-    """Write the sequence-labeler parameters as a JSON artifact — the
-    shippable stand-in for a trained CRF file. On a cluster the artifact
-    travels via ``spark.sparkContext.addFile(path)`` / ``spark-submit
-    --files`` and every executor loads it exactly once (M1 pattern,
-    SURVEY §2.9); a pickled sklearn-crfsuite model would ship the same
-    way (apply-parity is the gate, not train-parity — M2)."""
-    import json
-
-    with open(path, "w") as f:
-        json.dump(
-            {
-                "kind": "rule-sequence-labeler",
-                "version": 1,
-                "result_labels": list(RESULT_LABELS),
-                "require_style": ["bold", "italic"],
-            },
-            f,
-        )
-
-
 def _resolve_artifact(name: str) -> str:
     """Absolute path, or a name registered through SparkContext.addFile
     (resolved per-executor via SparkFiles)."""
@@ -116,92 +95,49 @@ def _resolve_artifact(name: str) -> str:
     return SparkFiles.get(name)
 
 
-def _get_model(artifact: str | None = None):
-    """Per-executor-memoized sequence scorer.
-
-    Three artifact kinds behind one interface (predict: pdf -> pdf with
-    label/group), each loaded ONCE per executor process (M1):
-
-    * ``None`` — the builtin deterministic rule scorer;
-    * ``*.json`` — rule parameters (label vocabulary) from a shipped file;
-    * ``*.pkl`` — a TRAINED linear-chain sequence model
-      (ml/crf.py ChainPerceptron): featurize, Viterbi-tag, BIO-decode to
-      (label, group) exactly as the reference CRF apply does
-      (Styling/src/lib/extractors/crf.py:89-132).
+def _get_model(artifact: str):
+    """Per-executor-memoized sequence tagger: a TRAINED pickled model
+    (``ml.crf.load_artifact``: the chain perceptron, the lbfgs CRF or
+    the CNN1D tagger), loaded ONCE per executor process (M1). Predict
+    is pdf -> pdf with label/group: featurize, Viterbi-tag, BIO-decode
+    to (label, group) exactly as the reference CRF apply does
+    (Styling/src/lib/extractors/crf.py:89-132).
     """
-    key = artifact or "__builtin__"
-    if key not in _MODEL_CACHE:
-        import re
+    if artifact not in _MODEL_CACHE:
+        import numpy as np
 
-        if artifact is not None and artifact.endswith(".pkl"):
-            import numpy as np
+        from ..ml.crf import decode_bio, load_artifact, predict_tags
 
-            from ..ml.crf import decode_bio, load_artifact, predict_tags
+        ml_model = load_artifact(_resolve_artifact(artifact))
 
-            ml_model = load_artifact(_resolve_artifact(artifact))
-
-            def predict_ml(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values(ORDER, kind="mergesort").reset_index(drop=True)
-                tags = predict_tags(
-                    ml_model,
-                    pdf["text"].tolist(),
-                    pdf["bold"].fillna(False).tolist(),
-                    pdf["italic"].fillna(False).tolist(),
-                    pdf["word"].tolist(),
-                    pdf["line"].tolist(),
-                    pdf["block"].tolist(),
-                )
-                labels, groups = decode_bio(tags)
-                pdf["label"] = labels
-                pdf["group"] = np.asarray(groups, dtype="int64")
-                return pdf
-
-            _MODEL_CACHE[key] = predict_ml
-            return _MODEL_CACHE[key]
-
-        if artifact is not None:
-            import json
-
-            with open(_resolve_artifact(artifact)) as f:
-                params = json.load(f)
-            labels = set(params["result_labels"])
-        else:
-            labels = set(RESULT_LABELS)
-
-        not_alnum = re.compile(r"[^a-zA-Z0-9 ]")
-        digit = re.compile(r"[0-9]")
-
-        def predict(pdf: pd.DataFrame) -> pd.DataFrame:
+        def predict_ml(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values(ORDER, kind="mergesort").reset_index(drop=True)
-            pat = (
-                pdf["text"]
-                .str.replace(not_alnum, "", regex=True)
-                .str.replace(digit, "@", regex=True)
-                .str.lower()
+            tags = predict_tags(
+                ml_model,
+                pdf["text"].tolist(),
+                pdf["bold"].fillna(False).tolist(),
+                pdf["italic"].fillna(False).tolist(),
+                pdf["word"].tolist(),
+                pdf["line"].tolist(),
+                pdf["block"].tolist(),
             )
-            styled = pdf["bold"].fillna(False) | pdf["italic"].fillna(False)
-            opens = (pdf["word"] == 0) & styled & pat.isin(labels)
-            closes = (pdf["word"] == 0) & (pdf["line"] == 0)
-            event = pd.Series(pd.NA, index=pdf.index, dtype="object")
-            event[closes] = "O"
-            event[opens] = pat[opens]
-            label = event.ffill().fillna("O")
-            group = opens.cumsum().astype("int64")
-            pdf["label"] = label.where(label != "O", "O")
-            pdf["group"] = group.where(label != "O", 0)
+            labels, groups = decode_bio(tags)
+            pdf["label"] = labels
+            pdf["group"] = np.asarray(groups, dtype="int64")
             return pdf
 
-        _MODEL_CACHE[key] = predict
-    return _MODEL_CACHE[key]
+        _MODEL_CACHE[artifact] = predict_ml
+    return _MODEL_CACHE[artifact]
 
 
-def label_tokens_arrow(tokens: DataFrame, model_file: str | None = None) -> DataFrame:
+def label_tokens_arrow(tokens: DataFrame, model_file: str) -> DataFrame:
     """applyInPandas-by-url labeler: the CRF-style Arrow inference stage.
 
     Sequence semantics stay sequential-per-document inside the UDF
     (SURVEY §7.4.2); parallelism comes from document-level grouping.
-    ``model_file``: artifact name registered via ``sc.addFile`` (or an
-    absolute path) — loaded once per executor, memoized across batches.
+    ``model_file``: a pickled sequence-model artifact (``ml.crf``), by
+    absolute path or by a name registered via ``sc.addFile`` — loaded
+    once per executor, memoized across batches.
     """
     from pyspark.sql import types as T
 

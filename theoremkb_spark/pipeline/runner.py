@@ -19,10 +19,11 @@ explicit url-hash repartition (north rule) lands on the ~40x smaller
 fused span table, whose HashPartitioning every downstream
 groupBy/window reuses. A broadcast-sized dictionary is canonicalized on
 the driver (the salted regime, whose dictionary is too big for that,
-keeps the distributed CC). The window path (cross-check implementation)
-inverts the choice — there the token table is the big one, so the
-pages repartition before tokenization is the cheap side — and unions
-its spans, mentions and citation anchors into the same fused shape, so
+keeps the distributed CC). The token path — the window-function
+cross-check, or a trained model applied by the Arrow inference stage —
+inverts the choice (there the token table is the big one, so the pages
+repartition before tokenization is the cheap side) and unions its
+spans, mentions and citation anchors into the same fused shape, so
 every labeler and regime shares the one assembly.
 """
 
@@ -40,7 +41,7 @@ from .mentions import assemble_spans, mine_mentions, paper_citations, resolve_sp
 
 TRIPLE_COLS = ["subj", "pred", "obj", "url", "group"]
 TRIPLE_SCHEMA = "subj string, pred string, obj string, url string, group long"
-LABELERS = ("fused", "window", "arrow")
+LABELERS = ("fused", "window")
 
 
 def load_entity_dict(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
@@ -184,10 +185,15 @@ def build_kg(
 ) -> DataFrame:
     """pages + entity_dict -> triples DataFrame (lazy).
 
-    ``labeler`` is one of ``LABELERS``: "fused" (the single Arrow pass),
-    or "window"/"arrow" (the token path, labeled by window functions or
-    the Arrow labeler). Either path yields one fused-shaped table of
-    span, mention and cite rows, and ``build_triples`` assembles it.
+    ``labeler`` is one of ``LABELERS``: "fused" (the single Arrow pass
+    of the rule labeler) or "window" (the token path, the rule labeler
+    as window functions). ``model_file``, a pickled sequence-model
+    artifact (``ml.crf``; a path or an ``sc.addFile`` name), replaces
+    the rule labeler: the token path labels with
+    ``label_tokens_arrow``. It goes with the default "fused" only; with
+    "window" it raises ``ValueError``, as does any other labeler.
+    Either path yields one fused-shaped table of span, mention and cite
+    rows, and ``build_triples`` assembles it.
 
     The dictionary regime is decided once, from the size estimate of
     the raw dictionary input (``entity_dict``, else ``dico``; see
@@ -204,13 +210,14 @@ def build_kg(
     intermediates; hand it to ``release_caches`` after the terminal
     action so looped callers don't leak cached blocks.
 
-    Pass ``stages_out`` (a dict) to receive the intermediate stage
-    DataFrames (the token table first on the token path, then the fused
-    table) — the hook ``stage_lineage`` uses to commit per-stage,
-    per-partition lineage rows through the checkpoint store.
+    Pass ``stages_out`` (a dict) to receive the cached fused table —
+    the hook ``stage_lineage`` uses to commit per-stage, per-partition
+    lineage rows through the checkpoint store.
     """
     if labeler not in LABELERS:
         raise ValueError(f"unknown labeler {labeler!r}: expected one of {LABELERS}")
+    if model_file is not None and labeler != "fused":
+        raise ValueError(f"a model_file goes with labeler='fused', not {labeler!r}")
     if entity_dict is None and dico is None:
         raise ValueError("build_kg needs entity_dict or dico (or both)")
 
@@ -220,13 +227,6 @@ def build_kg(
             cache_registry.append(df)
         return df
 
-    if model_file and model_file.endswith(".pkl") and labeler == "fused":
-        # a pickled TRAINED sequence model replaces the labeling logic
-        # itself, which the fused rule pass cannot express — route
-        # through the Arrow inference stage (label_tokens_arrow), where
-        # the model is Viterbi-applied per document (M1).
-        labeler = "arrow"
-
     # Fused path: the repartitioned table is the ~40x-reduced span table
     # (tens of MB at bench scale), so partitions = cores — every extra
     # partition multiplies the task count of every downstream scan of
@@ -234,10 +234,11 @@ def build_kg(
     # under the round-3 six-branch plan; see BENCH/RECONCILE_r03.md).
     # Skew is already handled upstream: the map-only extraction balances
     # html by byte-bounded scan splits, and url-hash spreads documents
-    # evenly. Window path: the repartition lands on the PAGES feeding a
+    # evenly. Token path: the repartition lands on the PAGES feeding a
     # ~40x larger token table, where scheduler slack around document
     # skew still pays — keep 4x there.
-    mult = 1 if labeler == "fused" else 4
+    token_path = labeler == "window" or model_file is not None
+    mult = 4 if token_path else 1
     n_partitions = mult * spark.sparkContext.defaultParallelism
 
     # decide the regime ONCE here, from the RAW dictionary input: the
@@ -249,7 +250,7 @@ def build_kg(
     # (driver-side or distributed), below.
     broadcast = fits_broadcast(entity_dict if entity_dict is not None else dico)
 
-    if labeler == "fused":
+    if not token_path:
         # single Arrow pass: parse + label + span assembly + name
         # resolution + mention mining per document
         # (extract.extract_spans), MAP-ONLY over the source scan: one
@@ -265,9 +266,7 @@ def build_kg(
         # groupBy/window a reusable HashPartitioning.
         from .extract import extract_spans
 
-        fused = extract_spans(
-            pages, english_only=True, model_file=model_file
-        ).repartition(n_partitions, F.col("url"))
+        fused = extract_spans(pages).repartition(n_partitions, F.col("url"))
     else:
         # token path: the token table is ~40x LARGER than the pages, so
         # here the cheap place for the explicit url-hash exchange is the
@@ -275,18 +274,15 @@ def build_kg(
         # recognize the HashPartitioning (raw `url` column, not
         # xxhash64(url)) and the token stream never re-shuffles.
         pages = pages.repartition(n_partitions, F.col("url"))
-        # window-function path (cross-check implementation): tokens feed
-        # two consumers (span pipeline + paper citations) and spans feed
-        # two (their own rows + mention mining) — cache both so the
-        # extract/label chain runs once. On a real cluster these are
+        # tokens feed two consumers (span pipeline + paper citations)
+        # and spans feed two (their own rows + mention mining) — cache
+        # both so the extract/label chain runs once. On a real cluster these are
         # the materialized intermediate Iceberg tables (SURVEY §4).
-        tokens = _cached(extract_tokens(pages, english_only=True))
-        if stages_out is not None:
-            stages_out["tokens"] = tokens
+        tokens = _cached(extract_tokens(pages))
         labeled = (
             label_tokens(tokens)
-            if labeler == "window"
-            else label_tokens_arrow(tokens, model_file=model_file)
+            if model_file is None
+            else label_tokens_arrow(tokens, model_file)
         )
         # parent-class constraint (P4 wiring): result spans are valid
         # only in segmentation {body, annex} — semi-join the labeled
@@ -386,13 +382,12 @@ def stage_lineage(spark: SparkSession, stages: dict[str, DataFrame]) -> DataFram
     """Materialize per-partition lineage for every exposed stage, with a
     per-stage wall-ms measured around that stage's lineage action.
 
-    Attribution note: stages is insertion-ordered with the first cached
-    materialization stage ('tokens' on the token path, else 'fused')
-    FIRST, so its wall-ms carries the extraction cost. The spans,
+    Attribution note: stages is insertion-ordered with the cached fused
+    table FIRST, so its wall-ms carries the extraction cost. The spans,
     mentions and citations counts ride the fused stage's single pass,
     so those three derived stages record wall_ms 0; every other stage
-    (tokens, triples) runs its own action over the warm cache and
-    measures only that work. Output is tiny (#stages x #partitions
+    (triples) runs its own action over the warm cache and measures only
+    that work. Output is tiny (#stages x #partitions
     rows), assembled driver-side so the measured walls ride along
     exactly."""
     import time
