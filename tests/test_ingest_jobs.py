@@ -3,8 +3,9 @@
 A small ``run_incremental`` batch is mostly fixed cost: the ledger
 anti-join, the dictionary canonicalization, the lineage actions and the
 commit writes. This test pins how many Spark jobs one warm batch may
-launch, and that the broadcast regime canonicalizes the dictionary on
-the driver instead of through the distributed connected-components path.
+launch, that the broadcast regime canonicalizes the dictionary on the
+driver instead of through the distributed connected-components path,
+and that building the url ledger read launches no job.
 """
 
 import uuid
@@ -15,11 +16,14 @@ from theoremkb_spark.pipeline.runner import load_entity_dict
 
 N = 24
 
-# Jobs of one warm 6-doc batch, counted by this test on local[8]: 36 with
-# a lineage action per stage, a distributed canonicalization and the todo
-# urls recomputed per consumer; 18 with one lineage pass over the fused
-# table, driver-side canonicalization and the todo urls collected once.
-MAX_BATCH_JOBS = 27
+# Jobs of one warm 6-doc batch, counted by this test on local[8]: 14 =
+# 3 ledger (the anti-join and url collect), 1 dictionary collect, 5 fused
+# lineage, 4 triples lineage and 1 triples write. The url and lineage
+# files are written on the driver, and the ledger read declares its
+# schema. Earlier counts: 36 with a lineage action per stage, a
+# distributed canonicalization and the todo urls recomputed per
+# consumer; 18 with Spark writing all four batch files.
+MAX_BATCH_JOBS = 16
 
 
 def _jobs_in_group(spark, fn) -> int:
@@ -54,4 +58,5 @@ def test_warm_batch_job_budget(spark, tmp_path, monkeypatch):
     )
     assert bids == [1]
     assert n_jobs <= MAX_BATCH_JOBS, n_jobs
-
+    # the url ledger read declares its schema: building it runs nothing
+    assert _jobs_in_group(spark, lambda: store.processed_urls(spark)) == 0

@@ -405,3 +405,65 @@ def test_iceberg_adapter_gating_and_factory(spark, tmp_path):
     assert run_incremental(spark, more, load_entity_dict(spark, 8), ice) == 1
     assert ice.read_triples(spark).count() >= n0
     assert ice.read_triples(spark, as_of_batch=0).count() == first
+
+
+def test_driver_and_spark_written_batches_round_trip(spark, tmp_path, monkeypatch):
+    """A store mixing driver-written url files (a ``limit`` batch commits
+    its collected list) with Spark-written ones (the re-crawl and
+    ``limit=None`` commit a DataFrame) reads back one lineage schema and
+    one url-file schema, resumes exactly, and a retry overwrites the
+    files of a killed attempt."""
+    import pytest
+
+    from theoremkb_spark.io import catalog
+
+    pages = load_pages(spark, N)
+    ents = load_entity_dict(spark, N)
+    store = CheckpointedTripleStore(str(tmp_path / "kg_mix"))
+    assert run_incremental(spark, pages, ents, store, limit=6) == 0
+    recrawl = pages.select("url").orderBy("url").limit(3)
+    assert recommit_urls(spark, pages, ents, store, urls=recrawl) == 1
+
+    # kill a Spark-written batch after its files, before its manifest
+    real_replace = os.replace
+
+    def killed(src, dst):
+        if os.path.dirname(dst) == store.manifest_dir:
+            raise RuntimeError("killed before the manifest commit")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m, pytest.raises(RuntimeError):
+        m.setattr(catalog.os, "replace", killed)
+        run_incremental(spark, pages, ents, store)
+    debris = os.path.join(store.out_dir, "urls/batch=2")
+    assert spark.read.parquet(debris).count() == N - 6
+    assert store.next_batch_id() == 2
+
+    # the retry is a driver-written batch over the debris, then the rest
+    assert run_incremental(spark, pages, ents, store, limit=6) == 2
+    assert run_incremental(spark, pages, ents, store) == 3
+    assert run_incremental(spark, pages, ents, store) == -1
+
+    assert store.read_lineage(spark).schema.simpleString() == (
+        "struct<stage:string,partition_id:int,rows:bigint,urls:bigint,"
+        "wall_ms:bigint,batch_id:int>"
+    )
+    sizes = {}
+    for mf in store.manifests():
+        df = spark.read.parquet(mf["urls_path"])
+        assert df.schema.simpleString() == "struct<url:string>"
+        sizes[mf["batch_id"]] = df.count()
+        assert df.distinct().count() == sizes[mf["batch_id"]]
+    assert sizes == {0: 6, 1: 3, 2: 6, 3: N - 12}
+    assert store.processed_urls(spark).count() == N
+
+    lineage = store.read_lineage(spark)
+    for mf in store.manifests():
+        b = mf["batch_id"]
+        triples = lineage.filter(f"batch_id = {b} AND stage = 'triples'")
+        committed = spark.read.parquet(mf["triples_path"]).count()
+        assert (triples.groupBy().sum("rows").first()[0] or 0) == committed, b
+    rows = {
+        (r.subj, r.pred, r.obj, r.url) for r in store.read_triples(spark).collect()
+    }
+    assert rows == _expected()

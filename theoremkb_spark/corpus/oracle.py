@@ -157,11 +157,6 @@ def oracle_doc_triples_grouped(
     return triples
 
 
-def oracle_doc_triples(doc: Doc, dico: dict[str, str]) -> set[tuple[str, str, str, str]]:
-    """(subj, pred, obj, url) triple set for one document."""
-    return set(oracle_doc_triples_grouped(doc, dico))
-
-
 def oracle_doc_spans(doc: Doc) -> list[tuple[int, str, int]]:
     """[(group, label, n_tokens)] for one English document.
 

@@ -20,6 +20,16 @@ emulated on plain parquet with an atomic manifest protocol:
   protocol: write the folded generation, then atomically swap its
   pointer JSON.
 
+A batch's files are written where its data already lives. The triples
+are a Spark DataFrame and go through a Spark write. The lineage rows are
+always a small driver-side list, and the url file is one too when the
+caller collected its urls (``run_incremental`` with a ``limit``): those
+are written with ``pyarrow.parquet`` on the driver, which saves a Spark
+job per file. A url set that is still a DataFrame (the re-crawl, a
+stream micro-batch, ``limit=None``) can be the whole corpus, so it keeps
+the Spark write. This relies on the driver seeing the store's
+filesystem, as the manifests and pointers already do.
+
 Every ingest path (``run_incremental``, ``recommit_urls`` and the
 streaming micro-batch) commits through ``_build_and_commit``.
 
@@ -35,9 +45,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,6 +64,26 @@ from ..pipeline.runner import (
 )
 
 _NO_GENERATION = {"upto_batch": -1, "path": None}
+
+# LINEAGE_SCHEMA plus the batch id, as Spark reads a committed lineage file
+_LINEAGE_ARROW = pa.schema(
+    [
+        ("stage", pa.string()),
+        ("partition_id", pa.int32()),
+        ("rows", pa.int64()),
+        ("urls", pa.int64()),
+        ("wall_ms", pa.int64()),
+        ("batch_id", pa.int32()),
+    ]
+)
+
+
+def _write_on_driver(path: str, table: pa.Table) -> None:
+    """Write ``table`` as the one parquet file of directory ``path``,
+    first clearing whatever a killed attempt left there."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -196,7 +229,9 @@ class CheckpointedTripleStore:
     def processed_urls(self, spark: SparkSession) -> DataFrame:
         """Union of the compacted url ledger (everything up to the last
         compaction point) and the per-batch url files after it — the
-        read side stays O(batches since compaction), not O(history)."""
+        read side stays O(batches since compaction), not O(history).
+        The declared schema spares the schema-inference job a parquet
+        read would otherwise launch."""
         gen = self._generation("url_ledger")
         paths = [
             m["urls_path"]
@@ -207,7 +242,7 @@ class CheckpointedTripleStore:
             paths.append(gen["path"])
         if not paths:
             return spark.createDataFrame([], "url string")
-        return spark.read.parquet(*paths).select("url").distinct()
+        return spark.read.schema("url string").parquet(*paths).distinct()
 
     def compact_url_ledger(
         self, spark: SparkSession, min_batches: int = 16
@@ -226,18 +261,28 @@ class CheckpointedTripleStore:
         merge covers pre-round-4 batches written without wall_ms."""
         paths = [m["lineage_path"] for m in self.manifests() if m.get("lineage_path")]
         if not paths:
-            return spark.createDataFrame([], LINEAGE_SCHEMA + ", batch_id long")
+            return spark.createDataFrame([], LINEAGE_SCHEMA + ", batch_id int")
         return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     # -- write side (one batch = one snapshot) ---------------------------
     def commit_batch(
         self,
         triples: DataFrame,
-        urls: DataFrame,
-        lineage: DataFrame | None = None,
+        urls: DataFrame | list[str],
+        lineage: list[tuple] | None = None,
         supersedes_urls: DataFrame | None = None,
     ) -> int:
-        """``supersedes_urls`` (a one-column ``url`` DataFrame) marks
+        """Commit one batch: its triples, the ``urls`` it marks
+        processed, its ``LINEAGE_SCHEMA`` rows from ``stage_lineage``
+        and, optionally, its supersedes. Every file is written before
+        the manifest, whose atomic rename is the one commit point.
+
+        The triples are written by Spark. The lineage rows are written
+        on the driver with pyarrow. So is the url file when ``urls`` is
+        a list, already collected by the caller; a url DataFrame can be
+        the whole corpus, so it is written by Spark.
+
+        ``supersedes_urls`` (a one-column ``url`` DataFrame) marks
         this batch as a RE-CRAWL of those urls: their triples from
         earlier batches become invisible to current reads the moment
         this manifest commits (row-level-delete emulation) while
@@ -247,14 +292,19 @@ class CheckpointedTripleStore:
         urls_path = os.path.join(self.out_dir, f"urls/batch={batch_id}")
         lineage_path = os.path.join(self.out_dir, f"lineage/batch={batch_id}")
 
-        # data first (invisible until manifested); overwrite clears any
+        # data first (invisible until manifested); each write clears any
         # debris from a previous killed attempt of the same batch id
         triples.write.mode("overwrite").parquet(triples_path)
-        urls.select("url").distinct().write.mode("overwrite").parquet(urls_path)
+        if isinstance(urls, DataFrame):
+            urls.select("url").distinct().write.mode("overwrite").parquet(urls_path)
+        else:
+            url_col = pa.array(list(dict.fromkeys(urls)), pa.string())
+            _write_on_driver(urls_path, pa.table({"url": url_col}))
         if lineage is not None:
-            lineage.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).parquet(lineage_path)
+            rows = [dict(zip(_LINEAGE_ARROW.names, (*r, batch_id))) for r in lineage]
+            _write_on_driver(
+                lineage_path, pa.Table.from_pylist(rows, schema=_LINEAGE_ARROW)
+            )
 
         supersedes_path = None
         if supersedes_urls is not None:
@@ -284,7 +334,7 @@ def _build_and_commit(
     spark: SparkSession,
     store: CheckpointedTripleStore,
     pages: DataFrame,
-    urls: DataFrame,
+    urls: DataFrame | list[str],
     entity_dict: DataFrame | None = None,
     dico: DataFrame | None = None,
     supersede: bool = False,
@@ -317,7 +367,7 @@ def _build_and_commit(
         batch_id = store.commit_batch(
             triples,
             urls,
-            stage_lineage(spark, stages),
+            stage_lineage(stages),
             supersedes_urls=urls if supersede else None,
         )
     finally:
@@ -338,8 +388,9 @@ def run_incremental(
     ``_build_and_commit``; returns the batch id or -1 when nothing is
     left to do. ``limit`` caps the batch (test hook for the
     kill-and-rerun scenario); its at most ``limit`` urls are collected
-    to the driver once, while ``limit=None`` keeps the todo set lazy.
-    The committed lineage is queryable via ``store.read_lineage(spark)``."""
+    to the driver once and committed as that list, while ``limit=None``
+    keeps the todo set lazy. The committed lineage is queryable via
+    ``store.read_lineage(spark)``."""
     done = store.processed_urls(spark)
     todo = pages.join(done, "url", "left_anti")
     if limit is None:
@@ -350,11 +401,11 @@ def run_incremental(
         # resolve the batch's url set ONCE: the ledger anti-join and the
         # sort run in this one collect, and the semi-join below and the
         # commit's url file both read the driver-side list
-        picked = todo.select("url").orderBy("url").limit(limit).collect()
-        if not picked:
+        urls = [r.url for r in todo.select("url").orderBy("url").limit(limit).collect()]
+        if not urls:
             return -1
-        urls = spark.createDataFrame([(r.url,) for r in picked], "url string")
-        todo = pages.join(F.broadcast(urls), "url", "left_semi")
+        picked = spark.createDataFrame([(u,) for u in urls], "url string")
+        todo = pages.join(F.broadcast(picked), "url", "left_semi")
     return _build_and_commit(spark, store, todo, urls, entity_dict)
 
 

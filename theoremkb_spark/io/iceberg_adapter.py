@@ -17,7 +17,11 @@ commit_batch            one transaction appending to the ``triples``,
                         ``urls``, and ``lineage`` tables (each append is
                         a snapshot commit; the batch_id rides as a
                         column, set from the table's current snapshot
-                        ordinal)
+                        ordinal). The emulation writes the lineage rows,
+                        and a url list, on the driver; here they are
+                        wrapped with ``spark.createDataFrame`` and
+                        appended like the triples (untested: the
+                        adapter cannot run without the Iceberg jars)
 read_triples            plain ``SELECT`` on the catalog table; the
                         emulation's supersede filter is unnecessary —
                         re-crawl upserts issue a real row-level
@@ -124,12 +128,14 @@ class IcebergTripleStore:
     def commit_batch(
         self,
         triples: DataFrame,
-        urls: DataFrame,
-        lineage: DataFrame | None = None,
+        urls: DataFrame | list[str],
+        lineage: list[tuple] | None = None,
         supersedes_urls: DataFrame | None = None,
     ) -> int:
         batch_id = self.next_batch_id()
         spark = self.spark
+        if not isinstance(urls, DataFrame):
+            urls = spark.createDataFrame([(u,) for u in urls], "url string")
         spark.sql(
             f"ALTER TABLE {self.triples_tbl} SET TBLPROPERTIES "
             f"('commit.manifest.min-count-to-merge'='{8}')"
@@ -158,7 +164,8 @@ class IcebergTripleStore:
         )
         if lineage is not None:
             (
-                lineage.withColumn("batch_id", F.lit(batch_id))
+                spark.createDataFrame(lineage, LINEAGE_SCHEMA)
+                .withColumn("batch_id", F.lit(batch_id))
                 .writeTo(self.lineage_tbl)
                 .append()
             )

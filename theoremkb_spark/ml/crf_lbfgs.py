@@ -43,11 +43,6 @@ from .crf import (
 C = N_CLASSES
 
 
-def _logsumexp(a: np.ndarray, axis: int) -> np.ndarray:
-    m = a.max(axis=axis, keepdims=True)
-    return (m + np.log(np.exp(a - m).sum(axis=axis, keepdims=True))).squeeze(axis)
-
-
 def _doc_nll_grad(ids, flags, gold, Wp, Wf, T, dWp, dWf, dT) -> float:
     """Accumulate one document's exact NLL and its gradient (expected
     minus empirical feature counts) into dWp/dWf/dT. Returns the NLL.

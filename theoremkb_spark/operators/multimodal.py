@@ -325,18 +325,6 @@ def text_pixels(text: str | None, width: int = 16, height: int = 16):
     return arr.reshape(height, width, 3)
 
 
-def text_to_bmp_udf(width: int = 16, height: int = 16):
-    """pandas UDF: text column -> real 24-bit BMP payload bytes."""
-
-    @F.pandas_udf(T.BinaryType())
-    def to_bmp(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [encode_bmp24(text_pixels(t, width, height)) for t in texts]
-        )
-
-    return to_bmp
-
-
 def text_to_image_udf(width: int = 16, height: int = 16):
     """pandas UDF: (id, text) -> real image payload bytes, alternating
     container by id parity (even -> BMP, odd -> PNG) so one column

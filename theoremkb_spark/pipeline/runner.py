@@ -29,6 +29,8 @@ every labeler and regime shares the one assembly.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -378,23 +380,22 @@ def _fused_lineage(fused: DataFrame) -> list[tuple[str, int, int, int]]:
     ]
 
 
-def stage_lineage(spark: SparkSession, stages: dict[str, DataFrame]) -> DataFrame:
-    """Materialize per-partition lineage for every exposed stage, with a
-    per-stage wall-ms measured around that stage's lineage action.
+def stage_lineage(stages: dict[str, DataFrame]) -> list[tuple[str, int, int, int, int]]:
+    """Per-partition lineage for every exposed stage, with a per-stage
+    wall-ms measured around that stage's lineage action: the
+    ``LINEAGE_SCHEMA`` rows (stage, partition_id, rows, urls, wall_ms).
 
     Attribution note: stages is insertion-ordered with the cached fused
     table FIRST, so its wall-ms carries the extraction cost. The spans,
     mentions and citations counts ride the fused stage's single pass,
     so those three derived stages record wall_ms 0; every other stage
     (triples) runs its own action over the warm cache and measures only
-    that work. Output is tiny (#stages x #partitions
-    rows), assembled driver-side so the measured walls ride along
-    exactly."""
-    import time
-
+    that work. The rows are tiny (#stages x #partitions), so they stay
+    a driver-side list that the store writes without another Spark job;
+    the walls come from a monotonic clock, so none is negative."""
     rows = []
     for name, df in stages.items():
-        t0 = time.time()
+        t0 = time.perf_counter()
         if name == "fused":
             part = _fused_lineage(df)
         else:
@@ -402,9 +403,9 @@ def stage_lineage(spark: SparkSession, stages: dict[str, DataFrame]) -> DataFram
                 (name, r.partition_id, r.rows, r.urls)
                 for r in lineage_rows(df, name).collect()
             ]
-        wall = int((time.time() - t0) * 1000)
+        wall = int((time.perf_counter() - t0) * 1000)
         rows.extend(
             (stage, pid, n, urls, wall if stage == name else 0)
             for stage, pid, n, urls in part
         )
-    return spark.createDataFrame(rows, LINEAGE_SCHEMA)
+    return rows

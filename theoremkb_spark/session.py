@@ -79,8 +79,3 @@ def warm_python_workers(spark: SparkSession, cpus: int | None = None) -> None:
 
     spark.range(0, cpus, 1, cpus).mapInPandas(_touch, "id long").count()
 
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
