@@ -135,7 +135,7 @@ def _with_dedup_oracle(fn):
 
 def _kg_triples_crf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KG pipeline with the TRAINED sequence model doing the
-    labeling through the Arrow inference stage — graded against the SAME
+    labeling inside the fused Arrow pass — graded against the SAME
     sequential-oracle triples parquet as the rule path: the learned
     model must reproduce the reference semantics end-to-end. Since
     round 4 the shipped artifact is the TRUE exact-NLL OWL-QN CRF

@@ -3,11 +3,14 @@
 Usage:
     spark-submit --py-files theoremkb_spark.zip scripts/run_kg.py \
         --docs 100 --out /tmp/kg_out --cpus 8 \
-        [--labeler window | --model crf_model_v1.pkl | --trainer perceptron]
+        [--model crf_model_v1.pkl | --trainer perceptron] [--store]
 
-Synthesizes the deterministic corpus, runs the six-stage pipeline, writes
-triples + lineage parquet, prints a one-line JSON summary (docs, triples,
-wall seconds, triples/sec).
+Synthesizes the deterministic corpus, runs the six-stage pipeline (the
+rule labeler, or the trained sequence model given by --model/--trainer),
+writes triples + lineage parquet (or, with --store, commits into the
+checkpointed triple store, rule labeler only), and prints a one-line
+JSON summary (docs, triples, wall seconds, triples/sec, model artifact
+name or null).
 """
 
 from __future__ import annotations
@@ -18,8 +21,6 @@ import time
 
 
 def main() -> None:
-    from theoremkb_spark.pipeline.runner import LABELERS
-
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=100)
     ap.add_argument("--seed", type=int, default=42)
@@ -31,7 +32,6 @@ def main() -> None:
         help="read the pages corpus from this parquet instead of synthesizing"
         " in-process (use scripts/make_corpus.py to materialize it)",
     )
-    ap.add_argument("--labeler", default="fused", choices=LABELERS)
     ap.add_argument(
         "--model",
         default=None,
@@ -66,14 +66,9 @@ def main() -> None:
     )
     ap.add_argument("--train-docs", type=int, default=40)
     args = ap.parse_args()
-    if args.labeler != "fused" and (args.model or args.trainer):
-        ap.error("--model/--trainer replace the rule labeler: drop --labeler")
-    if args.store and (args.labeler != "fused" or args.model or args.trainer):
-        # run_incremental always runs the fused rule labeler
-        ap.error(
-            "--store runs the fused rule labeler only:"
-            " drop --labeler/--model/--trainer"
-        )
+    if args.store and (args.model or args.trainer):
+        # run_incremental always runs the rule labeler
+        ap.error("--store runs the rule labeler only: drop --model/--trainer")
 
     import os
 
@@ -134,11 +129,7 @@ def main() -> None:
 
         warm_python_workers(spark, args.cpus)
         build_kg(
-            spark,
-            pages.limit(8),
-            labeler=args.labeler,
-            dico=dico,
-            model_file=model_file,
+            spark, pages.limit(8), dico=dico, model_file=model_file
         ).write.mode("overwrite").format("noop").save()
 
     if args.store:
@@ -157,7 +148,7 @@ def main() -> None:
             " norm_title string",
         )
         store = CheckpointedTripleStore(args.out)
-        t0 = time.time()
+        t0 = time.perf_counter()
         batches = []
         while True:
             bid = run_incremental(spark, pages, ents, store, limit=args.batch_size)
@@ -166,7 +157,7 @@ def main() -> None:
             batches.append(bid)
             if args.batch_size is None:
                 break
-        wall = time.time() - t0
+        wall = time.perf_counter() - t0
         n = store.read_triples(spark).count()
         print(
             json.dumps(
@@ -175,7 +166,7 @@ def main() -> None:
                     "triples": n,
                     "wall_s": round(wall, 2),
                     "triples_per_sec": round(n / wall, 1) if wall > 0 else None,
-                    "labeler": args.labeler,
+                    "model": model_file,
                     "batches_committed": batches,
                 }
             )
@@ -183,19 +174,15 @@ def main() -> None:
         spark.stop()
         return
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     triples = build_kg(
-        spark,
-        pages,
-        labeler=args.labeler,
-        dico=dico,
-        model_file=model_file,
+        spark, pages, dico=dico, model_file=model_file
     ).persist()  # consumed twice: triple sink + lineage rollup
     triples.write.mode("overwrite").parquet(f"{args.out}/triples")
     lineage_rows(triples, "triples").write.mode("overwrite").parquet(
         f"{args.out}/lineage"
     )
-    wall = time.time() - t0
+    wall = time.perf_counter() - t0
     triples.unpersist()
 
     n = spark.read.parquet(f"{args.out}/triples").count()
@@ -206,7 +193,7 @@ def main() -> None:
                 "triples": n,
                 "wall_s": round(wall, 2),
                 "triples_per_sec": round(n / wall, 1),
-                "labeler": args.labeler,
+                "model": model_file,
             }
         )
     )

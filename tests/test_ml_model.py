@@ -1,8 +1,9 @@
 """Learned sequence model (M1/M2): train a linear-chain averaged
 structured perceptron on the corpus gold tags, ship the pickled
-artifact to executors, Viterbi-apply it through the Arrow inference
-stage, and gate parity against the rule semantics at token, span-PR,
-and triple level (reference apply path: extractors/crf.py:89-132)."""
+artifact to executors, Viterbi-apply it inside the fused Arrow pass,
+and gate parity against the rule semantics at span/mention/cite-row,
+span-PR, and triple level (reference apply path:
+extractors/crf.py:89-132)."""
 
 import numpy as np
 import pytest
@@ -15,8 +16,7 @@ from theoremkb_spark.ml.crf import (
     ensure_crf_artifact,
     train,
 )
-from theoremkb_spark.pipeline.extract import extract_tokens, load_pages
-from theoremkb_spark.pipeline.label import label_tokens, label_tokens_arrow
+from theoremkb_spark.pipeline.extract import extract_spans, load_pages
 from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
 
 N_DOCS = 40
@@ -68,46 +68,53 @@ def test_heldout_generalization_exact():
         assert np.array_equal(m.viterbi(ids, flags), gold)
 
 
+def _assert_same_fused_rows(pages, model_file):
+    """extract_spans with the model == extract_spans with the rule
+    labeler, both ways, over every column of every span, mention and
+    cite row."""
+    rule = extract_spans(pages)
+    ml = extract_spans(pages, model_file=model_file)
+    assert rule.exceptAll(ml).isEmpty() and ml.exceptAll(rule).isEmpty()
+    kinds = {r.kind for r in ml.select("kind").distinct().collect()}
+    assert kinds == {"span", "mention", "cite"}, kinds
+
+
 def test_arrow_inference_with_trained_model_matches_rule_labels(spark, artifact):
     """The M1 path end-to-end: artifact shipped via sc.addFile, loaded
-    once per executor, Viterbi inside applyInPandas — token-level
-    (label, group) equality with the rule labeler."""
-    spark.sparkContext.addFile(artifact)
+    once per executor, Viterbi inside the fused Arrow pass — the same
+    fused rows as the rule labeler."""
     import os
 
-    pages = load_pages(spark, N_DOCS)
-    tokens = extract_tokens(pages).cache()
-    cols = ["url", "page", "block", "line", "word", "label", "group"]
-    rule = label_tokens(tokens).select(*cols)
-    ml = label_tokens_arrow(tokens, model_file=os.path.basename(artifact)).select(*cols)
-    assert rule.exceptAll(ml).isEmpty() and ml.exceptAll(rule).isEmpty()
-    tokens.unpersist()
+    spark.sparkContext.addFile(artifact)
+    _assert_same_fused_rows(load_pages(spark, N_DOCS), os.path.basename(artifact))
 
 
 def test_model_span_pr_vs_gold(spark, artifact):
-    """span_pr_report >= 0.95 gate (we hold it at 1.0)."""
+    """span_pr_report >= 0.95 gate (we hold it at 1.0): the model's span
+    rows against the sequential oracle's gold-segmentation spans."""
     from pyspark.sql import functions as F
 
+    from theoremkb_spark.corpus.oracle import oracle_doc_spans
     from theoremkb_spark.operators.evaluate import span_pr_report
 
-    pages = load_pages(spark, N_DOCS)
-    tokens = extract_tokens(pages).cache()
-    spans = lambda df: (  # noqa: E731
-        df.filter(F.col("label") != "O")
-        .groupBy("url", "group", "label")
-        .agg(F.min(F.struct("page", "block", "line", "word")).alias("s"))
-        .select("url", "group", "label")
+    keys = ["url", "group", "label"]
+    pred = (
+        extract_spans(load_pages(spark, N_DOCS), model_file=artifact)
+        .filter(F.col("kind") == "span")
+        .select(*keys)
     )
-    gold = spans(label_tokens(tokens))
-    pred = spans(label_tokens_arrow(tokens, model_file=artifact))
-    rows = {
-        r.label: r
-        for r in span_pr_report(pred, gold, keys=["url", "group", "label"]).collect()
-    }
+    gold = spark.createDataFrame(
+        [
+            (doc.url, g, label)
+            for doc, _t in build_corpus(N_DOCS)
+            for g, label, _n in oracle_doc_spans(doc)
+        ],
+        "url string, group long, label string",
+    )
+    rows = {r.label: r for r in span_pr_report(pred, gold, keys=keys).collect()}
     micro = rows["__micro__"]
     assert micro.precision >= 0.95 and micro.recall >= 0.95
     assert micro.f1 == 1.0
-    tokens.unpersist()
 
 
 def test_model_pipeline_triples_match_oracle(spark, artifact):
@@ -305,20 +312,12 @@ def test_cnn1d_trains_and_generalizes_exactly(cnn_artifact):
 
 def test_cnn1d_through_arrow_stage_matches_rule_labels(spark, cnn_artifact):
     """The M1 path applies the CNN artifact unchanged (same applier
-    contract as the chain models): token-level (label, group) equality
-    with the rule labeler across whole documents."""
+    contract as the chain models): the same fused rows as the rule
+    labeler across whole documents."""
     import os
 
     spark.sparkContext.addFile(cnn_artifact)
-    pages = load_pages(spark, 24)
-    tokens = extract_tokens(pages).cache()
-    cols = ["url", "page", "block", "line", "word", "label", "group"]
-    rule = label_tokens(tokens).select(*cols)
-    ml = label_tokens_arrow(
-        tokens, model_file=os.path.basename(cnn_artifact)
-    ).select(*cols)
-    assert rule.exceptAll(ml).isEmpty() and ml.exceptAll(rule).isEmpty()
-    tokens.unpersist()
+    _assert_same_fused_rows(load_pages(spark, 24), os.path.basename(cnn_artifact))
 
 
 # ---- transformer text classifier (M6, ml/textformer.py) -----------------

@@ -3,12 +3,14 @@ triple P/R vs the reference-semantics oracle, two-run determinism,
 fused-vs-window labeler agreement."""
 
 import pytest
+from window_path import window_fused
 
 from theoremkb_spark.corpus.generator import build_corpus, entity_dict_rows
 from theoremkb_spark.corpus.oracle import oracle_triples
+from theoremkb_spark.pipeline.canon import canonicalize_dict
 from theoremkb_spark.pipeline.extract import extract_text, extract_tokens, load_pages
 from theoremkb_spark.pipeline.label import label_tokens
-from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
+from theoremkb_spark.pipeline.runner import build_kg, build_triples, load_entity_dict
 
 N_DOCS = 40
 
@@ -53,24 +55,15 @@ def test_two_run_determinism(spark, pages, entity_dict):
 def test_fused_and_window_paths_emit_identical_triples(spark, pages, entity_dict):
     """The fused single-Arrow-pass front end and the window-function
     pipeline are alternative physical plans of the same logical job."""
-    fused = build_kg(spark, pages, entity_dict, labeler="fused")
-    window = build_kg(spark, pages, entity_dict, labeler="window")
+    fused = build_kg(spark, pages, entity_dict)
+    window = build_triples(window_fused(pages), canonicalize_dict(entity_dict), True)
     assert fused.exceptAll(window).isEmpty()
     assert window.exceptAll(fused).isEmpty()
 
 
-def test_build_kg_rejects_bad_inputs(spark, pages, entity_dict):
-    """An unknown labeler, a model with the window labeler, or neither
-    dictionary input fails fast with a ValueError naming the allowed
-    inputs."""
-    with pytest.raises(ValueError, match="fused"):
-        build_kg(spark, pages, entity_dict, labeler="windw")
-    with pytest.raises(ValueError, match="fused"):
-        build_kg(spark, pages, entity_dict, labeler="arrow")
-    with pytest.raises(ValueError, match="fused"):
-        build_kg(
-            spark, pages, entity_dict, labeler="window", model_file="crf_model_v1.pkl"
-        )
+def test_build_kg_rejects_bad_inputs(spark, pages):
+    """Neither dictionary input fails fast with a ValueError naming the
+    required inputs."""
     with pytest.raises(ValueError, match="entity_dict or dico"):
         build_kg(spark, pages)
 
@@ -110,16 +103,17 @@ def test_window_path_regexes_case_insensitive(spark):
 
 
 @pytest.mark.parametrize("regime", ["broadcast", "salted"])
-@pytest.mark.parametrize("labeler", ["fused", "window"])
+@pytest.mark.parametrize("path", ["fused", "window"])
 def test_triple_groups_match_sequential_oracle(
-    spark, pages, entity_dict, labeler, regime, tmp_path, monkeypatch
+    spark, pages, entity_dict, path, regime, tmp_path, monkeypatch
 ):
     """Provenance groups (min span group per triple) must match the
     sequential oracle — the surface behind the kg_triples DuckDB gate —
     for both front ends in both dictionary-join regimes. The salted
     regime reads the dictionary back from parquet (a driver-local
     frame's unknowable estimate always counts as broadcast-sized) and
-    lowers the broadcast threshold under it."""
+    lowers the broadcast threshold under it; the window path takes the
+    regime build_kg would pick."""
     from theoremkb_spark.corpus.oracle import oracle_triples_grouped
     from theoremkb_spark.operators import joins
 
@@ -128,7 +122,14 @@ def test_triple_groups_match_sequential_oracle(
         entity_dict.write.parquet(path)
         entity_dict = spark.read.parquet(path)
         monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", -1)
-    kg = build_kg(spark, pages, entity_dict, labeler=labeler)
+    if path == "fused":
+        kg = build_kg(spark, pages, entity_dict)
+    else:
+        kg = build_triples(
+            window_fused(pages),
+            canonicalize_dict(entity_dict),
+            joins.fits_broadcast(entity_dict),
+        )
     got = {(r.subj, r.pred, r.obj, r.url): r.group for r in kg.collect()}
     exp = oracle_triples_grouped(list(build_corpus(N_DOCS)), entity_dict_rows(N_DOCS))
     assert got == exp

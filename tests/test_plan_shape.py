@@ -50,9 +50,16 @@ def _assert_one_triple_explode(plan: str) -> None:
 
 
 def test_kg_plan_shape(spark, tmp_path, monkeypatch):
+    from window_path import window_fused
+
     from theoremkb_spark.operators import joins
+    from theoremkb_spark.pipeline.canon import canonicalize_dict
     from theoremkb_spark.pipeline.extract import load_pages
-    from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
+    from theoremkb_spark.pipeline.runner import (
+        build_kg,
+        build_triples,
+        load_entity_dict,
+    )
 
     pages_path = str(tmp_path / "pages.parquet")
     load_pages(spark, 24).write.parquet(pages_path)
@@ -114,8 +121,8 @@ def test_kg_plan_shape(spark, tmp_path, monkeypatch):
     # four predicates (a per-predicate union form has no such node)
     _assert_one_triple_explode(plan)
 
-    # every labeler and dictionary regime shares that one assembly; the
-    # salted regime's dictionary attach is exactly one salted join. The
+    # every front end and dictionary regime shares that one assembly;
+    # the salted regime's dictionary attach is exactly one salted join. The
     # salted regime takes a file-backed dictionary over the threshold (a
     # driver-local frame's unknowable estimate counts as small)
     ents_path = str(tmp_path / "ents.parquet")
@@ -128,8 +135,31 @@ def test_kg_plan_shape(spark, tmp_path, monkeypatch):
         r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[[^\n]*_salt", salted
     )
     assert len(salted_joins) == 1, salted
-    window = plan_string(build_kg(spark, pages, ents, labeler="window"))
+    window = plan_string(
+        build_triples(window_fused(pages), canonicalize_dict(ents), True)
+    )
     _assert_one_triple_explode(window)
+
+
+def test_kg_model_plan_is_the_rule_plan(spark, tmp_path):
+    """A trained model labels inside the same map-only Arrow pass as the
+    rule labeler: no grouped-map inference stage, no cached token table,
+    and the rule plan's exchanges, joins, Arrow stages and scans."""
+    from theoremkb_spark.ml.crf import ensure_crf_artifact
+    from theoremkb_spark.pipeline.extract import load_pages
+    from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
+
+    pages_path = str(tmp_path / "pages.parquet")
+    load_pages(spark, 24).write.parquet(pages_path)
+    pages = spark.read.parquet(pages_path)
+    ents = load_entity_dict(spark, 24)
+    artifact = ensure_crf_artifact(str(tmp_path), trainer="perceptron")
+    rule = plan_string(build_kg(spark, pages, ents))
+    model = plan_string(build_kg(spark, pages, ents, model_file=artifact))
+    assert "FlatMapGroupsInPandas" not in model, model
+    assert "InMemoryRelation" not in model, model
+    facts = plan_facts(model)
+    assert facts == plan_facts(rule), facts
 
 
 def test_fuzzy_link_plan_broadcasts_dictionary(spark, caches):

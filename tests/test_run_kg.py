@@ -1,5 +1,5 @@
 """``scripts/run_kg.py --store`` commits through ``run_incremental``,
-which always runs the fused rule labeler: a labeler choice given with
+which always runs the rule labeler: a sequence model given with
 ``--store`` is rejected as a usage error before any Spark session
 starts, instead of shaping only the warm-up."""
 
@@ -34,11 +34,10 @@ finally:
 @pytest.mark.parametrize(
     "flags",
     [
-        ["--labeler", "window"],
         ["--trainer", "perceptron"],
         ["--model", "crf_model_v1.pkl"],
     ],
-    ids=["labeler", "trainer", "model"],
+    ids=["trainer", "model"],
 )
 def test_store_rejects_labeler_choice(flags):
     proc = subprocess.run(
@@ -50,5 +49,5 @@ def test_store_rejects_labeler_choice(flags):
         timeout=120,
     )
     assert proc.returncode == 2, proc.stderr
-    assert "--store runs the fused rule labeler only" in proc.stderr
+    assert "--store runs the rule labeler only" in proc.stderr
     assert "active session: None" in proc.stdout

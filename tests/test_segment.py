@@ -71,16 +71,27 @@ def _lookalike_doc_ids(n: int) -> list[int]:
     return out
 
 
-def test_front_matter_lookalikes_rejected(spark):
+def test_front_matter_lookalikes_rejected(spark, tmp_path):
     """A bold 'Theorem 9.9.' in the abstract (and 'Theorem 9.8.' in the
     acknowledgements) IS matched by the label layer but must produce NO
     triples: the parent constraint rejects result spans outside
-    segmentation {body, annex}. Both pipeline paths are checked; the
-    unconstrained label layer is probed to prove the lookalike is real
-    (i.e. the constraint, not the labeler, is doing the rejection)."""
+    segmentation {body, annex}. Every front end is checked — the fused
+    pass with the rule labeler and with a trained model (trained on the
+    unconstrained rule tags, so it tags the lookalikes too), and the
+    window path; the unconstrained label layer is probed to prove the
+    lookalike is real (i.e. the constraint, not the labeler, is doing
+    the rejection)."""
+    from window_path import window_fused
+
+    from theoremkb_spark.ml.crf import ensure_crf_artifact
+    from theoremkb_spark.pipeline.canon import canonicalize_dict
     from theoremkb_spark.pipeline.extract import extract_tokens, load_pages
     from theoremkb_spark.pipeline.label import label_tokens
-    from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
+    from theoremkb_spark.pipeline.runner import (
+        build_kg,
+        build_triples,
+        load_entity_dict,
+    )
 
     n = 20
     ids = _lookalike_doc_ids(n)
@@ -88,6 +99,7 @@ def test_front_matter_lookalikes_rejected(spark):
 
     pages = load_pages(spark, n)
     tokens = extract_tokens(pages)
+    ents = load_entity_dict(spark, n)
 
     # the UNCONSTRAINED label layer sees the lookalike spans
     raw = (
@@ -99,35 +111,44 @@ def test_front_matter_lookalikes_rejected(spark):
     )
     assert raw >= len(ids)
 
-    # ... but neither path emits a triple for them
-    for lab in ("fused", "window"):
-        triples = build_kg(
-            spark, pages, load_entity_dict(spark, n), labeler=lab
-        ).collect()
+    # ... but no path emits a triple for them
+    model = ensure_crf_artifact(str(tmp_path), trainer="perceptron")
+    paths = {
+        "fused": build_kg(spark, pages, ents),
+        "model": build_kg(spark, pages, ents, model_file=model),
+        "window": build_triples(window_fused(pages), canonicalize_dict(ents), True),
+    }
+    for name, kg in paths.items():
         bad = [
-            r for r in triples
+            r for r in kg.collect()
             if "theorem 9.9" in r.subj or "theorem 9.8" in r.subj
             or "theorem 9.9" in r.obj or "theorem 9.8" in r.obj
         ]
-        assert not bad, (lab, bad[:3])
+        assert not bad, (name, bad[:3])
 
 
-def test_annex_results_kept_and_group_gaps(spark):
+def test_annex_results_kept_and_group_gaps(spark, tmp_path):
     """The constraint must KEEP appendix (annex) results, and a rejected
     open still consumes a group number — the label layer numbers every
-    span, the constraint only drops boxes (reference layer split)."""
+    span, the constraint only drops boxes (reference layer split). A
+    trained model's spans go through the same constraint, so they keep
+    the same numbers and gaps."""
     from theoremkb_spark.corpus.generator import build_corpus, render_html
-    from theoremkb_spark.pipeline.extract import _doc_spans
+    from theoremkb_spark.ml.crf import ensure_crf_artifact
+    from theoremkb_spark.pipeline.extract import _doc_spans, _load_model
 
     from theoremkb_spark.functions.text import RESULT_LABELS, get_pattern
 
     n = 20
     label_set = frozenset(RESULT_LABELS)
+    model = _load_model(ensure_crf_artifact(str(tmp_path), trainer="perceptron"))
     checked_annex = checked_gap = False
     for doc, _t in build_corpus(n):
         if doc.lang != "en":
             continue
-        spans, _tags = _doc_spans(doc.url, render_html(doc))
+        html = render_html(doc)
+        spans, _tags = _doc_spans(doc.url, html)
+        assert _doc_spans(doc.url, html, model) == (spans, _tags), doc.idx
         groups = [g for g, _l, _t2, _o in spans]
 
         # gold replay: every open consumes a group number; only opens in

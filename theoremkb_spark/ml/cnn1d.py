@@ -23,8 +23,8 @@ carries that signal into the window, which is why decode-exact is
 reachable.
 
 The artifact exposes the same applier interface as the chain models
-(``vocab`` + ``viterbi(ids, flags)`` -> class path), so the Arrow
-inference stage (pipeline/label.py, M1) applies it unchanged.
+(``vocab`` + ``viterbi(ids, flags)`` -> class path), so the fused
+Arrow pass (pipeline/extract.py, M1) applies it unchanged.
 """
 
 from __future__ import annotations

@@ -23,7 +23,7 @@ semantics, whose open/close conditions are linearly separable in the
 emission features below plus first-order transitions. The artifact
 ships to executors like any model file (``spark-submit --files`` /
 ``sc.addFile``) and is loaded once per executor by
-``pipeline.label._get_model`` (M1).
+``pipeline.extract._load_model`` (M1).
 
 BIO decode (tags -> label + running group number) mirrors
 ``extractors/crf.py:113-131``: a B- tag opens a new group; I- continues
@@ -246,7 +246,7 @@ def load_artifact(path: str):
     (``vocab`` + ``viterbi(ids, flags)``): the perceptron and the true
     lbfgs CRF (ml/crf_lbfgs.py) share the chain weight layout; the
     CNN1D window tagger (ml/cnn1d.py) brings its own forward pass. The
-    Arrow inference stage (M1) is identical for all three."""
+    fused Arrow pass (M1) applies all three the same way."""
     with open(path, "rb") as f:
         art = pickle.load(f)
     kind = art.get("kind")

@@ -6,8 +6,8 @@ nor scipy ships in this image.
 
 Same parameterization as the perceptron twin (ml/crf.py): emission
 weights Wp (pattern one-hot) + Wf (8 binary flags), first-order
-transitions T with a dedicated start row — so the Arrow inference stage
-(pipeline/label.py, Viterbi via ChainPerceptron) applies either artifact
+transitions T with a dedicated start row — so the fused Arrow pass
+(pipeline/extract.py, Viterbi via ChainPerceptron) applies either artifact
 unchanged; only the TRAINER differs.
 
 Pieces, all public-textbook algorithms:

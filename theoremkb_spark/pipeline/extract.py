@@ -1,21 +1,28 @@
-"""Stage 1 — EXTRACT: html -> token stream + extracted text.
+"""Stage 1 — EXTRACT: html -> fused span rows, token stream, extracted text.
 
 Replaces the reference's pdfalto subprocess + lxml scan
 (``Styling/src/lib/paper/__init__.py:230-244``, ``paper/features.py:43-79``)
-with a deterministic Arrow-batched ``mapInPandas`` parser over the
+with deterministic Arrow-batched ``mapInPandas`` parsers over the
 ``html:binary`` column. No shelling out, no per-row Python UDFs — one
 Python invocation per Arrow batch, heavy work amortized per document.
 
-Per-row invariant (BASELINE.json input_hint): the extracted text is
-byte-identical to the reference extraction semantics per url
-(``get_text``: words joined by spaces within a line, '\\n' per line —
-``Styling/src/lib/misc/__init__.py:9-25``). ``extract_text`` exists to
-prove that invariant; the pipeline itself consumes ``extract_tokens``.
+* ``extract_spans`` — what ``build_kg`` consumes: one pass per document
+  that labels (rule state machine, or a trained sequence model),
+  assembles and names result spans, mines mentions and collects
+  citation anchors (``_doc_spans``). The token table never exists.
+* ``extract_tokens`` — the long token table (FIXTURES.md §2), input of
+  the window-function labeler, the segmenter, the feature frame and
+  model training.
+* ``extract_text`` — the per-row invariant (BASELINE.json input_hint):
+  the extracted text is byte-identical to the reference extraction
+  semantics per url (``get_text``: words joined by spaces within a
+  line, '\\n' per line — ``Styling/src/lib/misc/__init__.py:9-25``).
 
-Scale notes: the parse is a narrow map — no shuffle. Input is
-repartitioned by xxhash64(url) upstream (north rule) so document skew
-spreads across tasks; Arrow batch size is capped in session.py so one
-giant document cannot blow a batch.
+Scale notes: every parse is a narrow map over the page scan — no
+shuffle. The scan's byte-bounded splits balance the html across tasks,
+and ``build_kg`` repartitions by url only the small fused output; the
+Arrow batch size is capped in session.py so one giant document cannot
+blow a batch.
 """
 
 from __future__ import annotations
@@ -201,18 +208,24 @@ SPANS_FUSED_SCHEMA = T.StructType(
 )
 
 
-def _doc_spans(url: str, html: bytes):
+def _doc_spans(url: str, html: bytes, model=None):
     """One document -> (span rows, citation tags), fused.
 
-    Runs the naive-rule labeler state machine (naive_extractor.py:20-55),
-    link-marker transforms + ordered span-text assembly + normalization
-    (extract_results, extract_graph.py:147-221) and own-name resolution
-    with the last-theorem fallback (extract_graph.py:243-265) in ONE
-    sequential pass over the parse — the per-document-sequential
-    semantics SURVEY §7.4.2 isolates in the Arrow stage. Exactly the
-    token-level semantics of the window-function path
-    (label.label_tokens + mentions.assemble_spans/resolve_span_names),
-    which stays as the cross-checked alternative implementation.
+    ONE sequential pass over the parse runs the link-marker transforms +
+    ordered span-text assembly + normalization (extract_results,
+    extract_graph.py:147-221) and own-name resolution with the
+    last-theorem fallback (extract_graph.py:243-265) — the
+    per-document-sequential semantics SURVEY §7.4.2 isolates in the
+    Arrow stage. Only the open/close decision depends on the labeler:
+
+    * ``model`` None: the naive-rule state machine
+      (naive_extractor.py:20-55) decides while scanning — exactly the
+      token-level semantics of the window-function labeler
+      (label.label_tokens + mentions.assemble_spans/resolve_span_names),
+      which stays as the cross-checked alternative implementation;
+    * a loaded sequence model (``_load_model``): the scan collects every
+      token's model inputs, and after it the model Viterbi-tags and
+      BIO-decodes the whole document (``extractors/crf.py:89-132``).
     """
     from ..functions.text import (
         RE_NONWORD,
@@ -224,6 +237,11 @@ def _doc_spans(url: str, html: bytes):
 
     spans: list[list] = []  # [group, label, parts]
     cite_tags: set[str] = set()
+    # with a model: per token (text, bold, italic, word, line, block n,
+    # marked text, in a result segment) — exactly the inputs the token
+    # table gave the model; block is the `n` attribute, not an ordinal,
+    # since featurize's block-head roll-up compares consecutive values
+    toks: list[tuple] | None = None if model is None else []
     state_open = False
     group = 0
     num_mark = _RE_NUM_MARK
@@ -239,7 +257,8 @@ def _doc_spans(url: str, html: bytes):
     # still CONSUMES a group number — the label layer numbers spans, the
     # constraint only drops boxes, exactly the reference's layer split.
     segment = "front"
-    labels = RESULT_LABEL_SET
+    # the rule vocabulary; a model opens no span during the scan
+    labels = RESULT_LABEL_SET if model is None else frozenset()
     seg_markers = _SEG_MARKERS
     result_segments = RESULT_PARENT_SEGMENTS
 
@@ -247,9 +266,10 @@ def _doc_spans(url: str, html: bytes):
     # findall hierarchy: one alternation regex walks the document once,
     # where the nested form rescans and COPIES every body substring at
     # each level (~4x character scanning + ~3x string copies). Measured
-    # 2.4x faster over the corpus with byte-identical output; the fused
-    # labeler only needs text/italic/bold/link and the line/word
-    # ordinals, so the 16-column token table is never materialized.
+    # 2.4x faster over the corpus with byte-identical output; either
+    # labeler only needs text/italic/bold/link, the line/word ordinals
+    # and the block n, so the 16-column token table is never
+    # materialized.
     # Open/close markers are tracked so stray words outside a
     # page>block>line nesting are dropped exactly like the nested form
     # (both paths treat malformed structure conservatively; token-level
@@ -262,7 +282,7 @@ def _doc_spans(url: str, html: bytes):
         s = html.decode("utf-8")
         fonts = _parse_fonts(s)
         in_page = in_block = in_line = False
-        li = -1
+        li = block_n = -1
         wi = 0
         for m in _RE_FUSED_SCAN.finditer(s):
             # one C call fetches all 7 captures (vs a group(1) probe plus
@@ -275,9 +295,10 @@ def _doc_spans(url: str, html: bytes):
                     li += 1
                     wi = 0
                     in_line = True
-                elif c == "d":  # <div class="block" ...>
+                elif c == "d":  # <div class="block" n="...">
                     in_block = True
                     li = -1
+                    block_n = int(tok[22:-2])  # the n="..." digits
                 elif c == "s":  # <section class="page" ...>
                     in_page = True
                 elif tok[2] == "p":  # </p>
@@ -321,10 +342,29 @@ def _doc_spans(url: str, html: bytes):
                 marked = text
             if state_open:
                 spans[-1][2].append(marked)
+            elif toks is not None:
+                italic, _math, bold, _size = fonts.get(fid, no_font)
+                toks.append(
+                    (text, bold, italic, wi, li, block_n, marked,
+                     segment in result_segments)
+                )
             wi += 1
     except Exception:
         # one malformed real-world page never kills a corpus run
         return [], []
+
+    if toks:
+        from ..ml.crf import decode_bio, predict_tags
+
+        texts, bold, italic, word, line, block, marks, kept = zip(*toks)
+        tags = predict_tags(model, texts, bold, italic, word, line, block)
+        for label, g, mark, ok in zip(*decode_bio(tags), marks, kept):
+            # the parent constraint drops tokens, not groups: a span
+            # opened outside {body, annex} still consumed its number
+            if label != "O" and ok:
+                if not spans or spans[-1][0] != g:
+                    spans.append([g, label, []])
+                spans[-1][2].append(mark)
 
     out = []
     last_thm = None
@@ -366,17 +406,47 @@ _RE_FUSED_SCAN = re.compile(
 )
 
 
-def extract_spans(pages: DataFrame) -> DataFrame:
+_MODEL_CACHE: dict = {}  # one loaded model per (executor process, artifact)
+
+
+def _resolve_artifact(name: str) -> str:
+    """Absolute path, or a name registered through SparkContext.addFile
+    (resolved per-executor via SparkFiles)."""
+    import os
+
+    if os.path.exists(name):
+        return name
+    from pyspark import SparkFiles
+
+    return SparkFiles.get(name)
+
+
+def _load_model(artifact: str):
+    """A TRAINED pickled sequence model (``ml.crf.load_artifact``: the
+    chain perceptron, the lbfgs CRF or the CNN1D tagger), loaded ONCE
+    per executor process and memoized across tasks and batches (M1)."""
+    if artifact not in _MODEL_CACHE:
+        from ..ml.crf import load_artifact
+
+        _MODEL_CACHE[artifact] = load_artifact(_resolve_artifact(artifact))
+    return _MODEL_CACHE[artifact]
+
+
+def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
     """English pages -> fused (span | mention | cite) rows: the
     single-Arrow-pass front end.
 
-    Output partitioning follows the input (narrow map): with pages
-    repartitioned by url upstream, the result is a tiny table (~20 rows
-    per document instead of ~800 tokens), so nothing downstream ever
-    shuffles the token stream. Replaces extract_tokens -> label_tokens ->
-    assemble_spans -> resolve_span_names -> paper_citations (the
-    window-function path, kept for cross-checking) with one python pass;
-    the JVM window/collect_list pipeline measured ~19 us/token under full
+    ``model_file``, a pickled sequence-model artifact (``ml.crf``; an
+    absolute path or a name registered via ``sc.addFile``), replaces the
+    rule labeler inside the same pass; everything else is shared.
+
+    Output partitioning follows the input (narrow map), and the result
+    is a tiny table (~20 rows per document instead of ~800 tokens), so
+    nothing downstream ever shuffles the token stream. Replaces
+    extract_tokens -> label_tokens -> assemble_spans ->
+    resolve_span_names -> paper_citations (the window-function path,
+    kept for cross-checking) with one python pass; the JVM
+    window/collect_list pipeline measured ~19 us/token under full
     parallelism (sort+object-agg cache thrash) vs ~2 us/token here.
     """
     src = pages.filter(F.col("lang") == "en").select("url", "html")
@@ -385,6 +455,7 @@ def extract_spans(pages: DataFrame) -> DataFrame:
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.text import find_ref_results
 
+        model = None if model_file is None else _load_model(model_file)
         cols: dict[str, list] = {n: [] for n in names}
         n_buf = 0
 
@@ -411,7 +482,7 @@ def extract_spans(pages: DataFrame) -> DataFrame:
             for url, html in zip(pdf["url"], pdf["html"]):
                 if html is None:
                     continue
-                spans, tags = _doc_spans(url, bytes(html))
+                spans, tags = _doc_spans(url, bytes(html), model)
                 n = 0
                 for g, label, text, own in spans:
                     emit(url, "span", g, label, text, own, None, None, None, None)

@@ -13,18 +13,16 @@ defined_in — mapped from the reference's graph tables
 FIXTURES.md §6. Output is distinct on (subj, pred, obj, url) with
 group = min provenance span.
 
-In the fused (production) path the html NEVER shuffles: extraction is a
-map-only Arrow pass over the byte-balanced source scan, and the
-explicit url-hash repartition (north rule) lands on the ~40x smaller
-fused span table, whose HashPartitioning every downstream
-groupBy/window reuses. A broadcast-sized dictionary is canonicalized on
-the driver (the salted regime, whose dictionary is too big for that,
-keeps the distributed CC). The token path — the window-function
-cross-check, or a trained model applied by the Arrow inference stage —
-inverts the choice (there the token table is the big one, so the pages
-repartition before tokenization is the cheap side) and unions its
-spans, mentions and citation anchors into the same fused shape, so
-every labeler and regime shares the one assembly.
+The html NEVER shuffles: extraction is a map-only Arrow pass over the
+byte-balanced source scan, whichever labeler (the rule state machine,
+or a trained sequence model) opens the spans, and the explicit url-hash
+repartition (north rule) lands on the ~40x smaller fused span table,
+whose HashPartitioning every downstream groupBy/window reuses. A
+broadcast-sized dictionary is canonicalized on the driver (the salted
+regime, whose dictionary is too big for that, keeps the distributed
+CC). ``build_triples`` takes any fused-shaped table, so the
+window-function cross-check (label.label_tokens + mentions.*) can be
+assembled by the same code.
 """
 
 from __future__ import annotations
@@ -36,14 +34,11 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import fits_broadcast
 from .canon import canonicalize_dict
-from .extract import extract_tokens
-from .label import label_tokens, label_tokens_arrow
+from .extract import extract_spans
 from .link import _resolve
-from .mentions import assemble_spans, mine_mentions, paper_citations, resolve_span_names
 
 TRIPLE_COLS = ["subj", "pred", "obj", "url", "group"]
 TRIPLE_SCHEMA = "subj string, pred string, obj string, url string, group long"
-LABELERS = ("fused", "window")
 
 
 def load_entity_dict(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
@@ -83,8 +78,9 @@ def build_triples(fused: DataFrame, dico: DataFrame, broadcast: bool) -> DataFra
     Each row emits its triples through a conditional-array explode, and
     the dictionary is attached by ONE left join (``link._resolve``), so
     the broadcast and salted regimes (``broadcast``, which ``build_kg``
-    decides) differ only inside that join. With the fused labeler in
-    the broadcast regime the whole assembly is exchange-free: broadcast
+    decides) differ only inside that join. Over ``build_kg``'s
+    url-repartitioned table, in the broadcast regime the whole assembly
+    is exchange-free: broadcast
     preserves the stream side's partitioning, and the final
     groupBy(subj, pred, obj, url) reuses the url repartition's
     HashPartitioning — url is a subset of the grouping keys — so the
@@ -179,7 +175,6 @@ def build_kg(
     spark: SparkSession,
     pages: DataFrame,
     entity_dict: DataFrame | None = None,
-    labeler: str = "fused",
     dico: DataFrame | None = None,
     model_file: str | None = None,
     cache_registry: list[DataFrame] | None = None,
@@ -187,15 +182,12 @@ def build_kg(
 ) -> DataFrame:
     """pages + entity_dict -> triples DataFrame (lazy).
 
-    ``labeler`` is one of ``LABELERS``: "fused" (the single Arrow pass
-    of the rule labeler) or "window" (the token path, the rule labeler
-    as window functions). ``model_file``, a pickled sequence-model
-    artifact (``ml.crf``; a path or an ``sc.addFile`` name), replaces
-    the rule labeler: the token path labels with
-    ``label_tokens_arrow``. It goes with the default "fused" only; with
-    "window" it raises ``ValueError``, as does any other labeler.
-    Either path yields one fused-shaped table of span, mention and cite
-    rows, and ``build_triples`` assembles it.
+    One plan for every input: ``extract.extract_spans`` (map-only over
+    the page scan) -> url repartition -> ``build_triples``. The rule
+    labeler opens the spans unless ``model_file``, a pickled
+    sequence-model artifact (``ml.crf``; a path or an ``sc.addFile``
+    name), is given: then the model labels each document inside the
+    same Arrow pass.
 
     The dictionary regime is decided once, from the size estimate of
     the raw dictionary input (``entity_dict``, else ``dico``; see
@@ -209,39 +201,16 @@ def build_kg(
     rows are already driver-resident. One of the two is required.
 
     Pass ``cache_registry`` (a list) to collect the cached stage
-    intermediates; hand it to ``release_caches`` after the terminal
-    action so looped callers don't leak cached blocks.
+    intermediates (the fused table, cached only for ``stages_out``);
+    hand it to ``release_caches`` after the terminal action so looped
+    callers don't leak cached blocks.
 
     Pass ``stages_out`` (a dict) to receive the cached fused table —
     the hook ``stage_lineage`` uses to commit per-stage, per-partition
     lineage rows through the checkpoint store.
     """
-    if labeler not in LABELERS:
-        raise ValueError(f"unknown labeler {labeler!r}: expected one of {LABELERS}")
-    if model_file is not None and labeler != "fused":
-        raise ValueError(f"a model_file goes with labeler='fused', not {labeler!r}")
     if entity_dict is None and dico is None:
         raise ValueError("build_kg needs entity_dict or dico (or both)")
-
-    def _cached(df: DataFrame) -> DataFrame:
-        df = df.cache()
-        if cache_registry is not None:
-            cache_registry.append(df)
-        return df
-
-    # Fused path: the repartitioned table is the ~40x-reduced span table
-    # (tens of MB at bench scale), so partitions = cores — every extra
-    # partition multiplies the task count of every downstream scan of
-    # it (4x cores measured 768 tasks and 8.9 s min-of-5 vs 5.2 s at 1x
-    # under the round-3 six-branch plan; see BENCH/RECONCILE_r03.md).
-    # Skew is already handled upstream: the map-only extraction balances
-    # html by byte-bounded scan splits, and url-hash spreads documents
-    # evenly. Token path: the repartition lands on the PAGES feeding a
-    # ~40x larger token table, where scheduler slack around document
-    # skew still pays — keep 4x there.
-    token_path = labeler == "window" or model_file is not None
-    mult = 4 if token_path else 1
-    n_partitions = mult * spark.sparkContext.defaultParallelism
 
     # decide the regime ONCE here, from the RAW dictionary input: the
     # canonicalized dico's own plan runs through the CC joins, whose
@@ -252,71 +221,33 @@ def build_kg(
     # (driver-side or distributed), below.
     broadcast = fits_broadcast(entity_dict if entity_dict is not None else dico)
 
-    if not token_path:
-        # single Arrow pass: parse + label + span assembly + name
-        # resolution + mention mining per document
-        # (extract.extract_spans), MAP-ONLY over the source scan: one
-        # page row is one whole document, so the per-doc UDF needs no
-        # co-location, and the scan's byte-bounded splits
-        # (spark.sql.files.maxPartitionBytes) already balance the html
-        # across tasks — shuffling the full html corpus before
-        # extraction was pure cost (measured 1.6x wall at 9600 docs;
-        # at 100 TB it is the difference between shuffling 100 TB and
-        # shuffling the ~40x smaller span table). The explicit url-hash
-        # repartition (north rule) is applied to the FUSED output
-        # instead, where it is nearly free and hands every downstream
-        # groupBy/window a reusable HashPartitioning.
-        from .extract import extract_spans
-
-        fused = extract_spans(pages).repartition(n_partitions, F.col("url"))
-    else:
-        # token path: the token table is ~40x LARGER than the pages, so
-        # here the cheap place for the explicit url-hash exchange is the
-        # pages — the downstream Window.partitionBy("url")/groupBy
-        # recognize the HashPartitioning (raw `url` column, not
-        # xxhash64(url)) and the token stream never re-shuffles.
-        pages = pages.repartition(n_partitions, F.col("url"))
-        # tokens feed two consumers (span pipeline + paper citations)
-        # and spans feed two (their own rows + mention mining) — cache
-        # both so the extract/label chain runs once. On a real cluster these are
-        # the materialized intermediate Iceberg tables (SURVEY §4).
-        tokens = _cached(extract_tokens(pages))
-        labeled = (
-            label_tokens(tokens)
-            if model_file is None
-            else label_tokens_arrow(tokens, model_file)
-        )
-        # parent-class constraint (P4 wiring): result spans are valid
-        # only in segmentation {body, annex} — semi-join the labeled
-        # span tokens against the 8-label segmenter's allowed blocks.
-        # The fused path applies the identical state machine inside its
-        # Arrow pass; both are gated to emit identical triples.
-        from .segment import apply_parent_constraint
-
-        labeled = apply_parent_constraint(labeled, tokens)
-        spans = _cached(resolve_span_names(assemble_spans(labeled)))
-        # the same fused shape extract_spans emits: one row per span,
-        # mention and doc-wide citation anchor, told apart by `kind`
-        mentions = mine_mentions(spans).withColumnRenamed("kind", "ref_kind")
-        fused = (
-            spans.select("url", "group", "label", "text", "own_name")
-            .withColumn("kind", F.lit("span"))
-            .unionByName(
-                mentions.withColumn("kind", F.lit("mention")),
-                allowMissingColumns=True,
-            )
-            .unionByName(
-                paper_citations(tokens).withColumn("kind", F.lit("cite")),
-                allowMissingColumns=True,
-            )
-        )
+    # single Arrow pass: parse + label + span assembly + name resolution
+    # + mention mining per document (extract.extract_spans), MAP-ONLY
+    # over the source scan: one page row is one whole document, so the
+    # per-doc UDF needs no co-location, and the scan's byte-bounded
+    # splits (spark.sql.files.maxPartitionBytes) already balance the
+    # html across tasks — shuffling the full html corpus before
+    # extraction was pure cost (measured 1.6x wall at 9600 docs; at
+    # 100 TB it is the difference between shuffling 100 TB and shuffling
+    # the ~40x smaller span table). The explicit url-hash repartition
+    # (north rule) is applied to the FUSED output instead, where it is
+    # nearly free and hands every downstream groupBy/window a reusable
+    # HashPartitioning. Partitions = cores: every extra partition
+    # multiplies the task count of every downstream scan of it (4x
+    # cores measured 768 tasks and 8.9 s min-of-5 vs 5.2 s at 1x under
+    # the round-3 six-branch plan; see BENCH/RECONCILE_r03.md).
+    fused = extract_spans(pages, model_file).repartition(
+        spark.sparkContext.defaultParallelism, F.col("url")
+    )
     if stages_out is not None:
         # the assembly consumes fused exactly ONCE — caching it only for
         # the lineage hook keeps the repartition's HashPartitioning(url)
         # statically visible otherwise, so the triple rollup plans with
         # NO exchange (a cached plan hides its partitioning behind
         # AdaptiveSparkPlan until materialized)
-        fused = _cached(fused)
+        fused = fused.cache()
+        if cache_registry is not None:
+            cache_registry.append(fused)
         stages_out["fused"] = fused
     if dico is None:
         if broadcast:

@@ -9,7 +9,10 @@ annex. Two downstream consumers:
   ``get_box_validator`` ``paper/__init__.py:405-428``): result spans are
   valid only where segmentation in {body, annex}. ``allowed_blocks``
   is that filter as a DataFrame; the production fused path applies the
-  identical state machine inside its Arrow pass (extract._doc_spans).
+  running-segment state machine inside its Arrow pass
+  (extract._doc_spans), for the rule labeler and a trained model alike,
+  but not the block-local marginal overrides below — no result span on
+  the test corpora reaches a page-number, footnote or headnote block.
 * the HEADER class (``classes/__init__.py:101-106``): the title lives
   in the front segment; ``extract_titles`` mirrors the reference's
   ``_refresh_title`` (``paper/__init__.py:305-317``) — concatenate the

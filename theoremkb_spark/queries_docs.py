@@ -36,7 +36,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Cached intermediates of the most recent LSH query. ``bench.py`` calls
 # each query as ``fn(spark, sf)`` with no registry to pass, so each LSH
 # query releases this list on entry, before it caches anything: a looped
-# caller holds at most one query's cached blocks.
+# SERIAL caller holds at most one query's cached blocks. Concurrent
+# callers share the one list: one query's release can unpersist another
+# query's frames while it still runs, and frames appended after the last
+# release stay cached, so blocks of several queries can remain.
 _caches: list[DataFrame] = []
 
 
