@@ -1,4 +1,4 @@
-"""Skew stress for the salted/auto link-join regimes (round-5 verdict #3).
+"""Salted-join skew stress and link-join regime equality (round-5 verdict #3).
 
 Two parts:
 
@@ -17,9 +17,9 @@ Two parts:
    shape is the join stage's (max, median, max/median) task time.
 
 2. REGIME EQUALITY: build_kg over the bench corpus with the dictionary
-   join FORCED to broadcast and FORCED to salted (a parquet-backed
-   dictionary over a lowered ``joins.BROADCAST_MAX_BYTES``) must emit
-   identical triple sets.
+   join FORCED to broadcast and FORCED to shuffled (a plain sort-merge
+   join: a parquet-backed dictionary over a lowered
+   ``joins.BROADCAST_MAX_BYTES``) must emit identical triple sets.
 
 Usage: python scripts/bench_skew_salted.py [--rows 6000000] [--cpus 32]
 Writes BENCH/SKEW_r06.json and prints it.
@@ -167,14 +167,14 @@ def regime_equality(cpus: int) -> dict:
         write_pages_parquet(pages_path, kg_docs, jobs=min(cpus, 16))
     pages = spark.read.parquet(pages_path)
     dico = load_dico(spark, list(entity_dict_rows(kg_docs))).cache()
-    # the salted regime needs a file-backed dictionary (a driver-local
+    # the shuffled regime needs a file-backed dictionary (a driver-local
     # frame's unknowable estimate always counts as broadcast-sized) and
     # a threshold it exceeds
     dico_path = f"/tmp/bench_dico_v{CORPUS_VERSION}_{kg_docs}.parquet"
     dico.write.mode("overwrite").parquet(dico_path)
     forced = {
         "broadcast": (dico, joins.BROADCAST_MAX_BYTES),
-        "salted": (spark.read.parquet(dico_path), -1),
+        "shuffled": (spark.read.parquet(dico_path), -1),
     }
 
     triples = {}
@@ -191,11 +191,11 @@ def regime_equality(cpus: int) -> dict:
         }
         release_caches(caches)
     spark.stop()
-    identical = triples["broadcast"] == triples["salted"]
+    identical = triples["broadcast"] == triples["shuffled"]
     return {
         "kg_docs": kg_docs,
         "broadcast_triples": len(triples["broadcast"]),
-        "salted_triples": len(triples["salted"]),
+        "shuffled_triples": len(triples["shuffled"]),
         "identical": identical,
     }
 

@@ -3,6 +3,7 @@ triple P/R vs the reference-semantics oracle, two-run determinism,
 fused-vs-window labeler agreement."""
 
 import pytest
+from pyspark.sql import functions as F
 from window_path import window_fused
 
 from theoremkb_spark.corpus.generator import build_corpus, entity_dict_rows
@@ -56,7 +57,9 @@ def test_fused_and_window_paths_emit_identical_triples(spark, pages, entity_dict
     """The fused single-Arrow-pass front end and the window-function
     pipeline are alternative physical plans of the same logical job."""
     fused = build_kg(spark, pages, entity_dict)
-    window = build_triples(window_fused(pages), canonicalize_dict(entity_dict), True)
+    window = build_triples(
+        window_fused(pages), F.broadcast(canonicalize_dict(entity_dict))
+    )
     assert fused.exceptAll(window).isEmpty()
     assert window.exceptAll(fused).isEmpty()
 
@@ -102,14 +105,14 @@ def test_window_path_regexes_case_insensitive(spark):
     assert got[3] == want[3] == "lemma 1.2"
 
 
-@pytest.mark.parametrize("regime", ["broadcast", "salted"])
+@pytest.mark.parametrize("regime", ["broadcast", "shuffled"])
 @pytest.mark.parametrize("path", ["fused", "window"])
 def test_triple_groups_match_sequential_oracle(
     spark, pages, entity_dict, path, regime, tmp_path, monkeypatch
 ):
     """Provenance groups (min span group per triple) must match the
     sequential oracle — the surface behind the kg_triples DuckDB gate —
-    for both front ends in both dictionary-join regimes. The salted
+    for both front ends in both dictionary-join regimes. The shuffled
     regime reads the dictionary back from parquet (a driver-local
     frame's unknowable estimate always counts as broadcast-sized) and
     lowers the broadcast threshold under it; the window path takes the
@@ -117,7 +120,7 @@ def test_triple_groups_match_sequential_oracle(
     from theoremkb_spark.corpus.oracle import oracle_triples_grouped
     from theoremkb_spark.operators import joins
 
-    if regime == "salted":
+    if regime == "shuffled":
         path = str(tmp_path / "entity_dict.parquet")
         entity_dict.write.parquet(path)
         entity_dict = spark.read.parquet(path)
@@ -125,11 +128,10 @@ def test_triple_groups_match_sequential_oracle(
     if path == "fused":
         kg = build_kg(spark, pages, entity_dict)
     else:
-        kg = build_triples(
-            window_fused(pages),
-            canonicalize_dict(entity_dict),
-            joins.fits_broadcast(entity_dict),
-        )
+        dico = canonicalize_dict(entity_dict)
+        if joins.fits_broadcast(entity_dict):
+            dico = F.broadcast(dico)
+        kg = build_triples(window_fused(pages), dico)
     got = {(r.subj, r.pred, r.obj, r.url): r.group for r in kg.collect()}
     exp = oracle_triples_grouped(list(build_corpus(N_DOCS)), entity_dict_rows(N_DOCS))
     assert got == exp
@@ -139,8 +141,6 @@ def test_span_rows_match_sequential_oracle(spark, pages):
     """Span-level (url, group, label, n_tokens) parity vs the sequential
     labeler-semantics + GOLD-segmentation oracle — the surface behind
     the kg_spans gate (label layer, then the parent-class constraint)."""
-    from pyspark.sql import functions as F
-
     from theoremkb_spark.corpus.oracle import oracle_doc_spans
     from theoremkb_spark.pipeline.segment import apply_parent_constraint
 

@@ -50,6 +50,7 @@ def _assert_one_triple_explode(plan: str) -> None:
 
 
 def test_kg_plan_shape(spark, tmp_path, monkeypatch):
+    from pyspark.sql import functions as F
     from window_path import window_fused
 
     from theoremkb_spark.operators import joins
@@ -121,22 +122,28 @@ def test_kg_plan_shape(spark, tmp_path, monkeypatch):
     # four predicates (a per-predicate union form has no such node)
     _assert_one_triple_explode(plan)
 
-    # every front end and dictionary regime shares that one assembly;
-    # the salted regime's dictionary attach is exactly one salted join. The
-    # salted regime takes a file-backed dictionary over the threshold (a
-    # driver-local frame's unknowable estimate counts as small)
+    # every front end and dictionary regime shares that one assembly.
+    # The shuffled regime takes a file-backed dictionary over the
+    # threshold (a driver-local frame's unknowable estimate counts as
+    # small); its dictionary attach is one plain sort-merge join on
+    # (url, tag), and the dictionary's dedup exchange is keyed on that
+    # join key, so the plan has 4 exchanges: the url repartition, the
+    # fact side's (url, tag) exchange, the dictionary dedup and the
+    # triple rollup
     ents_path = str(tmp_path / "ents.parquet")
     ents.write.parquet(ents_path)
     with monkeypatch.context() as m:
         m.setattr(joins, "BROADCAST_MAX_BYTES", -1)
-        salted = plan_string(build_kg(spark, pages, spark.read.parquet(ents_path)))
-    _assert_one_triple_explode(salted)
-    salted_joins = re.findall(
-        r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[[^\n]*_salt", salted
-    )
-    assert len(salted_joins) == 1, salted
+        shuffled = plan_string(build_kg(spark, pages, spark.read.parquet(ents_path)))
+    _assert_one_triple_explode(shuffled)
+    assert "_salt" not in shuffled, shuffled
+    smj = re.findall(r"SortMergeJoin \[([^\]]*)\], \[([^\]]*)\]", shuffled)
+    assert len(smj) == 1, shuffled
+    for keys in smj[0]:
+        assert [k.split("#")[0] for k in keys.split(", ")] == ["url", "tag"], smj
+    assert plan_facts(shuffled)["exchanges"] == 4, shuffled
     window = plan_string(
-        build_triples(window_fused(pages), canonicalize_dict(ents), True)
+        build_triples(window_fused(pages), F.broadcast(canonicalize_dict(ents)))
     )
     _assert_one_triple_explode(window)
 
@@ -338,43 +345,46 @@ def test_segment_tokens_plan_shape(spark):
 def test_link_resolve_auto_strategy_regimes(spark, tmp_path, monkeypatch):
     """VERDICT r4 #2: the LINK dictionary join must pick its physical
     strategy from the dictionary's size estimate, not a hardcoded hint.
-    Small regime -> broadcast hash join, no salt machinery; forced-large
-    regime (file-backed dict, 1-byte threshold) -> the salted path (key
-    spread over salt partitions, dim exploded). Driver-created local
-    frames have no Catalyst stats (Long.MaxValue sentinel) and are
-    treated as broadcast-sized BY CONSTRUCTION — they already sit in
-    driver memory; the at-scale inputs are always file-backed and carry
-    real file-size estimates."""
+    Small regime -> broadcast hash join on (url, tag); forced-large
+    regime (file-backed dict, 1-byte threshold) -> a sort-merge join on
+    (url, tag). Driver-created local frames have no Catalyst stats
+    (Long.MaxValue sentinel) and are treated as broadcast-sized BY
+    CONSTRUCTION — they already sit in driver memory; the at-scale
+    inputs are always file-backed and carry real file-size estimates."""
     from theoremkb_spark.operators import joins
     from theoremkb_spark.operators.joins import fits_broadcast
-    from theoremkb_spark.pipeline.link import _resolve
+    from theoremkb_spark.pipeline.extract import load_pages
+    from theoremkb_spark.pipeline.runner import build_kg, load_entity_dict
 
-    dico_local = spark.createDataFrame(
-        [("u1", "T1", "c1")], "url string, tag string, pdf_to_canon string"
-    )
-    dpath = str(tmp_path / "dico.parquet")
-    dico_local.write.parquet(dpath)
-    dico = spark.read.parquet(dpath)
-    facts = spark.createDataFrame(
-        [("u1", "T1", "x"), ("u1", "T2", "y")], "url string, tag string, other string"
-    )
+    pages = load_pages(spark, 8)
+    ents_local = load_entity_dict(spark, 8)
+    path = str(tmp_path / "ents.parquet")
+    ents_local.write.parquet(path)
+    ents = spark.read.parquet(path)
+    link_join = r"(?:BroadcastHashJoin|SortMergeJoin) \[url#\d+, tag#\d+\]"
 
-    for d in (dico, dico_local):  # file-backed small AND stats-unknown local
+    def kg(d):
+        df = build_kg(spark, pages, d)
+        plan = plan_string(df)
+        return plan, re.findall(link_join, plan), sorted(map(tuple, df.collect()))
+
+    rows = set()
+    for d in (ents, ents_local):  # file-backed small AND stats-unknown local
         assert fits_broadcast(d)
-        small = plan_string(_resolve(facts, d, fits_broadcast(d)))
-        assert "_salt" not in small
-        assert plan_facts(small)["broadcast_joins"] >= 1
+        plan, link, got = kg(d)
+        assert link and all(j.startswith("BroadcastHashJoin") for j in link), plan
+        assert "SortMergeJoin" not in plan, plan
+        rows.add(tuple(got))
 
     monkeypatch.setattr(joins, "BROADCAST_MAX_BYTES", 1)
-    assert not fits_broadcast(dico)
-    assert fits_broadcast(dico_local)  # an unknowable estimate stays small
-    large = plan_string(_resolve(facts, dico, fits_broadcast(dico)))
-    assert "_salt" in large
+    assert not fits_broadcast(ents)
+    assert fits_broadcast(ents_local)  # an unknowable estimate stays small
+    plan, link, got = kg(ents)
+    assert len(link) == 1 and link[0].startswith("SortMergeJoin"), plan
+    rows.add(tuple(got))
 
-    # both regimes resolve the same rows (the strategy is physical only)
-    a = sorted(map(tuple, _resolve(facts, dico, True).collect()))
-    b = sorted(map(tuple, _resolve(facts, dico, False).collect()))
-    assert a == b
+    # every regime resolves the same rows (the strategy is physical only)
+    assert len(rows) == 1 and rows.pop()
 
 
 def test_fuzzy_link_auto_broadcast_regimes(spark, tmp_path, caches, monkeypatch):

@@ -116,7 +116,9 @@ def test_front_matter_lookalikes_rejected(spark, tmp_path):
     paths = {
         "fused": build_kg(spark, pages, ents),
         "model": build_kg(spark, pages, ents, model_file=model),
-        "window": build_triples(window_fused(pages), canonicalize_dict(ents), True),
+        "window": build_triples(
+            window_fused(pages), F.broadcast(canonicalize_dict(ents))
+        ),
     }
     for name, kg in paths.items():
         bad = [

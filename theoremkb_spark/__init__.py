@@ -12,7 +12,7 @@ for behaviour only) as an idiomatic Spark pipeline:
                         inference variant
       -> [3] MENTIONS  span text assembly + regex mention mining
                         (ref: Styling/tools/theoremdb/extract_graph.py:26-130)
-      -> [4] LINK      broadcast/salted dictionary join, MinHash-LSH blocking
+      -> [4] LINK      (url, tag) dictionary join, MinHash-LSH blocking
       -> [5] CANON     connected components canonicalization
       -> [6] TRIPLES   (subj, pred, obj) graph tables + lineage
 

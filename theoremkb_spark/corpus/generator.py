@@ -16,8 +16,8 @@ Each document embeds the structures the KG pipeline must recover:
 * intra-document references, plain and goto-linked (``#in`` semantics),
   conjunction lists ("Theorems 1.1 and 1.2"), abbreviations ("thm. 1.2");
 * citation anchors ("[EXT3]") carrying ``cite`` links, resolved through
-  the entity dictionary, with one hot target (~30% of docs) for the
-  skew/salting path and alias urls for canonicalization;
+  the entity dictionary, with one hot target (~30% of docs; a joined
+  value, not a join key) and alias urls for canonicalization;
 * NFKD/ligature and hyphen-break cases exercising text normalization;
 * ~1% of docs ~30x longer than the median (skew), ~5% non-English rows.
 

@@ -1,16 +1,16 @@
-"""Skew-mitigated joins.
+"""Join helpers: size-picked broadcasts, skew salting, as-of joins.
 
-The citation-dictionary join (SURVEY §2.3 J5) has hot keys by
-construction — one highly-cited paper can appear in a large fraction of
-mention rows. When the dimension side fits in memory we broadcast (no
-shuffle, skew-immune). When it does not, ``salted_join`` spreads each hot
-key over ``salt`` shuffle partitions: the fact side gets a random-but-
-deterministic salt from its row content, the dimension side is exploded
-x ``salt``. AQE skew-join stays on as belt-and-braces (session.py).
 ``fits_broadcast`` is the one broadcast-vs-shuffle size test the
 engine's auto-sized joins share, against the one threshold
 ``BROADCAST_MAX_BYTES``; ``spread`` is the one fan-out rule for
-scans that arrive in too few tasks.
+scans that arrive in too few tasks. ``salted_join`` spreads each hot
+key over ``salt`` shuffle partitions (the fact side gets a
+deterministic salt from its row content, the dimension side is
+exploded x ``salt``); it serves ``queries.q_join_salted``, whose
+ten-valued key really is skewed. The kg's citation-dictionary join (SURVEY §2.3
+J5) does not need it: its (url, tag) key is per-document, and the hot
+paper is a joined value, not a key. AQE skew-join stays on as
+belt-and-braces (session.py).
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 # The one broadcast threshold, on a frame's ESTIMATED raw bytes. 64 MB
 # raw broadcasts comfortably (the banded, set-carrying tables the fuzzy
 # link ships are ~10x raw, still well under executor memory); past it
-# the salted / shuffled paths win.
+# the shuffled paths win.
 BROADCAST_MAX_BYTES = 64 << 20
 
 

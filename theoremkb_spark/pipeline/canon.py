@@ -3,10 +3,9 @@
 Citation targets sharing a normalized title (get_links.py:74-85
 semantics: lowercase, keep [a-z]) are coreferent — e.g. the DOI url and
 the arXiv url of the same paper. Candidate edges come from the exact
-norm-title key plus (optionally) MinHash-LSH near-duplicate title pairs;
-connected components collapse them to a canonical id = the
-lexicographically smallest url in the cluster (deterministic, data-
-derived — SURVEY §7.4.3).
+norm-title key; connected components collapse them to a canonical id =
+the lexicographically smallest url in the cluster (deterministic,
+data-derived — SURVEY §7.4.3).
 """
 
 from __future__ import annotations
@@ -29,15 +28,10 @@ def alias_edges(entity_dict: DataFrame) -> DataFrame:
     )
 
 
-def canonical_mapping(
-    entity_dict: DataFrame, extra_edges: DataFrame | None = None
-) -> DataFrame:
+def canonical_mapping(entity_dict: DataFrame) -> DataFrame:
     """-> (pdf_to, canonical). Urls absent from any alias edge map to
     themselves (handled by the left join in `canonicalize_dict`)."""
-    edges = alias_edges(entity_dict)
-    if extra_edges is not None:
-        edges = edges.unionByName(extra_edges).distinct()
-    comp = connected_components(edges)
+    comp = connected_components(alias_edges(entity_dict))
     return comp.select(F.col("id").alias("pdf_to"), F.col("component").alias("canonical"))
 
 
@@ -75,10 +69,12 @@ def canonicalize_rows(rows) -> list[tuple[str, str, str]]:
     return sorted(out, key=lambda t: [(v is not None, v or "") for v in t])
 
 
-def canonicalize_dict(entity_dict: DataFrame, extra_edges: DataFrame | None = None) -> DataFrame:
-    """-> (url, tag, pdf_to_canon): the broadcast dictionary the LINK
-    stage consumes, with every target rewritten to its canonical id."""
-    mapping = canonical_mapping(entity_dict, extra_edges)
+def canonicalize_dict(entity_dict: DataFrame) -> DataFrame:
+    """-> (url, tag, pdf_to_canon): the dictionary the LINK stage
+    consumes, with every target rewritten to its canonical id. The
+    dedup exchange is keyed on the (url, tag) join key, so a shuffled
+    link join reuses it and the dictionary crosses the shuffle once."""
+    mapping = canonical_mapping(entity_dict)
     return (
         entity_dict.join(F.broadcast(mapping), "pdf_to", "left")
         .select(
@@ -86,5 +82,6 @@ def canonicalize_dict(entity_dict: DataFrame, extra_edges: DataFrame | None = No
             "tag",
             F.coalesce(F.col("canonical"), F.col("pdf_to")).alias("pdf_to_canon"),
         )
+        .repartition("url", "tag")
         .distinct()
     )

@@ -4,8 +4,8 @@
 
     pages --map-only Arrow extract--> fused (span/mention/cite rows)
       --repartition(url)--> build_triples: one conditional explode
-      + one dictionary join (broadcast, or salted past the broadcast
-      threshold) --> triples
+      + one (url, tag) dictionary join (broadcast, or sort-merge past
+      the broadcast threshold) --> triples
 
 Triple vocabulary (north star): statement_of, proved_in, cites,
 defined_in — mapped from the reference's graph tables
@@ -18,9 +18,9 @@ byte-balanced source scan, whichever labeler (the rule state machine,
 or a trained sequence model) opens the spans, and the explicit url-hash
 repartition (north rule) lands on the ~40x smaller fused span table,
 whose HashPartitioning every downstream groupBy/window reuses. A
-broadcast-sized dictionary is canonicalized on the driver (the salted
-regime, whose dictionary is too big for that, keeps the distributed
-CC). ``build_triples`` takes any fused-shaped table, so the
+broadcast-sized dictionary is canonicalized on the driver (the
+shuffled regime, whose dictionary is too big for that, keeps the
+distributed CC). ``build_triples`` takes any fused-shaped table, so the
 window-function cross-check (label.label_tokens + mentions.*) can be
 assembled by the same code.
 """
@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from ..operators.joins import fits_broadcast
 from .canon import canonicalize_dict
 from .extract import extract_spans
-from .link import _resolve
 
 TRIPLE_COLS = ["subj", "pred", "obj", "url", "group"]
 TRIPLE_SCHEMA = "subj string, pred string, obj string, url string, group long"
@@ -70,22 +69,21 @@ def _entity(url_col, name_col):
     return F.concat(url_col, F.lit("#"), name_col)
 
 
-def build_triples(fused: DataFrame, dico: DataFrame, broadcast: bool) -> DataFrame:
+def build_triples(fused: DataFrame, dico: DataFrame) -> DataFrame:
     """Single-pass triples assembly over a fused-shaped table (span,
     mention and cite rows, ``extract.SPANS_FUSED_SCHEMA``'s columns), for
-    either dictionary regime and any labeler.
+    any labeler.
 
     Each row emits its triples through a conditional-array explode, and
-    the dictionary is attached by ONE left join (``link._resolve``), so
-    the broadcast and salted regimes (``broadcast``, which ``build_kg``
-    decides) differ only inside that join. Over ``build_kg``'s
-    url-repartitioned table, in the broadcast regime the whole assembly
-    is exchange-free: broadcast
-    preserves the stream side's partitioning, and the final
+    the dictionary is attached by ONE left equi-join on (url, tag); the
+    caller's broadcast hint on ``dico`` (``build_kg`` decides it) picks
+    the physical join. Over ``build_kg``'s url-repartitioned table, a
+    broadcast dictionary keeps the whole assembly exchange-free:
+    broadcast preserves the stream side's partitioning, and the final
     groupBy(subj, pred, obj, url) reuses the url repartition's
     HashPartitioning — url is a subset of the grouping keys — so the
-    rollup needs NO exchange. The salted regime adds only
-    the salted join's own two exchanges.
+    rollup needs NO exchange. A sort-merge join adds the fact side's
+    (url, tag) exchange and the rollup's own.
     """
     url, own = F.col("url"), F.col("own_name")
     kind, ref_kind = F.col("kind"), F.col("ref_kind")
@@ -104,9 +102,9 @@ def build_triples(fused: DataFrame, dico: DataFrame, broadcast: bool) -> DataFra
             (kind == "mention") & (ref_kind == "extra"), F.col("ref_tag")
         ),
     )
-    # no triple reads the span text, and the salted join would otherwise
-    # hash it (its widest column) into every row's salt
-    joined = _resolve(rel.drop("text"), dico, broadcast)
+    # no triple reads the span text (the widest column), so it does not
+    # ride the join exchange
+    joined = rel.drop("text").join(dico, ["url", "tag"], "left")
 
     own_ent = _entity(url, own)
     target = F.coalesce(
@@ -192,11 +190,11 @@ def build_kg(
     The dictionary regime is decided once, from the size estimate of
     the raw dictionary input (``entity_dict``, else ``dico``; see
     ``joins.fits_broadcast``): a broadcast-sized dictionary is
-    broadcast into the link join, a larger one joins salted. Without
-    ``dico``, the broadcast regime canonicalizes ``entity_dict`` eagerly
-    on the driver (one collect, then ``load_dico``); the salted regime
-    canonicalizes it lazily with ``canonicalize_dict``. Pass
-    ``dico`` (pre-canonicalized (url, tag, pdf_to_canon)) to skip the
+    broadcast into the link join, a larger one joins by sort-merge.
+    Without ``dico``, the broadcast regime canonicalizes ``entity_dict``
+    eagerly on the driver (one collect, then ``load_dico``); the
+    shuffled regime canonicalizes it lazily with ``canonicalize_dict``.
+    Pass ``dico`` (pre-canonicalized (url, tag, pdf_to_canon)) to skip the
     canonicalization stage — e.g. from ``load_dico`` when the dictionary
     rows are already driver-resident. One of the two is required.
 
@@ -257,7 +255,7 @@ def build_kg(
             dico = load_dico(spark, entity_dict.collect())
         else:
             dico = canonicalize_dict(entity_dict)
-    return build_triples(fused, dico, broadcast)
+    return build_triples(fused, F.broadcast(dico) if broadcast else dico)
 
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
