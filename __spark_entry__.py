@@ -306,25 +306,21 @@ def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stages 1-2 + the parent-class constraint: extraction,
-    window-function sequence labeling, then the 8-label segmenter's
-    semi-join (results valid only in segmentation {body, annex} — the
-    P4 wiring). Oracle: the sequential labeler + GOLD-segmentation span
-    rows (parquet) — dropping the constraint resurrects the front-matter
-    lookalike spans and fails the hash."""
+    """Stages 1-2 + the parent-class constraint, as ``build_kg`` runs
+    them: the fused Arrow pass (``extract.extract_spans``) labels each
+    document with the naive-rule state machine and keeps result spans
+    only in segmentation {body, annex} (the P4 wiring); its span rows
+    carry their token counts. Oracle: the sequential labeler +
+    GOLD-segmentation span rows (parquet) — dropping the constraint
+    resurrects the front-matter lookalike spans and fails the hash."""
     from pyspark.sql import functions as F
 
-    from theoremkb_spark.pipeline.extract import extract_tokens, load_pages
-    from theoremkb_spark.pipeline.label import label_tokens
-    from theoremkb_spark.pipeline.segment import apply_parent_constraint
+    from theoremkb_spark.pipeline.extract import extract_spans, load_pages
 
-    pages = load_pages(spark, _KG_N_DOCS)
-    tokens = extract_tokens(pages)
-    labeled = apply_parent_constraint(label_tokens(tokens), tokens)
     return (
-        labeled.filter(F.col("label") != "O")
-        .groupBy("url", "group", "label")
-        .agg(F.count(F.lit(1)).alias("n_tokens"))
+        extract_spans(load_pages(spark, _KG_N_DOCS))
+        .filter(F.col("kind") == "span")
+        .select("url", "group", "label", "n_tokens")
         .orderBy("url", "group")
     )
 

@@ -31,8 +31,10 @@ import argparse
 import glob
 import json
 import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -152,7 +154,7 @@ def _parse_log(log: str, desc_stages: dict, stage_tasks: dict) -> None:
 
 
 def regime_equality(cpus: int) -> dict:
-    from theoremkb_spark.corpus.generator import CORPUS_VERSION, entity_dict_rows
+    from theoremkb_spark.corpus.generator import entity_dict_rows
     from theoremkb_spark.operators import joins
     from theoremkb_spark.pipeline.extract import write_pages_parquet
     from theoremkb_spark.pipeline.runner import build_kg, load_dico, release_caches
@@ -161,36 +163,40 @@ def regime_equality(cpus: int) -> dict:
     kg_docs = int(os.environ.get("SPARK_GRAFT_KG_DOCS", "9600"))
     spark = get_spark("skew_regimes", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    warm_python_workers(spark, cpus)
-    pages_path = f"/tmp/bench_pages_v{CORPUS_VERSION}_{kg_docs}.parquet"
-    if not os.path.exists(pages_path):
+    # the pages and dictionary parquet live only as long as this run
+    tmp = tempfile.mkdtemp(prefix="regime_equality_")
+    try:
+        warm_python_workers(spark, cpus)
+        pages_path = os.path.join(tmp, "pages.parquet")
         write_pages_parquet(pages_path, kg_docs, jobs=min(cpus, 16))
-    pages = spark.read.parquet(pages_path)
-    dico = load_dico(spark, list(entity_dict_rows(kg_docs))).cache()
-    # the shuffled regime needs a file-backed dictionary (a driver-local
-    # frame's unknowable estimate always counts as broadcast-sized) and
-    # a threshold it exceeds
-    dico_path = f"/tmp/bench_dico_v{CORPUS_VERSION}_{kg_docs}.parquet"
-    dico.write.mode("overwrite").parquet(dico_path)
-    forced = {
-        "broadcast": (dico, joins.BROADCAST_MAX_BYTES),
-        "shuffled": (spark.read.parquet(dico_path), -1),
-    }
-
-    triples = {}
-    for regime, (regime_dico, max_bytes) in forced.items():
-        caches: list = []
-        prev, joins.BROADCAST_MAX_BYTES = joins.BROADCAST_MAX_BYTES, max_bytes
-        try:
-            df = build_kg(spark, pages, dico=regime_dico, cache_registry=caches)
-        finally:
-            joins.BROADCAST_MAX_BYTES = prev
-        rows = df.select("subj", "pred", "obj", "url")
-        triples[regime] = {
-            (r.subj, r.pred, r.obj, r.url) for r in rows.collect()
+        pages = spark.read.parquet(pages_path)
+        dico = load_dico(spark, list(entity_dict_rows(kg_docs))).cache()
+        # the shuffled regime needs a file-backed dictionary (a
+        # driver-local frame's unknowable estimate always counts as
+        # broadcast-sized) and a threshold it exceeds
+        dico_path = os.path.join(tmp, "dico.parquet")
+        dico.write.parquet(dico_path)
+        forced = {
+            "broadcast": (dico, joins.BROADCAST_MAX_BYTES),
+            "shuffled": (spark.read.parquet(dico_path), -1),
         }
-        release_caches(caches)
-    spark.stop()
+
+        triples = {}
+        for regime, (regime_dico, max_bytes) in forced.items():
+            caches: list = []
+            prev, joins.BROADCAST_MAX_BYTES = joins.BROADCAST_MAX_BYTES, max_bytes
+            try:
+                df = build_kg(spark, pages, dico=regime_dico, cache_registry=caches)
+            finally:
+                joins.BROADCAST_MAX_BYTES = prev
+            rows = df.select("subj", "pred", "obj", "url")
+            triples[regime] = {
+                (r.subj, r.pred, r.obj, r.url) for r in rows.collect()
+            }
+            release_caches(caches)
+    finally:
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
     identical = triples["broadcast"] == triples["shuffled"]
     return {
         "kg_docs": kg_docs,

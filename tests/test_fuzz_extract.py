@@ -39,14 +39,15 @@ def test_real_docs_roundtrip_and_span_group_invariants(i):
     toks = _parse_tokens(doc.url, html)
     assert toks, "every generated doc has tokens"
     spans, tags = _doc_spans(doc.url, html)
-    groups = [g for g, _, _, _ in spans]
+    groups = [g for g, _, _, _, _ in spans]
     # group ids are strictly increasing positive ints; gaps are legal —
     # a rejected open (front/acknowledgement lookalike under the parent
     # constraint) still consumes its number (reference layer split)
     assert all(g > 0 for g in groups)
     assert groups == sorted(set(groups))
-    assert all(text for _, _, text, _ in spans)
-    assert all(own is None or own == own.lower() for _, _, _, own in spans)
+    assert all(text for _, _, text, _, _ in spans)
+    assert all(own is None or own == own.lower() for _, _, _, own, _ in spans)
+    assert all(n > 0 for *_, n in spans)
 
 
 def test_malformed_numeric_attrs_yield_no_tokens_not_a_crash():

@@ -84,13 +84,16 @@ def test_span_pr_report(spark):
 
 def test_span_pr_report_perfect_on_pipeline_paths(spark):
     """fused vs window span tables grade each other at P/R = 1.0."""
+    from pyspark.sql import functions as F
+    from window_path import (
+        apply_parent_constraint,
+        assemble_spans,
+        label_tokens,
+        resolve_span_names,
+    )
+
     from theoremkb_spark.operators.evaluate import span_pr_report
     from theoremkb_spark.pipeline.extract import extract_spans, extract_tokens, load_pages
-    from theoremkb_spark.pipeline.label import label_tokens
-    from theoremkb_spark.pipeline.mentions import assemble_spans, resolve_span_names
-    from pyspark.sql import functions as F
-
-    from theoremkb_spark.pipeline.segment import apply_parent_constraint
 
     pages = load_pages(spark, 20)
     fused = extract_spans(pages).filter(F.col("kind") == "span").select(

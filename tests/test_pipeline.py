@@ -9,8 +9,12 @@ from window_path import window_fused
 from theoremkb_spark.corpus.generator import build_corpus, entity_dict_rows
 from theoremkb_spark.corpus.oracle import oracle_triples
 from theoremkb_spark.pipeline.canon import canonicalize_dict
-from theoremkb_spark.pipeline.extract import extract_text, extract_tokens, load_pages
-from theoremkb_spark.pipeline.label import label_tokens
+from theoremkb_spark.pipeline.extract import (
+    extract_spans,
+    extract_text,
+    extract_tokens,
+    load_pages,
+)
 from theoremkb_spark.pipeline.runner import build_kg, build_triples, load_entity_dict
 
 N_DOCS = 40
@@ -85,8 +89,9 @@ def test_window_path_regexes_case_insensitive(spark):
     """ADVICE round-1: the JVM regex constants must match the frozen
     Python twins (re.IGNORECASE) on lowercase/uppercase inputs, e.g.
     'proof. [Proof of theorem 2]' or an 'OPEN Problem 4' head."""
+    from window_path import resolve_span_names
+
     from theoremkb_spark.functions.text import find_thm_proof, find_thm_start
-    from theoremkb_spark.pipeline.mentions import resolve_span_names
 
     rows = [
         ("u", 1, "lemma", "OPEN Problem 4 holds trivially."),
@@ -137,21 +142,24 @@ def test_triple_groups_match_sequential_oracle(
     assert got == exp
 
 
-def test_span_rows_match_sequential_oracle(spark, pages):
+@pytest.mark.parametrize("path", ["fused", "window"])
+def test_span_rows_match_sequential_oracle(spark, pages, path):
     """Span-level (url, group, label, n_tokens) parity vs the sequential
     labeler-semantics + GOLD-segmentation oracle — the surface behind
-    the kg_spans gate (label layer, then the parent-class constraint)."""
-    from theoremkb_spark.corpus.oracle import oracle_doc_spans
-    from theoremkb_spark.pipeline.segment import apply_parent_constraint
+    the kg_spans gate — for the fused pass's span rows (what the gate
+    runs) and for the window path (label layer, then the parent-class
+    constraint)."""
+    from window_path import window_spans
 
-    tokens = extract_tokens(pages)
-    labeled = apply_parent_constraint(label_tokens(tokens), tokens)
+    from theoremkb_spark.corpus.oracle import oracle_doc_spans
+
+    if path == "fused":
+        spans = extract_spans(pages).filter(F.col("kind") == "span")
+    else:
+        spans = window_spans(extract_tokens(pages))
     got = {
         (r.url, r.group, r.label, r.n_tokens)
-        for r in labeled.filter(F.col("label") != "O")
-        .groupBy("url", "group", "label")
-        .agg(F.count(F.lit(1)).alias("n_tokens"))
-        .collect()
+        for r in spans.select("url", "group", "label", "n_tokens").collect()
     }
     exp = {
         (doc.url, g, lbl, n)

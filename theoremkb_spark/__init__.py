@@ -6,11 +6,11 @@ for behaviour only) as an idiomatic Spark pipeline:
 
     pages(url, warc_ts, html, text, lang)
       -> [1] EXTRACT   mapInPandas: html -> tokens + doc text (byte-identical)
-      -> [2] LABEL     window-function span labeling (naive rule extractor
-                        semantics, ref: Styling/src/lib/extractors/results/
-                        naive_extractor.py:20-55) + Arrow-batched sequence
-                        inference variant
-      -> [3] MENTIONS  span text assembly + regex mention mining
+      -> [2] LABEL     naive-rule span labeling (ref: Styling/src/lib/
+                        extractors/results/naive_extractor.py:20-55) or
+                        sequence-model inference, per document in one
+                        fused Arrow pass (extract.extract_spans)
+      -> [3] MENTIONS  span text assembly + regex mention mining, same pass
                         (ref: Styling/tools/theoremdb/extract_graph.py:26-130)
       -> [4] LINK      (url, tag) dictionary join, MinHash-LSH blocking
       -> [5] CANON     connected components canonicalization

@@ -28,7 +28,7 @@ from .generator import Block, Doc
 
 BOLD_OR_ITALIC = {"f1", "f2"}
 # case-sensitive like the frozen pipeline twins (extract._RE_NUM_MARK and
-# the JVM NUM_RE): the reference's own call site passes re.IGNORECASE as
+# the tests' JVM NUM_RE): the reference's own call site passes re.IGNORECASE as
 # re.sub's COUNT argument (extract_graph.py:174), so flags never apply
 # there either.
 RE_NUM_MARK = re.compile(r"(([a-z]\.)?\d+(\.\d+)*)")

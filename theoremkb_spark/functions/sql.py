@@ -8,8 +8,8 @@ users exactly like the Python API.
 
 These are the CONVENIENCE path: row-at-a-time Python UDFs are the slow
 path by design, and every hot-path use in the engine goes through the
-JVM twins (label._pattern_col, textquality.clean_thm_col, the regexp
-expressions in mentions.py) or the fused Arrow pass instead. The SQL
+JVM twins (segment._pattern_col, textquality.clean_thm_col) or the
+fused Arrow pass instead. The SQL
 names are prefixed ``tkb_`` to keep the session namespace clean.
 """
 

@@ -89,12 +89,11 @@ RE_REFS = re.compile(
 )
 RE_NUMS = re.compile(rf"({_NUM})", re.IGNORECASE)
 RE_LINK_MARK = re.compile(r"<LINK:([^>]+)>")
-# ASCII on purpose: citation tags are normalized on BOTH the Python side
-# (fused extract pass, this regex) and the JVM side (window path,
-# regexp_replace '\\W' in mentions.paper_citations — Java's default \W is
-# ASCII). re.ASCII freezes the two paths to the identical character
-# class [^a-zA-Z0-9_]; without it a non-ASCII anchor ("[Hém22]") would
-# yield different tags per path.
+# ASCII on purpose: citation tags are normalized by the fused extract
+# pass (this regex) and by its JVM cross-check, tests/window_path.py
+# (regexp_replace '\\W' — Java's default \W is ASCII). re.ASCII freezes
+# the two to the identical character class [^a-zA-Z0-9_]; without it a
+# non-ASCII anchor ("[Hém22]") would yield different tags per path.
 RE_NONWORD = re.compile(r"\W", re.ASCII)
 RE_REFTO_IS_RESULT = re.compile(
     rf"(({_KEYWORD_ALT}|section|algorithm)([a-z])?[\d]+)", re.IGNORECASE

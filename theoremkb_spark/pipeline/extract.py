@@ -11,8 +11,7 @@ Python invocation per Arrow batch, heavy work amortized per document.
   assembles and names result spans, mines mentions and collects
   citation anchors (``_doc_spans``). The token table never exists.
 * ``extract_tokens`` — the long token table (FIXTURES.md §2), input of
-  the window-function labeler, the segmenter, the feature frame and
-  model training.
+  the segmenter, the feature frame and model training.
 * ``extract_text`` — the per-row invariant (BASELINE.json input_hint):
   the extracted text is byte-identical to the reference extraction
   semantics per url (``get_text``: words joined by spaces within a
@@ -200,7 +199,9 @@ SPANS_FUSED_SCHEMA = T.StructType(
         T.StructField("text", T.StringType(), True),
         T.StructField("own_name", T.StringType(), True),
         T.StructField("tag", T.StringType(), True),
-        # mention rows only: the mined reference (mentions.refs_udf twin)
+        # span rows only: the span's token count (the kg_spans surface)
+        T.StructField("n_tokens", T.LongType(), True),
+        # mention rows only: the mined reference (find_ref_results)
         T.StructField("ref_name", T.StringType(), True),
         T.StructField("ref_kind", T.StringType(), True),  # 'intra'|'extra'
         T.StructField("ref_tag", T.StringType(), True),
@@ -209,7 +210,8 @@ SPANS_FUSED_SCHEMA = T.StructType(
 
 
 def _doc_spans(url: str, html: bytes, model=None):
-    """One document -> (span rows, citation tags), fused.
+    """One document -> (span rows, citation tags), fused. A span row is
+    (group, label, text, own_name, n_tokens).
 
     ONE sequential pass over the parse runs the link-marker transforms +
     ordered span-text assembly + normalization (extract_results,
@@ -219,10 +221,9 @@ def _doc_spans(url: str, html: bytes, model=None):
     Arrow stage. Only the open/close decision depends on the labeler:
 
     * ``model`` None: the naive-rule state machine
-      (naive_extractor.py:20-55) decides while scanning — exactly the
-      token-level semantics of the window-function labeler
-      (label.label_tokens + mentions.assemble_spans/resolve_span_names),
-      which stays as the cross-checked alternative implementation;
+      (naive_extractor.py:20-55) decides while scanning — the library's
+      only rule labeler (a JVM window-function twin in the tests
+      cross-checks it token for token);
     * a loaded sequence model (``_load_model``): the scan collects every
       token's model inputs, and after it the model Viterbi-tags and
       BIO-decodes the whole document (``extractors/crf.py:89-132``).
@@ -273,7 +274,7 @@ def _doc_spans(url: str, html: bytes, model=None):
     # Open/close markers are tracked so stray words outside a
     # page>block>line nesting are dropped exactly like the nested form
     # (both paths treat malformed structure conservatively; token-level
-    # identity with the window path is gated by
+    # identity with the tests' window-function twin is gated by
     # test_fused_and_window_paths_emit_identical_triples).
     # Recover-parse posture (S2) is unchanged: decode, the font table,
     # and every numeric attribute are validated, and ANY failure drops
@@ -375,7 +376,7 @@ def _doc_spans(url: str, html: bytes, model=None):
         else:
             own = find_thm_start(text)
             last_thm = own
-        out.append((g, label, text, own.lower() if own else None))
+        out.append((g, label, text, own.lower() if own else None, len(parts)))
     return out, sorted(cite_tags)
 
 
@@ -440,14 +441,15 @@ def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
     absolute path or a name registered via ``sc.addFile``), replaces the
     rule labeler inside the same pass; everything else is shared.
 
+    Span rows carry the span's token count (``n_tokens``): filtered to
+    ``kind = 'span'`` they are the ``kg_spans`` surface.
+
     Output partitioning follows the input (narrow map), and the result
     is a tiny table (~20 rows per document instead of ~800 tokens), so
-    nothing downstream ever shuffles the token stream. Replaces
-    extract_tokens -> label_tokens -> assemble_spans ->
-    resolve_span_names -> paper_citations (the window-function path,
-    kept for cross-checking) with one python pass; the JVM
-    window/collect_list pipeline measured ~19 us/token under full
-    parallelism (sort+object-agg cache thrash) vs ~2 us/token here.
+    nothing downstream ever shuffles the token stream. One python pass
+    labels, assembles and mines; a JVM window/collect_list pipeline over
+    the token table measured ~19 us/token under full parallelism
+    (sort+object-agg cache thrash) vs ~2 us/token here.
     """
     src = pages.filter(F.col("lang") == "en").select("url", "html")
     names = [f.name for f in SPANS_FUSED_SCHEMA.fields]
@@ -466,7 +468,8 @@ def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
             n_buf = 0
             return out
 
-        def emit(url, kind, group, label, text, own, tag, rname, rkind, rtag):
+        def emit(url, kind, group, label, text, own, tag, rname, rkind, rtag,
+                 n_tok=None):
             cols["url"].append(url)
             cols["kind"].append(kind)
             cols["group"].append(group)
@@ -474,6 +477,7 @@ def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
             cols["text"].append(text)
             cols["own_name"].append(own)
             cols["tag"].append(tag)
+            cols["n_tokens"].append(n_tok)
             cols["ref_name"].append(rname)
             cols["ref_kind"].append(rkind)
             cols["ref_tag"].append(rtag)
@@ -484,11 +488,12 @@ def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
                     continue
                 spans, tags = _doc_spans(url, bytes(html), model)
                 n = 0
-                for g, label, text, own in spans:
-                    emit(url, "span", g, label, text, own, None, None, None, None)
-                    # mention mining fused into the same pass — exactly
-                    # the refs_udf semantics (mentions.py): per-span
-                    # dedup + sort, ref names lowercased downstream-style
+                for g, label, text, own, n_tok in spans:
+                    emit(url, "span", g, label, text, own, None, None, None,
+                         None, n_tok)
+                    # mention mining fused into the same pass: per span,
+                    # find_ref_results deduped + sorted, ref names
+                    # lowercased
                     _, intra, extra = find_ref_results(own, text or "")
                     for nm in sorted(set(intra)):
                         emit(url, "mention", g, label, None, own,

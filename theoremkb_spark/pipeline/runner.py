@@ -20,8 +20,8 @@ repartition (north rule) lands on the ~40x smaller fused span table,
 whose HashPartitioning every downstream groupBy/window reuses. A
 broadcast-sized dictionary is canonicalized on the driver (the
 shuffled regime, whose dictionary is too big for that, keeps the
-distributed CC). ``build_triples`` takes any fused-shaped table, so the
-window-function cross-check (label.label_tokens + mentions.*) can be
+distributed CC). ``build_triples`` takes any fused-shaped table, so a
+second labeler's rows (the tests' window-function cross-check) are
 assembled by the same code.
 """
 
@@ -102,9 +102,9 @@ def build_triples(fused: DataFrame, dico: DataFrame) -> DataFrame:
             (kind == "mention") & (ref_kind == "extra"), F.col("ref_tag")
         ),
     )
-    # no triple reads the span text (the widest column), so it does not
-    # ride the join exchange
-    joined = rel.drop("text").join(dico, ["url", "tag"], "left")
+    # no triple reads the span text (the widest column) or its token
+    # count, so neither rides the join exchange
+    joined = rel.drop("text", "n_tokens").join(dico, ["url", "tag"], "left")
 
     own_ent = _entity(url, own)
     target = F.coalesce(

@@ -7,16 +7,16 @@ annex. Two downstream consumers:
 
 * the RESULTS parent-class constraint (``classes/__init__.py:135``,
   ``get_box_validator`` ``paper/__init__.py:405-428``): result spans are
-  valid only where segmentation in {body, annex}. ``allowed_blocks``
-  is that filter as a DataFrame; the production fused path applies the
-  running-segment state machine inside its Arrow pass
+  valid only where segmentation in {body, annex}. The labeler applies
+  the running-segment state machine inside its Arrow pass
   (extract._doc_spans), for the rule labeler and a trained model alike,
   but not the block-local marginal overrides below — no result span on
   the test corpora reaches a page-number, footnote or headnote block.
 * the HEADER class (``classes/__init__.py:101-106``): the title lives
   in the front segment; ``extract_titles`` mirrors the reference's
   ``_refresh_title`` (``paper/__init__.py:305-317``) — concatenate the
-  title block's token contents in reading order.
+  title block's token contents in reading order, the key of the
+  ``link_title_match`` query.
 
 Everything here is pure DataFrame expressions over the token table —
 one groupBy (url, block) rollup, then window passes that all reuse the
@@ -40,8 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .label import _pattern_col
-
 #: the reference's full segmentation vocabulary (classes/__init__.py:73-83)
 SEGMENTATION_LABELS = (
     "acknowledgement",
@@ -54,8 +52,12 @@ SEGMENTATION_LABELS = (
     "annex",
 )
 
-#: parents of the results class (classes/__init__.py:135)
-RESULT_PARENT_SEGMENTS = ("body", "annex")
+
+def _pattern_col(col):
+    """get_pattern as JVM expressions: strip non-alnum, digits->@, lower."""
+    return F.lower(
+        F.regexp_replace(F.regexp_replace(col, r"[^a-zA-Z0-9 ]", ""), r"[0-9]", "@")
+    )
 
 
 def _block_rollup(tokens: DataFrame) -> DataFrame:
@@ -153,30 +155,6 @@ def segment_blocks(tokens: DataFrame) -> DataFrame:
         blocks.withColumn("_title_block", title_block)
         .withColumn("segment", segment)
         .select("url", "block", "segment", "block_text", "_title_block")
-    )
-
-
-def allowed_blocks(tokens: DataFrame) -> DataFrame:
-    """(url, block) pairs whose segment admits result spans — the
-    semi-join side of the parent-class constraint (P4 wiring)."""
-    return (
-        segment_blocks(tokens)
-        .filter(F.col("segment").isin(*RESULT_PARENT_SEGMENTS))
-        .select("url", "block")
-    )
-
-
-def apply_parent_constraint(labeled: DataFrame, tokens: DataFrame) -> DataFrame:
-    """Labeled SPAN tokens (label != 'O') restricted to blocks whose
-    segment is a results parent — a left-semi join on (url, block), the
-    P4 parent-constraint wiring. Group numbers keep their gaps: the
-    label layer numbers every span; this filter only removes boxes,
-    exactly the reference's get_box_validator semantics. The block
-    table is ~40x smaller than the token stream; the planner broadcasts
-    it at test scale and falls back to a co-partitioned semi-join at
-    corpus scale."""
-    return labeled.filter(F.col("label") != "O").join(
-        allowed_blocks(tokens), ["url", "block"], "left_semi"
     )
 
 

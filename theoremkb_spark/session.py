@@ -12,6 +12,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding the theoremkb_spark package (or the --py-files zip)
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -57,6 +59,9 @@ def get_spark(
         # preloaded — worker churn otherwise costs ~1.5 s of import per
         # fresh worker (see daemon_preload.py)
         .config("spark.python.daemon.module", "theoremkb_spark.daemon_preload")
+        # ... and the workers must find this package wherever the driver
+        # was started: a driver-side sys.path insert does not reach them
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
