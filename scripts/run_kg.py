@@ -72,9 +72,18 @@ def main() -> None:
 
     import os
 
+    import pyarrow as pa
+
+    from theoremkb_spark.io.catalog import write_on_driver
     from theoremkb_spark.pipeline.extract import load_pages
-    from theoremkb_spark.pipeline.runner import build_kg, lineage_rows, load_dico
-    from theoremkb_spark.session import get_spark
+    from theoremkb_spark.pipeline.runner import (
+        LINEAGE_ARROW,
+        build_kg,
+        lineage_accumulator,
+        load_dico,
+        stage_lineage,
+    )
+    from theoremkb_spark.session import arrow_frame, get_spark
 
     spark = get_spark("run_kg", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -139,13 +148,13 @@ def main() -> None:
         from theoremkb_spark.io.catalog import CheckpointedTripleStore, run_incremental
 
         # run_incremental canonicalizes internally — hand it the raw rows
-        ents = spark.createDataFrame(
+        ents = arrow_frame(
+            spark,
             [
                 (r["url"], r["tag"], r["pdf_to"], r["title"], r["norm_title"])
                 for r in dict_rows
             ],
-            schema="url string, tag string, pdf_to string, title string,"
-            " norm_title string",
+            "url string, tag string, pdf_to string, title string, norm_title string",
         )
         store = CheckpointedTripleStore(args.out)
         t0 = time.perf_counter()
@@ -175,15 +184,19 @@ def main() -> None:
         return
 
     t0 = time.perf_counter()
-    triples = build_kg(
-        spark, pages, dico=dico, model_file=model_file
-    ).persist()  # consumed twice: triple sink + lineage rollup
-    triples.write.mode("overwrite").parquet(f"{args.out}/triples")
-    lineage_rows(triples, "triples").write.mode("overwrite").parquet(
-        f"{args.out}/lineage"
-    )
+    # the one Spark action: the lineage is counted while the triples write
+    lineage = lineage_accumulator(spark)
+    build_kg(
+        spark, pages, dico=dico, model_file=model_file, lineage=lineage
+    ).write.mode("overwrite").parquet(f"{args.out}/triples")
     wall = time.perf_counter() - t0
-    triples.unpersist()
+    rows = stage_lineage(lineage.value, int(wall * 1000))
+    write_on_driver(
+        f"{args.out}/lineage",
+        pa.Table.from_pylist(
+            [dict(zip(LINEAGE_ARROW.names, r)) for r in rows], schema=LINEAGE_ARROW
+        ),
+    )
 
     n = spark.read.parquet(f"{args.out}/triples").count()
     print(

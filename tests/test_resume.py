@@ -246,10 +246,13 @@ def test_lineage_reconciles_across_stages(spark, tmp_path):
     """Every committed batch carries per-stage, per-partition lineage
     (north rule: per-partition lineage + metrics), and the row counts
     reconcile across the pipeline: fused == spans + mentions + citations
-    (the fused pass emits exactly those three kinds), the triples stage
-    matches the batch's committed triple file, and every stage records a
-    wall-ms."""
+    (the fused pass emits exactly those three kinds), each triples row
+    is the exact row and distinct-url count of its committed
+    ``part-<pid>`` file, and every stage records a wall-ms."""
+    import glob
     from collections import defaultdict
+
+    import pyarrow.parquet as pq
 
     pages = load_pages(spark, N)
     ents = load_entity_dict(spark, N)
@@ -262,9 +265,12 @@ def test_lineage_reconciles_across_stages(spark, tmp_path):
 
     totals: dict = defaultdict(int)
     walls: dict = {}
+    triples_rows: dict = defaultdict(dict)
     for r in store.read_lineage(spark).collect():
         totals[(r.batch_id, r.stage)] += r.rows
         walls[(r.batch_id, r.stage)] = r.wall_ms
+        if r.stage == "triples":
+            triples_rows[r.batch_id][r.partition_id] = (r.rows, r.urls)
 
     batches = {b for b, _s in totals}
     assert batches == {0, 1, 2}
@@ -273,13 +279,90 @@ def test_lineage_reconciles_across_stages(spark, tmp_path):
         assert {s for bb, s in totals if bb == b} == expected_stages
         parts = sum(totals[(b, s)] for s in ("spans", "mentions", "citations"))
         assert totals[(b, "fused")] == parts, (b, totals[(b, "fused")], parts)
-        # the triples stage reconciles with the committed batch file
+        # each triples row recounts exactly from its committed part file
         m = next(mm for mm in store.manifests() if mm["batch_id"] == b)
-        committed = spark.read.parquet(m["triples_path"]).count()
-        assert totals[(b, "triples")] == committed, (b, committed)
+        recount = {}
+        for path in glob.glob(os.path.join(m["triples_path"], "part-*.parquet")):
+            urls = pq.read_table(path, columns=["url"]).column("url").to_pylist()
+            if urls:
+                pid = int(os.path.basename(path).split("-")[1])
+                recount[pid] = (len(urls), len(set(urls)))
+        assert triples_rows[b] == recount, (b, triples_rows[b], recount)
         assert all(
             walls[(b, s)] is not None and walls[(b, s)] >= 0 for s in expected_stages
         )
+
+
+def test_lineage_is_counted_in_the_extraction_pass(spark, tmp_path):
+    """The fused table and its kinds are reported per EXTRACTION task:
+    their partition ids, rows and exact distinct urls are those of the
+    unrepartitioned kernel output. The kinds record wall_ms 0, and the
+    triples rows the wall of the build-and-write action, which holds
+    every kernel task."""
+    from pyspark.sql import functions as F
+
+    from theoremkb_spark.pipeline.extract import FUSED_KINDS, extract_spans
+
+    pages = load_pages(spark, N)
+    store = CheckpointedTripleStore(str(tmp_path / "kg_x"))
+    run_incremental(spark, pages, load_entity_dict(spark, N), store)
+    lineage = [tuple(r) for r in store.read_lineage(spark).collect()]
+    got = {(s, pid): (rows, urls) for s, pid, rows, urls, _w, _b in lineage}
+
+    fused = extract_spans(pages).withColumn("_pid", F.spark_partition_id())
+    expected = {}
+    for stage, kind in (("fused", None), *FUSED_KINDS.items()):
+        rows = fused if kind is None else fused.filter(F.col("kind") == kind)
+        for r in rows.groupBy("_pid").agg(
+            F.count(F.lit(1)).alias("n"), F.countDistinct("url").alias("u")
+        ).collect():
+            expected[(stage, r._pid)] = (r.n, r.u)
+    assert {k: v for k, v in got.items() if k[0] != "triples"} == expected
+
+    walls = {(s, pid): w for s, pid, _r, _u, w, _b in lineage}
+    triples_wall = {w for (s, _p), w in walls.items() if s == "triples"}
+    assert len(triples_wall) == 1, walls
+    assert all(walls[k] == 0 for k in walls if k[0] in FUSED_KINDS), walls
+    fused_walls = [w for (s, _p), w in walls.items() if s == "fused"]
+    assert min(fused_walls) >= 0 and max(fused_walls) <= triples_wall.pop(), walls
+
+
+def test_lineage_plan_run_twice_reports_the_same_rows(spark, tmp_path):
+    """The accumulator merge overwrites a (stage, partition) report, so
+    re-running the lineage-bearing plan (as a retried task or a
+    recomputed stage does) leaves the counts as one run left them; only
+    the kernel's measured wall-ms may differ."""
+    from theoremkb_spark.pipeline.runner import (
+        build_kg,
+        lineage_accumulator,
+        stage_lineage,
+    )
+
+    pages = load_pages(spark, N)
+    lineage = lineage_accumulator(spark)
+    triples = build_kg(spark, pages, load_entity_dict(spark, N), lineage=lineage)
+
+    def counts():
+        return [row[:4] for row in stage_lineage(lineage.value, 0)]
+
+    triples.write.parquet(str(tmp_path / "once"))
+    once = counts()
+    triples.write.parquet(str(tmp_path / "twice"))
+    assert counts() == once
+    stages = {"fused", "spans", "mentions", "citations", "triples"}
+    assert {s for s, *_ in once} == stages
+    assert sum(r for s, _p, r, _u in once if s == "triples") == len(_expected())
+
+
+def test_lineage_merge_overwrites_a_key():
+    from theoremkb_spark.pipeline.runner import _LatestReport
+
+    merge = _LatestReport()
+    value = merge.zero({("fused", 0): (1, 1, 1)})
+    assert value == {}
+    value = merge.addInPlace(value, {("fused", 0): (5, 2, 7), ("spans", 0): (3, 2, 0)})
+    value = merge.addInPlace(value, {("fused", 0): (5, 2, 9)})
+    assert value == {("fused", 0): (5, 2, 9), ("spans", 0): (3, 2, 0)}
 
 
 def _hand_committed_store(spark, path, n):

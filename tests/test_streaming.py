@@ -33,7 +33,9 @@ def test_streaming_two_waves_match_oracle(spark, tmp_path):
     pages_dir = tmp_path / "pages"
     pages_dir.mkdir()
     store = CheckpointedTripleStore(str(tmp_path / "kg"))
-    dico = load_dico(spark, entity_dict_rows(N)).cache()
+    # an Arrow-built local relation: reading it runs no job, so no cache
+    # (a cached one would also serve later tests' identical frames)
+    dico = load_dico(spark, entity_dict_rows(N))
 
     # wave 1: first half of the corpus lands
     _write_wave(str(pages_dir / "wave1.parquet"), rows[: N // 2])

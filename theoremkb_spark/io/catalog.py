@@ -20,15 +20,22 @@ emulated on plain parquet with an atomic manifest protocol:
   protocol: write the folded generation, then atomically swap its
   pointer JSON.
 
-A batch's files are written where its data already lives. The triples
-are a Spark DataFrame and go through a Spark write. The lineage rows are
-always a small driver-side list, and the url file is one too when the
-caller collected its urls (``run_incremental`` with a ``limit``): those
-are written with ``pyarrow.parquet`` on the driver, which saves a Spark
-job per file. A url set that is still a DataFrame (the re-crawl, a
-stream micro-batch, ``limit=None``) can be the whole corpus, so it keeps
-the Spark write. This relies on the driver seeing the store's
-filesystem, as the manifests and pointers already do.
+A batch is built and committed by ONE Spark action, the triples write.
+The per-stage, per-partition lineage is counted inside the passes that
+already touch the rows (``runner.lineage_accumulator``: the extraction
+kernel and a pass-through after the triple rollup), so it costs no
+action and no cache. Every frame the driver builds reaches the JVM as
+Arrow (``session.arrow_frame``), so it runs no Python task.
+
+A batch's files are written where their data already lives. The
+triples are a Spark DataFrame and go through that Spark write. The
+lineage rows are always a small driver-side list, and the url file is
+one too when the caller collected its urls (``run_incremental`` with a
+``limit``): those are written with ``pyarrow.parquet`` on the driver,
+which saves a Spark job per file. A url set that is still a DataFrame
+(the re-crawl, a stream micro-batch, ``limit=None``) can be the whole
+corpus, so it keeps the Spark write. This relies on the driver seeing
+the store's filesystem, as the manifests and pointers already do.
 
 Every ingest path (``run_incremental``, ``recommit_urls`` and the
 streaming micro-batch) commits through ``_build_and_commit``.
@@ -46,39 +53,34 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.runner import (
+    LINEAGE_ARROW,
     LINEAGE_SCHEMA,
     TRIPLE_COLS,
     TRIPLE_SCHEMA,
     build_kg,
-    release_caches,
+    lineage_accumulator,
     stage_lineage,
 )
+from ..session import arrow_frame
 
 _NO_GENERATION = {"upto_batch": -1, "path": None}
 
 # LINEAGE_SCHEMA plus the batch id, as Spark reads a committed lineage file
-_LINEAGE_ARROW = pa.schema(
-    [
-        ("stage", pa.string()),
-        ("partition_id", pa.int32()),
-        ("rows", pa.int64()),
-        ("urls", pa.int64()),
-        ("wall_ms", pa.int64()),
-        ("batch_id", pa.int32()),
-    ]
-)
+_LINEAGE_ARROW = LINEAGE_ARROW.append(pa.field("batch_id", pa.int32()))
 
 
-def _write_on_driver(path: str, table: pa.Table) -> None:
+def write_on_driver(path: str, table: pa.Table) -> None:
     """Write ``table`` as the one parquet file of directory ``path``,
     first clearing whatever a killed attempt left there."""
     shutil.rmtree(path, ignore_errors=True)
@@ -198,7 +200,7 @@ class CheckpointedTripleStore:
                 )
             )
         if not parts:
-            return spark.createDataFrame([], TRIPLE_SCHEMA)
+            return arrow_frame(spark, [], TRIPLE_SCHEMA)
         rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         dead = [
             m["supersedes_urls_path"] for m in visible if m.get("supersedes_urls_path")
@@ -241,7 +243,7 @@ class CheckpointedTripleStore:
         if gen["path"]:
             paths.append(gen["path"])
         if not paths:
-            return spark.createDataFrame([], "url string")
+            return arrow_frame(spark, [], "url string")
         return spark.read.schema("url string").parquet(*paths).distinct()
 
     def compact_url_ledger(
@@ -261,7 +263,7 @@ class CheckpointedTripleStore:
         merge covers pre-round-4 batches written without wall_ms."""
         paths = [m["lineage_path"] for m in self.manifests() if m.get("lineage_path")]
         if not paths:
-            return spark.createDataFrame([], LINEAGE_SCHEMA + ", batch_id int")
+            return arrow_frame(spark, [], LINEAGE_SCHEMA + ", batch_id int")
         return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     # -- write side (one batch = one snapshot) ---------------------------
@@ -269,18 +271,21 @@ class CheckpointedTripleStore:
         self,
         triples: DataFrame,
         urls: DataFrame | list[str],
-        lineage: list[tuple] | None = None,
+        lineage: Accumulator | None = None,
         supersedes_urls: DataFrame | None = None,
     ) -> int:
         """Commit one batch: its triples, the ``urls`` it marks
-        processed, its ``LINEAGE_SCHEMA`` rows from ``stage_lineage``
-        and, optionally, its supersedes. Every file is written before
-        the manifest, whose atomic rename is the one commit point.
+        processed, its lineage and, optionally, its supersedes. Every
+        file is written before the manifest, whose atomic rename is the
+        one commit point.
 
-        The triples are written by Spark. The lineage rows are written
-        on the driver with pyarrow. So is the url file when ``urls`` is
-        a list, already collected by the caller; a url DataFrame can be
-        the whole corpus, so it is written by Spark.
+        The triples are written by Spark. ``lineage``, the accumulator
+        ``build_kg(lineage=)`` counted into, is complete once that write
+        returns: ``stage_lineage`` turns it into the ``LINEAGE_SCHEMA``
+        rows, the triples rows carrying the write's wall-ms, and they
+        are written on the driver with pyarrow. So is the url file when
+        ``urls`` is a list, already collected by the caller; a url
+        DataFrame can be the whole corpus, so it is written by Spark.
 
         ``supersedes_urls`` (a one-column ``url`` DataFrame) marks
         this batch as a RE-CRAWL of those urls: their triples from
@@ -294,15 +299,20 @@ class CheckpointedTripleStore:
 
         # data first (invisible until manifested); each write clears any
         # debris from a previous killed attempt of the same batch id
+        t0 = time.perf_counter()
         triples.write.mode("overwrite").parquet(triples_path)
+        wall_ms = int((time.perf_counter() - t0) * 1000)
         if isinstance(urls, DataFrame):
             urls.select("url").distinct().write.mode("overwrite").parquet(urls_path)
         else:
             url_col = pa.array(list(dict.fromkeys(urls)), pa.string())
-            _write_on_driver(urls_path, pa.table({"url": url_col}))
+            write_on_driver(urls_path, pa.table({"url": url_col}))
         if lineage is not None:
-            rows = [dict(zip(_LINEAGE_ARROW.names, (*r, batch_id))) for r in lineage]
-            _write_on_driver(
+            rows = [
+                dict(zip(_LINEAGE_ARROW.names, (*r, batch_id)))
+                for r in stage_lineage(lineage.value, wall_ms)
+            ]
+            write_on_driver(
                 lineage_path, pa.Table.from_pylist(rows, schema=_LINEAGE_ARROW)
             )
 
@@ -344,34 +354,20 @@ def _build_and_commit(
     which would otherwise be reprocessed forever — and, with
     ``supersede``, re-crawled. The one commit path of every ingest.
 
-    The batch commits a per-STAGE, per-partition lineage table (fused /
-    spans / mentions / citations / triples — row counts, distinct urls,
-    and per-stage wall-ms) through the store's atomic manifest, so an
-    operator can reconcile row counts across the whole pipeline for any
-    batch from the committed data alone (north rule: per-partition
-    lineage + metrics). The cached intermediates are released before
-    the url-ledger and triple compactions run, so looped callers never
-    accumulate cached blocks."""
-    caches: list[DataFrame] = []
-    if supersede:
-        # the url file and the supersedes file both read it: compute once
-        urls = urls.cache()
-        caches.append(urls)
-    stages: dict[str, DataFrame] = {}
-    triples = build_kg(
-        spark, pages, entity_dict, dico=dico, cache_registry=caches, stages_out=stages
-    ).cache()  # two consumers: the commit write + the triples lineage row
-    caches.append(triples)
-    stages["triples"] = triples
-    try:
-        batch_id = store.commit_batch(
-            triples,
-            urls,
-            stage_lineage(stages),
-            supersedes_urls=urls if supersede else None,
-        )
-    finally:
-        release_caches(caches)
+    The triples write is the one Spark action that builds and commits
+    the batch; nothing is cached. The batch commits a per-STAGE,
+    per-partition lineage table (fused / spans / mentions / citations /
+    triples — row counts, exact distinct urls, wall-ms) through the
+    store's atomic manifest, counted during that write (see
+    ``runner.stage_lineage``), so an operator can reconcile row counts
+    across the whole pipeline for any batch from the committed data
+    alone (north rule: per-partition lineage + metrics). The url-ledger
+    and triple compactions run after the commit."""
+    lineage = lineage_accumulator(spark)
+    triples = build_kg(spark, pages, entity_dict, dico=dico, lineage=lineage)
+    batch_id = store.commit_batch(
+        triples, urls, lineage, supersedes_urls=urls if supersede else None
+    )
     store.compact_url_ledger(spark)
     store.compact_triples(spark)
     return batch_id
@@ -404,7 +400,7 @@ def run_incremental(
         urls = [r.url for r in todo.select("url").orderBy("url").limit(limit).collect()]
         if not urls:
             return -1
-        picked = spark.createDataFrame([(u,) for u in urls], "url string")
+        picked = arrow_frame(spark, [(u,) for u in urls], "url string")
         todo = pages.join(F.broadcast(picked), "url", "left_semi")
     return _build_and_commit(spark, store, todo, urls, entity_dict)
 

@@ -17,11 +17,13 @@ commit_batch            one transaction appending to the ``triples``,
                         ``urls``, and ``lineage`` tables (each append is
                         a snapshot commit; the batch_id rides as a
                         column, set from the table's current snapshot
-                        ordinal). The emulation writes the lineage rows,
-                        and a url list, on the driver; here they are
-                        wrapped with ``spark.createDataFrame`` and
-                        appended like the triples (untested: the
-                        adapter cannot run without the Iceberg jars)
+                        ordinal). The lineage is read after the triples
+                        append, the batch's one building action. The
+                        emulation writes the lineage rows, and a url
+                        list, on the driver; here they are wrapped
+                        with ``session.arrow_frame`` and appended like
+                        the triples (untested: the adapter cannot run
+                        without the Iceberg jars)
 read_triples            plain ``SELECT`` on the catalog table; the
                         emulation's supersede filter is unnecessary —
                         re-crawl upserts issue a real row-level
@@ -49,10 +51,14 @@ adapter is exercised only for its guard behavior.
 
 from __future__ import annotations
 
+import time
+
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.runner import LINEAGE_SCHEMA, TRIPLE_SCHEMA
+from ..pipeline.runner import LINEAGE_SCHEMA, TRIPLE_SCHEMA, stage_lineage
+from ..session import arrow_frame
 from .catalog import CheckpointedTripleStore, iceberg_available
 
 
@@ -129,13 +135,13 @@ class IcebergTripleStore:
         self,
         triples: DataFrame,
         urls: DataFrame | list[str],
-        lineage: list[tuple] | None = None,
+        lineage: Accumulator | None = None,
         supersedes_urls: DataFrame | None = None,
     ) -> int:
         batch_id = self.next_batch_id()
         spark = self.spark
         if not isinstance(urls, DataFrame):
-            urls = spark.createDataFrame([(u,) for u in urls], "url string")
+            urls = arrow_frame(spark, [(u,) for u in urls], "url string")
         spark.sql(
             f"ALTER TABLE {self.triples_tbl} SET TBLPROPERTIES "
             f"('commit.manifest.min-count-to-merge'='{8}')"
@@ -151,12 +157,14 @@ class IcebergTripleStore:
                 f"DELETE FROM {self.triples_tbl} "
                 "WHERE url IN (SELECT url FROM _kg_supersede_urls)"
             )
+        t0 = time.perf_counter()
         (
             triples.withColumn("batch_id", F.lit(batch_id))
             .writeTo(self.triples_tbl)
             .option("snapshot-property.kg.batch_id", str(batch_id))
             .append()
         )
+        wall_ms = int((time.perf_counter() - t0) * 1000)
         (
             urls.select("url").distinct().withColumn("batch_id", F.lit(batch_id))
             .writeTo(self.urls_tbl)
@@ -164,7 +172,9 @@ class IcebergTripleStore:
         )
         if lineage is not None:
             (
-                spark.createDataFrame(lineage, LINEAGE_SCHEMA)
+                arrow_frame(
+                    spark, stage_lineage(lineage.value, wall_ms), LINEAGE_SCHEMA
+                )
                 .withColumn("batch_id", F.lit(batch_id))
                 .writeTo(self.lineage_tbl)
                 .append()

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import arrow_frame
+
 
 def _driver_cc(edge_rows) -> list[tuple[str, str]]:
     """Union-find on the driver for small graphs (same semantics as the
@@ -129,11 +131,11 @@ def connected_components(
         # edge list without paying a distinct shuffle first
         sample = raw.limit(driver_threshold + 1).collect()
         if len(sample) <= driver_threshold:
-            spark = edges.sparkSession
-            return spark.createDataFrame(
-                _driver_cc([(r.id, r.nbr) for r in sample]) or [("", "")],
+            return arrow_frame(
+                edges.sparkSession,
+                _driver_cc([(r.id, r.nbr) for r in sample]),
                 "id string, component string",
-            ).filter(F.col("id") != "")
+            )
 
     sym = raw.unionByName(
         edges.selectExpr(f"{dst} as id", f"{src} as nbr")

@@ -125,21 +125,22 @@ def salted_join(
 
 def estimated_bytes(df: DataFrame) -> int:
     """Catalyst's pre-execution size estimate for a plan: file sizes for
-    scans, propagated through projections and filters; Long.MaxValue
-    for driver-local/RDD-backed plans. No job is triggered — this is the
-    same signal the planner's own broadcast decision reads, surfaced for
-    strategy selection."""
+    scans, propagated through projections and filters; row-count based
+    for Arrow-built local relations; Long.MaxValue for RDD-backed plans.
+    No job is triggered — this is the same signal the planner's own
+    broadcast decision reads, surfaced for strategy selection."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def fits_broadcast(df: DataFrame) -> bool:
     """Broadcast-vs-shuffle decision: ``df``'s estimate is at most
-    ``BROADCAST_MAX_BYTES`` (read at call time), or unknowable. An
-    unknowable estimate (Long.MaxValue) comes from driver-created local
-    frames, which fit in driver memory by construction; file-backed
-    inputs (the at-scale case) always carry real file-size stats, so the
-    threshold governs where it matters: only a file-backed frame over
-    it takes the shuffled path."""
+    ``BROADCAST_MAX_BYTES`` (read at call time), or unknowable. File-backed
+    inputs (the at-scale case) carry real file-size stats, and the
+    library's own driver-built frames (``session.arrow_frame``) are
+    ``LocalRelation``s with real stats too, so the threshold governs
+    both. An unknowable estimate (Long.MaxValue) comes from a frame built
+    from a Python row list (an RDD scan, as the test loaders build),
+    which fits in driver memory by construction."""
     est = estimated_bytes(df)
     return est == (1 << 63) - 1 or est <= BROADCAST_MAX_BYTES
 
@@ -157,7 +158,7 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     so a tiny table never pays a full-width Arrow worker spin-up for
     kilobytes (SimHash at sf0.1 on local[32]: width 8 0.31 s, width 32
     0.47 s, no spread 0.42 s), and an unknowable estimate (Long.MaxValue,
-    driver-local frames) caps at the cores like any huge one.
+    RDD-backed frames) caps at the cores like any huge one.
 
     With ``keys`` the rows are hash-partitioned on them: unique ids
     spread evenly, skip round-robin's sort-before-repartition pass over

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import arrow_frame
 from .joins import spread
 
 
@@ -222,8 +223,8 @@ def ivf_topk(
     oracle (list_dot_product over the same rounded centroid constants)
     reproduces every value bit-exactly."""
     spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, row) for i, row in enumerate(centroids)], "cell int, cvec array<double>"
+    cdf = arrow_frame(
+        spark, list(enumerate(centroids)), "cell int, cvec array<double>"
     )
     v = F.col(vec_col).cast("array<double>")
     m = _dot(F.col("cvec"), F.col("cvec")) - 2 * _dot(F.col("_v"), F.col("cvec"))

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import html as _html
 import re
+import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -433,13 +434,25 @@ def _load_model(artifact: str):
     return _MODEL_CACHE[artifact]
 
 
-def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
+# the fused table's row kinds, by the lineage stage name each reports as
+FUSED_KINDS = {"spans": "span", "mentions": "mention", "citations": "cite"}
+
+
+def extract_spans(
+    pages: DataFrame, model_file: str | None = None, lineage=None
+) -> DataFrame:
     """English pages -> fused (span | mention | cite) rows: the
     single-Arrow-pass front end.
 
     ``model_file``, a pickled sequence-model artifact (``ml.crf``; an
     absolute path or a name registered via ``sc.addFile``), replaces the
     rule labeler inside the same pass; everything else is shared.
+
+    ``lineage``, a ``runner.lineage_accumulator``, receives each task's
+    lineage from the kernel itself: the fused rows, and per row kind
+    (``FUSED_KINDS``) its rows, all with exact distinct urls, keyed by
+    the task's partition; the fused entry carries the kernel's wall-ms
+    in the task.
 
     Span rows carry the span's token count (``n_tokens``): filtered to
     ``kind = 'span'`` they are the ``kg_spans`` surface.
@@ -457,9 +470,13 @@ def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.text import find_ref_results
 
+        t0 = time.perf_counter()
         model = None if model_file is None else _load_model(model_file)
         cols: dict[str, list] = {n: [] for n in names}
         n_buf = 0
+        # this task's lineage: rows and distinct urls per row kind
+        kind_rows = dict.fromkeys(FUSED_KINDS.values(), 0)
+        kind_urls: dict[str, set] = {k: set() for k in FUSED_KINDS.values()}
 
         def flush():
             nonlocal cols, n_buf
@@ -505,9 +522,26 @@ def extract_spans(pages: DataFrame, model_file: str | None = None) -> DataFrame:
                         n += 1
                 for tag in tags:
                     emit(url, "cite", 0, None, None, None, tag, None, None, None)
+                for kind, k in (("span", len(spans)), ("mention", n),
+                                ("cite", len(tags))):
+                    if k:
+                        kind_rows[kind] += k
+                        kind_urls[kind].add(url)
                 n_buf += len(spans) + len(tags) + n
                 if n_buf >= 100_000:
                     yield flush()
+        fused_rows = sum(kind_rows.values())
+        if lineage is not None and fused_rows:
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            wall = int((time.perf_counter() - t0) * 1000)
+            urls = set().union(*kind_urls.values())
+            report = {("fused", pid): (fused_rows, len(urls), wall)}
+            for stage, kind in FUSED_KINDS.items():
+                if kind_rows[kind]:
+                    report[(stage, pid)] = (kind_rows[kind], len(kind_urls[kind]), 0)
+            lineage.add(report)
         if n_buf:
             yield flush()
 

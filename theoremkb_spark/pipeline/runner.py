@@ -27,14 +27,17 @@ assembled by the same code.
 
 from __future__ import annotations
 
-import time
+from collections.abc import Iterator
 
+import pyarrow as pa
+from pyspark import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.joins import fits_broadcast
+from ..session import arrow_frame
 from .canon import canonicalize_dict
-from .extract import extract_spans
+from .extract import FUSED_KINDS, extract_spans
 
 TRIPLE_COLS = ["subj", "pred", "obj", "url", "group"]
 TRIPLE_SCHEMA = "subj string, pred string, obj string, url string, group long"
@@ -54,14 +57,16 @@ def load_dico(spark: SparkSession, dict_rows) -> DataFrame:
     """Canonicalize a broadcast-sized dictionary driver-side and wrap it
     as the (url, tag, pdf_to_canon) DataFrame the LINK stage consumes.
     Same output as ``canonicalize_dict(load_entity_dict(...))`` without
-    the half-dozen tiny Spark jobs (see canon.canonicalize_rows). This
-    is the path ``build_kg`` itself takes in the broadcast regime when
-    no ``dico`` is passed."""
+    the half-dozen tiny Spark jobs (see canon.canonicalize_rows), and
+    shipped as Arrow, so reading it runs no Python task. This is the
+    path ``build_kg`` itself takes in the broadcast regime when no
+    ``dico`` is passed."""
     from .canon import canonicalize_rows
 
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         canonicalize_rows(dict_rows),
-        schema="url string, tag string, pdf_to_canon string",
+        "url string, tag string, pdf_to_canon string",
     )
 
 
@@ -176,7 +181,7 @@ def build_kg(
     dico: DataFrame | None = None,
     model_file: str | None = None,
     cache_registry: list[DataFrame] | None = None,
-    stages_out: dict[str, DataFrame] | None = None,
+    lineage: Accumulator | None = None,
 ) -> DataFrame:
     """pages + entity_dict -> triples DataFrame (lazy).
 
@@ -198,14 +203,16 @@ def build_kg(
     canonicalization stage — e.g. from ``load_dico`` when the dictionary
     rows are already driver-resident. One of the two is required.
 
-    Pass ``cache_registry`` (a list) to collect the cached stage
-    intermediates (the fused table, cached only for ``stages_out``);
-    hand it to ``release_caches`` after the terminal action so looped
-    callers don't leak cached blocks.
+    Pass ``lineage`` (from ``lineage_accumulator``) to count per-stage,
+    per-partition lineage in the passes that already touch the rows:
+    the extraction kernel reports the fused table and its three row
+    kinds, and a pass-through ``mapInArrow`` after the triple rollup
+    reports the triples. The counts arrive when the triples plan runs,
+    with no Spark action of their own; ``stage_lineage`` reads them.
 
-    Pass ``stages_out`` (a dict) to receive the cached fused table —
-    the hook ``stage_lineage`` uses to commit per-stage, per-partition
-    lineage rows through the checkpoint store.
+    ``cache_registry`` is still accepted because the frozen ``bench.py``
+    and ``perfbench`` pass it, but ``build_kg`` caches nothing: the list
+    is left as it was given.
     """
     if entity_dict is None and dico is None:
         raise ValueError("build_kg needs entity_dict or dico (or both)")
@@ -234,19 +241,9 @@ def build_kg(
     # multiplies the task count of every downstream scan of it (4x
     # cores measured 768 tasks and 8.9 s min-of-5 vs 5.2 s at 1x under
     # the round-3 six-branch plan; see BENCH/RECONCILE_r03.md).
-    fused = extract_spans(pages, model_file).repartition(
+    fused = extract_spans(pages, model_file, lineage).repartition(
         spark.sparkContext.defaultParallelism, F.col("url")
     )
-    if stages_out is not None:
-        # the assembly consumes fused exactly ONCE — caching it only for
-        # the lineage hook keeps the repartition's HashPartitioning(url)
-        # statically visible otherwise, so the triple rollup plans with
-        # NO exchange (a cached plan hides its partitioning behind
-        # AdaptiveSparkPlan until materialized)
-        fused = fused.cache()
-        if cache_registry is not None:
-            cache_registry.append(fused)
-        stages_out["fused"] = fused
     if dico is None:
         if broadcast:
             # a broadcast-sized dictionary is canonicalized on the driver
@@ -255,86 +252,100 @@ def build_kg(
             dico = load_dico(spark, entity_dict.collect())
         else:
             dico = canonicalize_dict(entity_dict)
-    return build_triples(fused, F.broadcast(dico) if broadcast else dico)
-
-
-def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition lineage/metrics rows (north rule): row counts and
-    distinct-url counts per physical partition for a stage."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.approx_count_distinct("url").alias("urls"),
-        )
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("_pid").alias("partition_id"),
-            "rows",
-            "urls",
-        )
+    # the regime is applied as a hint both ways, so Catalyst's own
+    # auto-broadcast threshold cannot overrule it
+    triples = build_triples(
+        fused, F.broadcast(dico) if broadcast else dico.hint("merge")
     )
+    if lineage is None:
+        return triples
+    # the lineage pass-through sits AFTER the rollup: MapInArrow's output
+    # attributes are new, so between the url repartition and the rollup
+    # it would hide the HashPartitioning(url) the rollup reuses and plan
+    # an extra exchange
+    return triples.mapInArrow(_count_triples(lineage), triples.schema)
 
 
 LINEAGE_SCHEMA = "stage string, partition_id int, rows long, urls long, wall_ms long"
-
-# the fused table's row kinds, by the lineage stage name each reports as
-FUSED_KINDS = {"spans": "span", "mentions": "mention", "citations": "cite"}
-
-
-def _fused_lineage(fused: DataFrame) -> list[tuple[str, int, int, int]]:
-    """(stage, partition_id, rows, urls) of 'fused' and of its three row
-    kinds from ONE groupBy over the cached fused table. A kind's rows
-    are a narrow filter of fused, so their partition ids are fused's;
-    approx_count_distinct skips the NULLs the kind condition leaves, so
-    every count equals ``lineage_rows`` over that filter. A kind absent
-    from a partition gets no row there, as its own groupBy would."""
-    kind, url = F.col("kind"), F.col("url")
-    aggs = [
-        F.count(F.lit(1)).alias("fused_rows"),
-        F.approx_count_distinct(url).alias("fused_urls"),
+# the same columns as Arrow, for the lineage files written on the driver
+LINEAGE_ARROW = pa.schema(
+    [
+        ("stage", pa.string()),
+        ("partition_id", pa.int32()),
+        ("rows", pa.int64()),
+        ("urls", pa.int64()),
+        ("wall_ms", pa.int64()),
     ]
-    for name, k in FUSED_KINDS.items():
-        aggs += [
-            F.count(F.when(kind == k, 1)).alias(f"{name}_rows"),
-            F.approx_count_distinct(F.when(kind == k, url)).alias(f"{name}_urls"),
-        ]
-    parts = fused.groupBy(F.spark_partition_id().alias("_pid")).agg(*aggs).collect()
+)
+
+# the order of one batch's lineage rows: the fused table, its row kinds
+# (the lineage stage names of extract.FUSED_KINDS), the triples
+LINEAGE_STAGES = ("fused", *FUSED_KINDS, "triples")
+
+
+class _LatestReport(AccumulatorParam):
+    """Merge of the lineage accumulator's (stage, partition_id) ->
+    (rows, urls, wall_ms) dict: a key's new report REPLACES the old one.
+    Spark may apply one partition's update more than once (a retried
+    task, a recomputed stage, a plan run twice); every run of a
+    partition reports the same counts, so overwriting is idempotent
+    where adding would double-count."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, value: dict, update: dict) -> dict:
+        value.update(update)
+        return value
+
+
+def lineage_accumulator(spark: SparkSession) -> Accumulator:
+    """A fresh lineage accumulator for one build: hand it to
+    ``build_kg(lineage=)``, run the build's action, then turn its value
+    into rows with ``stage_lineage``."""
+    return spark.sparkContext.accumulator({}, _LatestReport())
+
+
+def _count_triples(lineage: Accumulator):
+    """The ``mapInArrow`` pass-through that reports each triples
+    partition's row count and exact distinct urls to ``lineage``."""
+
+    def count(batches: Iterator) -> Iterator:
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
+
+        rows, urls = 0, set()
+        for batch in batches:
+            rows += batch.num_rows
+            urls.update(pc.unique(batch.column("url")).to_pylist())
+            yield batch
+        if rows:
+            pid = TaskContext.get().partitionId()
+            lineage.add({("triples", pid): (rows, len(urls), 0)})
+
+    return count
+
+
+def stage_lineage(
+    counts: dict, triples_wall_ms: int
+) -> list[tuple[str, int, int, int, int]]:
+    """The lineage accumulator's value as ``LINEAGE_SCHEMA`` rows
+    (stage, partition_id, rows, urls, wall_ms), in ``LINEAGE_STAGES``
+    order, partitions ascending. Every count is exact.
+
+    The extraction kernel reports the fused table and its three row
+    kinds per extraction task: partition_id is that task's partition,
+    and the fused row's wall_ms is the kernel's wall in the task (the
+    kinds ride the same pass and record 0). The triples pass-through
+    reports per triples partition, the partition of the committed
+    ``part-<pid>`` file; those rows carry ``triples_wall_ms``, the wall
+    of the action that builds and writes the batch. A partition with no
+    rows of a stage has no row for it. The rows are tiny (#stages x
+    #partitions), so they stay a driver-side list."""
+    order = {stage: i for i, stage in enumerate(LINEAGE_STAGES)}
     return [
-        (name, r["_pid"], r[f"{name}_rows"], r[f"{name}_urls"])
-        for name in ("fused", *FUSED_KINDS)
-        for r in parts
-        if r[f"{name}_rows"]
-    ]
-
-
-def stage_lineage(stages: dict[str, DataFrame]) -> list[tuple[str, int, int, int, int]]:
-    """Per-partition lineage for every exposed stage, with a per-stage
-    wall-ms measured around that stage's lineage action: the
-    ``LINEAGE_SCHEMA`` rows (stage, partition_id, rows, urls, wall_ms).
-
-    Attribution note: stages is insertion-ordered with the cached fused
-    table FIRST, so its wall-ms carries the extraction cost. The spans,
-    mentions and citations counts ride the fused stage's single pass,
-    so those three derived stages record wall_ms 0; every other stage
-    (triples) runs its own action over the warm cache and measures only
-    that work. The rows are tiny (#stages x #partitions), so they stay
-    a driver-side list that the store writes without another Spark job;
-    the walls come from a monotonic clock, so none is negative."""
-    rows = []
-    for name, df in stages.items():
-        t0 = time.perf_counter()
-        if name == "fused":
-            part = _fused_lineage(df)
-        else:
-            part = [
-                (name, r.partition_id, r.rows, r.urls)
-                for r in lineage_rows(df, name).collect()
-            ]
-        wall = int((time.perf_counter() - t0) * 1000)
-        rows.extend(
-            (stage, pid, n, urls, wall if stage == name else 0)
-            for stage, pid, n, urls in part
+        (stage, pid, rows, urls, triples_wall_ms if stage == "triples" else wall)
+        for (stage, pid), (rows, urls, wall) in sorted(
+            counts.items(), key=lambda kv: (order[kv[0][0]], kv[0][1])
         )
-    return rows
+    ]
